@@ -1,3 +1,10 @@
+"""Compare Verify's Spark dumps against DuckDB running each face's oracle SQL.
+
+    python3 scripts/oracle_check.py SF_DIR VERIFY_OUT_DIR
+
+Prints one line per face, then a one-line count. Exits 1 when any face has
+an ORACLE ERROR, NO SPARK OUTPUT, SCHEMA MISMATCH, ROWCOUNT or HASH MISMATCH.
+"""
 import duckdb, json, sys, glob, hashlib
 import pandas as pd
 
@@ -12,20 +19,27 @@ def canon(df):
     df = df[sorted(df.columns)]
     return df
 
+matches, failures = 0, 0
+
+def fail(msg):
+    global failures
+    failures += 1
+    print(msg)
+
 for name, sql in sorted(oracle.items()):
     try:
         odf = con.sql(sql).df()
     except Exception as e:
-        print(f"{name}: ORACLE ERROR {e}"); continue
+        fail(f"{name}: ORACLE ERROR {e}"); continue
     files = glob.glob(f'{outdir}/{name}/*.parquet')
     if not files:
-        print(f"{name}: NO SPARK OUTPUT"); continue
+        fail(f"{name}: NO SPARK OUTPUT"); continue
     sdf = pd.concat([pd.read_parquet(f) for f in files])
     odf, sdf = canon(odf), canon(sdf)
     if list(odf.columns) != list(sdf.columns):
-        print(f"{name}: SCHEMA MISMATCH oracle={list(odf.columns)} spark={list(sdf.columns)}"); continue
+        fail(f"{name}: SCHEMA MISMATCH oracle={list(odf.columns)} spark={list(sdf.columns)}"); continue
     if len(odf) != len(sdf):
-        print(f"{name}: ROWCOUNT {len(odf)} vs {len(sdf)}"); continue
+        fail(f"{name}: ROWCOUNT {len(odf)} vs {len(sdf)}"); continue
     # sort rows for comparison, hash values as strings
     so = odf.astype(str).sort_values(by=list(odf.columns)).reset_index(drop=True)
     ss = sdf.astype(str).sort_values(by=list(sdf.columns)).reset_index(drop=True)
@@ -35,8 +49,12 @@ for name, sql in sorted(oracle.items()):
     dt_o = [str(t) for t in odf.dtypes]; dt_s = [str(t) for t in sdf.dtypes]
     tm = "types_ok" if dt_o == dt_s else f"TYPES {dt_o} vs {dt_s}"
     if ho == hs:
+        matches += 1
         print(f"{name}: MATCH rows={len(odf)} {tm}")
     else:
-        print(f"{name}: HASH MISMATCH rows={len(odf)} {tm}")
+        fail(f"{name}: HASH MISMATCH rows={len(odf)} {tm}")
         diff = (so != ss).any(axis=1)
         print(so[diff].head(3)); print(ss[diff].head(3))
+
+print(f"oracle_check: {matches} match, {failures} fail, {len(oracle)} faces")
+sys.exit(1 if failures else 0)

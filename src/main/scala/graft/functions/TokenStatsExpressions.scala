@@ -75,22 +75,32 @@ object TokenStats {
     * the oracle's `list_transform(range(...), i -> h60(t[i] || ' ' ||
     * ...))`. One pass per row riding the scan — the relational build
     * pays a posexplode + window sort (a full exchange of the token
-    * stream) per side just to line up the leads. Empty for n < k. */
+    * stream) per side just to line up the leads. Empty for n < k.
+    * A null token still takes its position but is skipped in the
+    * join, exactly as `concat_ws` skips null arguments. */
   def gramH60(a: ArrayData, k: Int): ArrayData = {
     val n = a.numElements()
     if (n < k) return emptyLongs
     val toks = new Array[Array[Byte]](n)
     var i = 0
-    while (i < n) { toks(i) = a.getUTF8String(i).getBytes; i += 1 }
+    while (i < n) {
+      if (!a.isNullAt(i)) toks(i) = a.getUTF8String(i).getBytes
+      i += 1
+    }
     val md = java.security.MessageDigest.getInstance("MD5")
     val out = new Array[Long](n - k + 1)
     i = 0
     while (i <= n - k) {
       md.reset()
+      var joined = false
       var j = 0
       while (j < k) {
-        if (j > 0) md.update(' '.toByte)
-        md.update(toks(i + j))
+        val t = toks(i + j)
+        if (t != null) {
+          if (joined) md.update(' '.toByte)
+          md.update(t)
+          joined = true
+        }
         j += 1
       }
       val dg = md.digest()
@@ -125,6 +135,24 @@ object TokenStats {
     }
     new GenericArrayData(out)
   }
+}
+
+/** Type check of a (array, positive int literal) kernel: `left` must
+  * match `arg`, and `right` must be a foldable int that is > 0. */
+private[functions] object KernelArgs {
+  def check(e: BinaryExpression, arg: ArrayType => Boolean,
+      argSql: String): TypeCheckResult =
+    (e.left.dataType, e.right.dataType) match {
+      case (a: ArrayType, IntegerType) if arg(a) && e.right.foldable =>
+        e.right.eval() match {
+          case v: Int if v > 0 => TypeCheckResult.TypeCheckSuccess
+          case v => TypeCheckResult.TypeCheckFailure(
+            s"${e.prettyName} expects a positive int literal, got $v")
+        }
+      case _ => TypeCheckResult.TypeCheckFailure(
+        s"${e.prettyName} expects ($argSql, int literal), got " +
+          s"(${e.left.dataType.sql}, ${e.right.dataType.sql})")
+    }
 }
 
 private[functions] trait TokenArrayInput { self: UnaryExpression =>
@@ -164,17 +192,12 @@ case class DupBigramCount(child: Expression)
 }
 
 /** `graft_gram_h60(array<string>, k) -> array<bigint>` — see
-  * [[TokenStats.gramH60]]; k must be a foldable positive int. */
+  * [[TokenStats.gramH60]]; k must be a foldable positive int, and
+  * null tokens are skipped as `concat_ws` skips them. */
 case class GramHash60(left: Expression, right: Expression)
     extends BinaryExpression {
   override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(StringType, _), IntegerType) if right.foldable =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects (array<string>, int literal), got " +
-          s"(${left.dataType.sql}, ${right.dataType.sql})")
-    }
+    KernelArgs.check(this, _.elementType == StringType, "array<string>")
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override protected def nullSafeEval(a: Any, k: Any): Any =
     TokenStats.gramH60(a.asInstanceOf[ArrayData], k.asInstanceOf[Int])
@@ -191,13 +214,8 @@ case class GramHash60(left: Expression, right: Expression)
 case class WindowMin(left: Expression, right: Expression)
     extends BinaryExpression {
   override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, false), IntegerType) if right.foldable =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects (array<bigint>, int literal), got " +
-          s"(${left.dataType.sql}, ${right.dataType.sql})")
-    }
+    KernelArgs.check(this, _ == ArrayType(LongType, containsNull = false),
+      "array<bigint> without nulls")
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override protected def nullSafeEval(a: Any, w: Any): Any =
     TokenStats.winMin(a.asInstanceOf[ArrayData], w.asInstanceOf[Int])

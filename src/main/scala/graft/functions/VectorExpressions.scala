@@ -432,6 +432,11 @@ object VectorExpressions {
         WindowMin(children(0), children(1)): Expression,
       "internal")
     spark.sessionState.functionRegistry.registerFunction(
+      FunctionIdentifier("graft_bfs_hops"),
+      (children: Seq[Expression]) =>
+        BfsHops(children(0), children(1), children(2), children(3)): Expression,
+      "internal")
+    spark.sessionState.functionRegistry.registerFunction(
       FunctionIdentifier("graft_cell_nearest"),
       (children: Seq[Expression]) => {
         val id = CentroidModels.litId(children(1))
@@ -509,6 +514,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction((FunctionIdentifier("graft_win_min"),
       new ExpressionInfo(classOf[WindowMin].getCanonicalName, "graft_win_min"),
       (children: Seq[Expression]) => WindowMin(children(0), children(1))))
+    ext.injectFunction((FunctionIdentifier("graft_bfs_hops"),
+      new ExpressionInfo(classOf[BfsHops].getCanonicalName, "graft_bfs_hops"),
+      (children: Seq[Expression]) =>
+        BfsHops(children(0), children(1), children(2), children(3))))
     ext.injectFunction((FunctionIdentifier("graft_cell_nearest"),
       new ExpressionInfo(classOf[NearestCentroid].getCanonicalName, "graft_cell_nearest"),
       (children: Seq[Expression]) => {

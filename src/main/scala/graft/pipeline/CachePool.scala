@@ -21,10 +21,20 @@ import org.apache.spark.sql.execution.columnar.InMemoryRelation
   * same queries repeatedly and must not grow the pool), and the
   * two-phase rank pattern's scaffold cache has its own shorter
   * lifecycle — see [[cachedPair]].
+  *
+  * Relations with a natural key — a (name, dataset) pair, like the
+  * memo entries below — are pooled through the keyed overload
+  * `cached(key)(build)`: the first call builds, caches and registers
+  * the relation and keeps its handle under the key; every later call
+  * returns that handle without building anything. Both [[release]]
+  * and [[releaseCaches]] drop the keyed handles together with their
+  * caches, so the first call after a release builds and caches again.
   */
 object CachePool {
   private val pool = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
   private val seen = scala.collection.mutable.HashSet.empty[LogicalPlan]
+  // handles of the keyed overload of [[cached]], each also in `pool`
+  private val keyed = scala.collection.mutable.HashMap.empty[Any, DataFrame]
   // (scaffold, derived) pairs from [[cachedPair]]: the scaffold is
   // unpersisted as soon as the derived cache is observed materialized
   private val pairs =
@@ -39,6 +49,17 @@ object CachePool {
     val c = df.cache()
     if (seen.add(c.queryExecution.analyzed.canonicalized)) pool += c
     c
+  }
+
+  /** Keyed [[cached]]: the handle pooled under `key`, building and
+    * caching it on first touch. A hit skips `build` altogether, so a
+    * steady caller pays neither the analysis of the nested plan it
+    * would construct nor the CacheManager lookup of `df.cache()`.
+    * `key` must identify the relation `build` makes, e.g.
+    * `("embDouble", sfDir)`. */
+  def cached(key: Any)(build: => DataFrame): DataFrame = synchronized {
+    reapPairs()
+    keyed.getOrElseUpdate(key, cached(build))
   }
 
   /** The GlobalRank double-cache with the scaffold's shorter
@@ -97,6 +118,7 @@ object CachePool {
     pool.foreach(_.unpersist(false))
     pool.clear()
     seen.clear()
+    keyed.clear()
   }
 
   /** Unpersist every registered relation (non-blocking) and forget it,

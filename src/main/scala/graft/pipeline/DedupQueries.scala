@@ -166,12 +166,16 @@ FROM dup GROUP BY md5(text) ORDER BY keeper_doc_id"""
     * pipeline). CacheManager dedupes by canonical plan, so every
     * consumer — including ones composing this via [[jaccardVerify]] —
     * reads one in-memory copy; lifecycle ends at the corpus boundary
-    * ([[CachePool.release]]), exactly like the shingle cache. */
+    * ([[CachePool.release]]), exactly like the shingle cache. Keyed
+    * by dataset: a steady call returns the pooled handle and never
+    * re-builds (and re-analyses) the corpus → shingles → candidates →
+    * pairs chain. */
   private[graft] def minhashPairs(s: SparkSession, d: String): DataFrame = {
     VectorExpressions.register(s)
-    val sh = shingleRows(DupCorpus.corpus(s, d))
-    CachePool.cached(
-      jaccardVerify(minhashCandidates(s, d), shingleSketches(sh), 0.4))
+    CachePool.cached(("minhashPairs", d)) {
+      val sh = shingleRows(DupCorpus.corpus(s, d))
+      jaccardVerify(minhashCandidates(s, d), shingleSketches(sh), 0.4)
+    }
   }
   private val minhash: Q = (s, d) =>
     minhashPairs(s, d).orderBy("doc_a", "doc_b")
@@ -571,11 +575,11 @@ $clusterSql
 ) GROUP BY cluster_size ORDER BY cluster_size"""
 
   // ------------------------------------------------------------ BFS hops
-  /** BFS-round safety cap: dup-graph components are near-cliques, so
-    * true eccentricity from the canonical node is tiny; the cap bounds
-    * the oracle's recursive CTE (which must not chase cycles forever)
-    * and the Spark loop alike. BfsSpec asserts convergence happens
-    * strictly below it. */
+  /** BFS hop cap: dup-graph components are near-cliques, so true
+    * eccentricity from the canonical node is tiny; the cap bounds the
+    * oracle's recursive CTE (which must not chase cycles forever) and
+    * the kernel alike — both report every node within `BfsMaxHops`
+    * hops. Round8Spec asserts convergence happens strictly below it. */
   val BfsMaxHops = 8
 
   /** Hop distance from each component's canonical doc through near-dup
@@ -587,56 +591,32 @@ $clusterSql
     * re-verify before dropping members (minhash transitive closure is
     * not similarity-transitive).
     *
-    * Spark side: frontier-relaxation BFS seeded at the canonical nodes
-    * ([[connectedComponents]] labels), one equi-join on the
-    * localCheckpointed symmetric edge relation per level + a left_anti
-    * against the settled set; every relation is |dup-graph| scale,
-    * orders of magnitude below the corpus, and the loop runs
-    * eccentricity rounds (≤ [[BfsMaxHops]]). Oracle: recursive CTE with
-    * a hop counter capped at the same bound, min() per node. */
+    * Spark side: ONE plan, no driver loop. Each symmetric edge is
+    * tagged with its component label (the memoized
+    * [[connectedComponents]] labels), the edges are grouped by
+    * component, and the `graft_bfs_hops` kernel walks the component's
+    * src/dst lists from the canonical root inside the task; the
+    * (doc_id, hops) structs are exploded back to rows. Building the
+    * face runs no job once the pair cache and the labels exist.
+    * Scaling trade-off: one component's whole edge list sits in one
+    * task (one `collect_list` row). Components are dup-graph-sized —
+    * near-dup families of a few to a few hundred docs, far smaller
+    * than the corpus — so the per-task state is bounded by the largest
+    * duplicate family, not by corpus size; a single giant component
+    * (a template farm of millions of docs) would need the relational
+    * frontier form instead. Oracle: recursive CTE with a hop counter
+    * capped at the same bound, min() per node. */
   private val bfsHops: Q = (s, d) => {
-    val e = minhashPairs(s, d)
-      .select("doc_a", "doc_b").localCheckpoint()
-    val sym = e.unionAll(
-      e.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .localCheckpoint()
+    val e = minhashPairs(s, d).select("doc_a", "doc_b")
     val labels = ccLabelsMemo("minhash", d)(e)
-    var dist = labels.filter(col("is_canonical"))
-      .select(col("doc_id"), lit(0).as("hops")).localCheckpoint()
-    var frontier = dist
-    var level = 0
-    // Doubled step (round 19; guide §2.4 — job count dominates on
-    // pair-scale relations): each iteration relaxes TWO BFS levels and
-    // checkpoints their union once, halving the materialization-job
-    // count of the loop. Layering stays exact: level L+2 expands only
-    // the just-found L+1 frontier and anti-joins both the settled set
-    // and that frontier, so every node still gets its true minimum hop
-    // count. dist remains a union of ALREADY-checkpointed layers
-    // (≤ BfsMaxHops of them — constant-depth lineage, round 18).
-    while (level < BfsMaxHops && !frontier.isEmpty) {
-      val n1 = frontier.join(sym, frontier("doc_id") === sym("doc_a"))
-        .select(sym("doc_b").as("doc_id"))
-        .distinct()
-        .join(dist, Seq("doc_id"), "left_anti")
-        .withColumn("hops", lit(level + 1))
-      // fresh column names for the second hop: n1 already embeds sym,
-      // so re-joining sym by attribute would be an ambiguous self-join
-      val sym2 = sym.select(col("doc_a").as("a2"), col("doc_b").as("b2"))
-      val n2 = n1.select(col("doc_id").as("f1"))
-        .join(sym2, col("f1") === col("a2"))
-        .select(col("b2").as("doc_id"))
-        .distinct()
-        .join(dist.select("doc_id").unionAll(n1.select("doc_id")),
-          Seq("doc_id"), "left_anti")
-        .withColumn("hops", lit(level + 2))
-      val next = n1.unionAll(n2).localCheckpoint()
-      dist = dist.unionAll(next)
-      // only the deepest just-settled layer can still reach new nodes
-      frontier = next.filter(col("hops") === level + 2)
-      level += 2
-    }
-    labels.select("doc_id", "cluster_id").join(dist, "doc_id")
-      .select(col("doc_id"), col("cluster_id"), col("hops").cast("int").as("hops"))
+      .select(col("doc_id").as("doc_a"), col("cluster_id"))
+    e.unionAll(e.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
+      .join(labels, "doc_a")
+      .groupBy("cluster_id")
+      .agg(collect_list("doc_a").as("src"), collect_list("doc_b").as("dst"))
+      .select(col("cluster_id"), explode(call_function("graft_bfs_hops",
+        col("cluster_id"), col("src"), col("dst"), lit(BfsMaxHops))).as("b"))
+      .select(col("b.doc_id"), col("cluster_id"), col("b.hops"))
       .orderBy("doc_id")
   }
   private val bfsHopsSql =

@@ -38,12 +38,14 @@ object SimilarityQueries {
     * the search vector arms read — pooled: one parquet scan + cast per
     * corpus per session instead of one per face invocation (~40 faces
     * re-ran it). MB-scale (|corpus| × dim doubles), the same lifecycle
-    * as the pooled dedup shingle/pair relations. */
-  private[pipeline] def embDouble(s: SparkSession, d: String): DataFrame = {
+    * as the pooled dedup shingle/pair relations. Keyed by dataset: a
+    * steady call returns the pooled handle without building a plan. */
+  private[graft] def embDouble(s: SparkSession, d: String): DataFrame = {
     VectorExpressions.register(s)
-    CachePool.cached(
+    CachePool.cached(("embDouble", d)) {
       Tables.embeddings(s, d).select(col("vec_id"), col("label"),
-        col("embedding").cast("array<double>").as("v")))
+        col("embedding").cast("array<double>").as("v"))
+    }
   }
 
   /** The exact brute-force truth set (query_id, neighbor_id) all seven

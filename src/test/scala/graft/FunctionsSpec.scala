@@ -161,4 +161,48 @@ class FunctionsSpec extends SparkSpec {
         s"win_min mismatch at id=${r.getAs[Int]("id")}")
     }
   }
+
+  test("graft_gram_h60 skips null tokens exactly as concat_ws does") {
+    import org.apache.spark.sql.functions._
+    val rnd = new scala.util.Random(29)
+    import spark.implicits._
+    val words = Vector("alpha", "b", null, "él", "", null)
+    val rows = (Seq(Seq[String](null, null, null), Seq("a", null, "c")) ++
+      Seq.fill(60)(Seq.fill(rnd.nextInt(20))(words(rnd.nextInt(words.size)))))
+      .zipWithIndex.map(_.swap).toDF("id", "a")
+    assert(rows.schema("a").dataType ===
+      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.StringType, true))
+    val k = 3
+    val slow = rows.select(col("id"),
+      when(size(col("a")) < k, array().cast("array<long>")).otherwise(
+        transform(sequence(lit(0), size(col("a")) - k),
+          i => graft.pipeline.DupCorpus.h60(concat_ws(" ",
+            element_at(col("a"), i + 1),
+            element_at(col("a"), i + 2),
+            element_at(col("a"), i + 3)))))
+        .as("slow"))
+    val fast = rows.select(col("id"),
+      call_function("graft_gram_h60", col("a"), lit(k)).as("fast"))
+    val cmp = fast.join(slow, "id").collect()
+    assert(cmp.length === 62)
+    cmp.foreach { r =>
+      assert(r.getSeq[Long](1).toList === r.getSeq[Long](2).toList,
+        s"gram_h60 mismatch at id=${r.getAs[Int]("id")}")
+    }
+  }
+
+  test("graft_gram_h60 / graft_win_min reject a non-positive k/w literal") {
+    import org.apache.spark.sql.functions._
+    val df = spark.range(1).select(array(lit("a"), lit("b")).as("t"),
+      array(lit(1L), lit(2L)).as("h"))
+    assert(df.select(call_function("graft_gram_h60", col("t"), lit(1)),
+      call_function("graft_win_min", col("h"), lit(1))).collect().length === 1)
+    for (bad <- Seq(lit(0), lit(-2), lit(null).cast("int"))) {
+      for (f <- Seq(call_function("graft_gram_h60", col("t"), bad),
+          call_function("graft_win_min", col("h"), bad))) {
+        val err = intercept[org.apache.spark.sql.AnalysisException](df.select(f))
+        assert(err.getMessage.contains("positive int literal"), err.getMessage)
+      }
+    }
+  }
 }
