@@ -3,9 +3,10 @@
     python3 scripts/oracle_check.py SF_DIR VERIFY_OUT_DIR
 
 Prints one line per face, then a one-line count. Exits 1 when any face has
-an ORACLE ERROR, NO SPARK OUTPUT, SCHEMA MISMATCH, ROWCOUNT or HASH MISMATCH.
+an ORACLE ERROR, NO SPARK OUTPUT, NO ORACLE SQL (a dumped face with no
+oracle_sql.json entry), SCHEMA MISMATCH, ROWCOUNT or HASH MISMATCH.
 """
-import duckdb, json, sys, glob, hashlib
+import duckdb, json, os, sys, glob, hashlib
 import pandas as pd
 
 sfdir = sys.argv[1] if len(sys.argv) > 1 else '/root/testdata/sf0.01'
@@ -14,6 +15,7 @@ con = duckdb.connect()
 for t in ['region','nation','customer','supplier','part','orders','lineitem','events','documents','embeddings']:
     con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sfdir}/{t}.parquet'")
 oracle = json.load(open(f'{outdir}/oracle_sql.json'))
+dumped = sorted(d for d in os.listdir(outdir) if os.path.isdir(os.path.join(outdir, d)))
 
 def canon(df):
     df = df[sorted(df.columns)]
@@ -56,5 +58,9 @@ for name, sql in sorted(oracle.items()):
         diff = (so != ss).any(axis=1)
         print(so[diff].head(3)); print(ss[diff].head(3))
 
-print(f"oracle_check: {matches} match, {failures} fail, {len(oracle)} faces")
+for name in dumped:
+    if name not in oracle:
+        fail(f"{name}: NO ORACLE SQL")
+
+print(f"oracle_check: {matches} match, {failures} fail, {len(set(oracle) | set(dumped))} faces")
 sys.exit(1 if failures else 0)

@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
+import org.apache.spark.sql.{DataFrame, GraftDatasetBridge, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 
 /** Loaders for the driver-generated parquet tables (see TESTDATA.md).
   *
@@ -13,42 +17,75 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  // Parquet schema inference launches a footer-read job on EVERY
-  // `spark.read.parquet` call — ~139 construction-time jobs per full
-  // sweep for schemas that never change (testdata files are
-  // immutable). Infer once per path, then read with the explicit
-  // schema: query construction after first touch is fully job-free
-  // (pinned by SurprisalSpec).
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+  /** A table resolved once per session: the analysed relation (file
+    * listing and inferred schema included) and the partition count of
+    * its scan. */
+  private final class Scan(spark: SparkSession, val relation: LogicalRelation) {
+    lazy val partitions: Int =
+      GraftDatasetBridge.ofRows(spark, relation).rdd.getNumPartitions
+  }
+
+  // Per session and path. Parquet schema inference is a footer-read job
+  // and the file listing a file-system walk; testdata files are
+  // immutable, so both are paid once per session and every later call
+  // is job-free and listing-free (pinned by SurprisalSpec and
+  // TablesSpec). The relation holds its session, so a weak key would
+  // never clear: a session's entries are dropped when its SparkContext
+  // stops instead.
+  private val scans =
+    new ConcurrentHashMap[SparkSession, ConcurrentHashMap[String, Scan]]()
+
+  private def resolve(spark: SparkSession, sfDir: String, name: String): Scan =
+    scans.computeIfAbsent(spark, { s =>
+      val sc = s.sparkContext
+      sc.addSparkListener(new SparkListener {
+        override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit =
+          scans.keySet.removeIf(_.sparkContext eq sc)
+      })
+      new ConcurrentHashMap[String, Scan]()
+    }).computeIfAbsent(s"$sfDir/$name.parquet", { path =>
+      val rel = spark.read.parquet(path).queryExecution.analyzed
+      new Scan(spark, rel.asInstanceOf[LogicalRelation])
+    })
+
+  /** Sessions that hold resolved tables (test hook). */
+  private[graft] def sessionsHeld: Int = scans.size
+
+  /** Every call returns a fresh instance of the session's resolved
+    * relation: its new exprIds keep a self-join of two calls
+    * unambiguous, and nothing is listed or planned again. */
+  private def scan(spark: SparkSession, rel: LogicalRelation): DataFrame =
+    GraftDatasetBridge.ofRows(spark, rel.newInstance())
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     // Single-file tables scan as ONE task, and Catalyst evaluates
     // scan-stage projections/filters inside that task — any
     // compute-heavy query over a small table would single-thread its
     // hottest stage (measured: random 30-90 s stalls). An explicit
-    // repartition count restores parallelism for those (AQE may not
-    // undo a numbered repartition) — but ONLY when the scan would
-    // actually under-parallelize: an unconditional repartition of a
-    // multi-file table is a full-input shuffle AND caps scan
-    // parallelism at numShufflePartitions, which at 100 TB is the
-    // dominant cost of every query. getNumPartitions reflects the
-    // file listing + maxPartitionBytes splitting and runs no job.
-    val df = raw(spark, sfDir, name)
+    // repartition count restores parallelism for those — but ONLY when
+    // the scan would actually under-parallelize: an unconditional
+    // repartition of a multi-file table is a full-input shuffle AND
+    // caps scan parallelism at numShufflePartitions, which at 100 TB is
+    // the dominant cost of every query. The guard is always added here;
+    // where its rows reach the next exchange through cheap operators
+    // only, it parallelises nothing and [[graft.plans.PruneScanGuard]]
+    // removes it from the physical plan.
+    val t = resolve(spark, sfDir, name)
+    val df = scan(spark, t.relation)
     val target = spark.sessionState.conf.numShufflePartitions
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
+    if (t.partitions < target) df.repartition(target) else df
   }
 
   /** Raw scan without the parallelism guard — for consumers that
     * immediately impose their own partitioning (the cached corpora
     * repartition by doc_id before materializing; a round-robin exchange
-    * in front of that is a pure waste, observed in the plan audit). */
-  def raw(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val path = s"$sfDir/$name.parquet"
-    val schema = schemaCache.computeIfAbsent(path,
-      p => spark.read.parquet(p).schema)
-    spark.read.schema(schema).parquet(path)
-  }
+    * in front of that is a pure waste, observed in the plan audit).
+    * [[graft.plans.PruneScanGuard]] would keep the guard there, since
+    * the corpora build strings before their exchange, so these callers
+    * choose the raw scan themselves. Also the guard-free reference the
+    * scan-guard tests compare against. */
+  def raw(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    scan(spark, resolve(spark, sfDir, name).relation)
 
   def region(s: SparkSession, d: String): DataFrame     = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = apply(s, d, "nation")

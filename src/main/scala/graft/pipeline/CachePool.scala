@@ -55,8 +55,8 @@ object CachePool {
     * caching it on first touch. A hit skips `build` altogether, so a
     * steady caller pays neither the analysis of the nested plan it
     * would construct nor the CacheManager lookup of `df.cache()`.
-    * `key` must identify the relation `build` makes, e.g.
-    * `("embDouble", sfDir)`. */
+    * `key` must identify the relation `build` makes, settings its plan
+    * pins included, e.g. `("embDouble", sfDir, numShufflePartitions)`. */
   def cached(key: Any)(build: => DataFrame): DataFrame = synchronized {
     reapPairs()
     keyed.getOrElseUpdate(key, cached(build))

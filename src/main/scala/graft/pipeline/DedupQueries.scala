@@ -167,12 +167,13 @@ FROM dup GROUP BY md5(text) ORDER BY keeper_doc_id"""
     * consumer — including ones composing this via [[jaccardVerify]] —
     * reads one in-memory copy; lifecycle ends at the corpus boundary
     * ([[CachePool.release]]), exactly like the shingle cache. Keyed
-    * by dataset: a steady call returns the pooled handle and never
+    * by dataset and shuffle partition count, like the corpus it reads:
+    * a steady call returns the pooled handle and never
     * re-builds (and re-analyses) the corpus → shingles → candidates →
     * pairs chain. */
   private[graft] def minhashPairs(s: SparkSession, d: String): DataFrame = {
     VectorExpressions.register(s)
-    CachePool.cached(("minhashPairs", d)) {
+    CachePool.cached(("minhashPairs", d, s.sessionState.conf.numShufflePartitions)) {
       val sh = shingleRows(DupCorpus.corpus(s, d))
       jaccardVerify(minhashCandidates(s, d), shingleSketches(sh), 0.4)
     }

@@ -36,8 +36,16 @@ object DupCorpus {
     (lit(a) * (h % lit(PermP)) + lit(b)) % lit(PermP)
   }
 
-  /** doc_id, text, lang, source, n_chars — base ∪ exact dups ∪ near dups. */
-  def corpus(spark: SparkSession, sfDir: String): DataFrame = {
+  /** doc_id, text, lang, source, n_chars — base ∪ exact dups ∪ near dups.
+    * A keyed pooled handle: after the first call per dataset and
+    * shuffle partition count (the count the corpus is repartitioned
+    * to), every call returns the same cached DataFrame without
+    * building it. */
+  def corpus(spark: SparkSession, sfDir: String): DataFrame =
+    CachePool.cached(
+      ("dupCorpus", sfDir, spark.sessionState.conf.numShufflePartitions))(build(spark, sfDir))
+
+  private def build(spark: SparkSession, sfDir: String): DataFrame = {
     // raw scan: the repartition(doc_id) below supplies parallelism
     // (see Corpus.requests note)
     val docs = Tables.raw(spark, sfDir, "documents")
@@ -50,13 +58,14 @@ object DupCorpus {
       .withColumn("text", nearText)
       .withColumn("n_chars", length(col("text")).cast("long"))
       .withColumn("doc_id", col("doc_id") + 20000)
-    CachePool.cached(docs.unionAll(exactDup).unionAll(nearDup)
+    docs.unionAll(exactDup).unionAll(nearDup)
       // MB-scale; referenced by every dedup query and several times
       // within one (canonical-plan cache dedupe applies). Repartition
       // so the cached copy keeps full parallelism for the explode-heavy
       // consumers (see DedupQueries.shingleRows note). Lifecycle:
-      // registered with CachePool, released at suite/corpus boundaries.
-      .repartition(spark.sessionState.conf.numShufflePartitions, col("doc_id")))
+      // pooled under ("dupCorpus", sfDir, partitions), released at
+      // suite/corpus boundaries.
+      .repartition(spark.sessionState.conf.numShufflePartitions, col("doc_id"))
   }
 
 }

@@ -38,11 +38,12 @@ object SimilarityQueries {
     * the search vector arms read — pooled: one parquet scan + cast per
     * corpus per session instead of one per face invocation (~40 faces
     * re-ran it). MB-scale (|corpus| × dim doubles), the same lifecycle
-    * as the pooled dedup shingle/pair relations. Keyed by dataset: a
-    * steady call returns the pooled handle without building a plan. */
+    * as the pooled dedup shingle/pair relations. Keyed by dataset and
+    * shuffle partition count (the `Tables` guard's target): a steady
+    * call returns the pooled handle without building a plan. */
   private[graft] def embDouble(s: SparkSession, d: String): DataFrame = {
     VectorExpressions.register(s)
-    CachePool.cached(("embDouble", d)) {
+    CachePool.cached(("embDouble", d, s.sessionState.conf.numShufflePartitions)) {
       Tables.embeddings(s, d).select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("v"))
     }
