@@ -196,38 +196,6 @@ def cmd_report(args):
             best[n] = min(w["queries"][n] for w in wins if n in w["queries"])
             unadjudicated.append(n)
 
-    # Canary-normalized adjudication (round 19; the r17 verdict's
-    # option (b)). The clean/dirty gate is binary and razor-edged: a
-    # 0.2 ms canary-floor move can flip a whole window's verdict and
-    # discard its minima (observed r19: w5's quietest samples lowered
-    # the floor 9.1 -> 8.9 ms, turning the baseline window — canary
-    # median exactly at the new threshold — from 54% clean to
-    # CONTAMINATED and manufacturing a 40-flag all-family cohort).
-    # Normalization uses the SAME co-located canary as a continuous
-    # covariate instead: each sample's bracketing canary measures how
-    # much slower than its quiet floor the host was at that instant
-    # (an all-core memory-stream workload — the resource mix a scan
-    # pays), so dt / (canary/floor) estimates the quiet-host time and
-    # a flag means "moved relative to the host's speed that minute".
-    # Approximate by design (per-query contention sensitivity varies),
-    # so it is an ADJUDICATION covariate behind --canary-normalize —
-    # reported times, committed floors and the default gate are
-    # untouched; under the flag nothing is UNADJUDICATED because every
-    # sample carries its own covariate.
-    adj = best
-    if getattr(args, "canary_normalize", False) and canary_floor:
-        adj = {}
-        for n in names:
-            cands = []
-            for w in wins:
-                if n not in w["queries"]:
-                    continue
-                c = (w.get("canary") or {}).get(n)
-                f = max(1.0, c / canary_floor) if c and c > 0 else 1.0
-                cands.append(w["queries"][n] / f)
-            adj[n] = min(cands)
-        unadjudicated = []
-
     # classify BEFORE any update mutates the reference
     pre_queries = dict(ref["queries"])
     movers, expected, new_queries, contaminated = [], [], [], []
@@ -236,14 +204,14 @@ def cmd_report(args):
             new_queries.append(n)
             continue
         r = pre_queries[n]
-        if not moved(adj[n], r):
+        if not moved(best[n], r):
             continue
         if n in unadjudicated:
             contaminated.append((n, r, best[n]))
         elif any(n.startswith(t) or t in n for t in touched):
-            expected.append((n, r, adj[n]))
+            expected.append((n, r, best[n]))
         else:
-            movers.append((n, r, adj[n]))
+            movers.append((n, r, best[n]))
     flags = dict(ref.get("flags", {}))
     pre_flags = {n: list(v) for n, v in flags.items()}
 
@@ -259,10 +227,12 @@ def cmd_report(args):
             flags.setdefault(n, [])
             if args.round not in flags[n]:
                 flags[n].append(args.round)
-        # a query that did NOT move this round clears its streak
+        # a query that did NOT move this round on a clean sample clears
+        # its streak; an unadjudicated one keeps it as it was
         for n in list(flags):
-            if n in ref["queries"] and n in adj and \
-                    not moved(adj[n], ref["queries"][n]):
+            if n in ref["queries"] and n in best and \
+                    n not in unadjudicated and \
+                    not moved(best[n], ref["queries"][n]):
                 del flags[n]
         ref["flags"] = flags
         ref["updated_round"] = args.round
@@ -276,11 +246,6 @@ def cmd_report(args):
 
     print(f"## Bench adjudication — round {args.round}")
     print()
-    if getattr(args, "canary_normalize", False) and canary_floor:
-        print("Mode: CANARY-NORMALIZED — movers evaluated on "
-              "dt / max(1, canary/floor) (quiet-host estimate); "
-              "reference query floors still fold RAW minima.")
-        print()
     if canary_floor is not None:
         print(f"Canary floor {canary_floor*1000:.1f} ms; clean = "
               f"canary <= max(1.5x floor, floor+5ms). "
@@ -326,19 +291,10 @@ def cmd_report(args):
         print("### Contaminated — every sample burst-hit, UNADJUDICATED "
               "(not flagged, not cleared)")
         print()
-        print("| query | ref s | best (dirty) s | delta | quiet est s |")
-        print("|---|---|---|---|---|")
+        print("| query | ref s | best (dirty) s | delta |")
+        print("|---|---|---|---|")
         for n, r, b in sorted(contaminated):
-            # optimistic quiet-host estimate: scale each dirty sample
-            # by its canary's inflation over the committed floor (the
-            # brief's canary normalization) — context for the judge,
-            # never flag evidence
-            ests = [w["queries"][n] * canary_floor / w["canary"][n]
-                    for w in wins
-                    if n in w["queries"] and (w.get("canary") or {}).get(n)]
-            est = f"{min(ests):.3f}" if ests else "-"
-            print(f"| {n} | {r:.3f} | {b:.3f} | +{(b/r-1)*100:.0f}% "
-                  f"| {est} |")
+            print(f"| {n} | {r:.3f} | {b:.3f} | +{(b/r-1)*100:.0f}% |")
         print()
     if expected:
         print("### Movers on TOUCHED queries (expected — new/changed faces)")
@@ -408,17 +364,13 @@ def main():
                     help="comma list of query names/prefixes the round's "
                          "diff touched (their movers are expected)")
     pp.add_argument("--update-ref", action="store_true")
-    pp.add_argument("--canary-normalize", action="store_true",
-                    help="evaluate movers on canary-normalized times "
-                         "(quiet-host estimates) instead of the binary "
-                         "clean/dirty sample gate")
     pp.add_argument("windows", nargs="+")
     pp.set_defaults(fn=cmd_report)
     pv = sub.add_parser("resolve")
     pv.add_argument("--round", type=int, required=True)
     pv.add_argument("--artifact", required=True,
                     help="recorded measurement justifying the resolve "
-                         "(profile_flags/residency/A-B artifact)")
+                         "(profile_flags or A-B artifact)")
     pv.add_argument("names", nargs="*",
                     help="flags to close (default: every active flag "
                          "the artifact covers)")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 
 /** Benchmark main (driver contract): runs every SparkEntry query on
@@ -24,62 +23,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE coalescing with a parallelism floor: unbounded coalescing
-      // collapses byte-small-but-compute-heavy shuffles (hash fan-outs,
-      // candidate joins) to 1 partition and serializes them; with no
-      // coalescing every tiny stage pays 32-task scheduling overhead.
-      // On a real 100 TB input byte sizes are honest and the floor is
-      // irrelevant.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionNum",
-        math.max(4, cpus.toInt / 4).toString)
-      // 30+ distinct query plans overflow the default 100-entry codegen
-      // cache: the timed pass would recompile what the warmup compiled.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // let one-file-per-bucket scans advertise their in-bucket sort
-      // (required by the layout-served as-of face; see BucketedStore)
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      // managed-table home for the bucketed-store queries (kept out of
-      // the repo working dir, which is the default warehouse location)
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse-bench")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // corpora are cached per query and deduped by canonical plan —
-    // CacheManager's "already cached" WARN per query is by design here
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.CacheManager",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = GraftSession.local(GraftSession.cpus, "/tmp/graft-warehouse-bench")
     val qs = SparkEntry.queries.toSeq.sortBy(_._1)
-    // Family-boundary cache lifecycle (VERDICT r11 #5 — suite
-    // residency). MEASURED AND REJECTED as the default (2026-08-15,
-    // both modes full-suite at sf0.1/local[32], same build): releasing
-    // the pooled caches at each family-prefix boundary cost 185.4 s vs
-    // 167.1 s accretion-mode — the warm pass and both sweeps each
-    // rebuild every family's corpus caches, and at this heap (128 GiB
-    // vs MB-scale sf0.1 working sets) reuse beats the memory-pressure
-    // saving everywhere (worst deltas: the GlobalRank-cached rank
-    // faces, +0.7-1.1 s each). The residency hypothesis for the
-    // r10→r11 common-query drift is thereby refuted: accretion-mode
-    // commons came back to 0.996× of r10's sum (canary
-    // text_collocations 0.726 s vs r10's 0.792 s) with 18 MORE queries
-    // resident — the r11 drift was host contention, not cache
-    // accretion. The lifecycle stays available (CachePool.releaseCaches
-    // at family boundaries) for genuinely memory-constrained suites:
-    // set SPARK_GRAFT_FAMILY_RELEASE=1.
-    val familyRelease = sys.env.getOrElse("SPARK_GRAFT_FAMILY_RELEASE", "0") != "0"
-    def family(n: String): String = n.takeWhile(_ != '_')
-    var prevFamily = ""
-    def boundary(name: String): Unit = if (familyRelease) {
-      if (family(name) != prevFamily) graft.pipeline.CachePool.releaseCaches()
-      prevFamily = family(name)
-    }
     // first error per query, in the order they happened
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     def attempt(name: String)(run: => Unit): Boolean =
@@ -88,7 +33,6 @@ object Bench {
         false
       }
     qs.foreach { case (name, fn) =>
-      boundary(name)
       val t0 = System.nanoTime()
       attempt(name)(fn(spark, warmDir).count())
       System.err.println(f"[bench-warm] $name ${(System.nanoTime() - t0) / 1e9}%.1fs")
@@ -217,7 +161,6 @@ object Bench {
     for (p <- 1 to 2) {
       var prevCanary = canarySecs()
       for (((name, fn), i) <- qs.zipWithIndex) {
-        boundary(name) // outside the timer: the release is lifecycle, not query cost
         val t0 = System.nanoTime()
         val ok = attempt(name)(fn(spark, sfDir).count())
         val dt = (System.nanoTime() - t0) / 1e9
@@ -269,7 +212,6 @@ object Bench {
           while (remaining.nonEmpty && !burst && System.nanoTime() < deadline) {
             val i = remaining.head; remaining = remaining.tail
             val (name, fn) = qs(i)
-            boundary(name)
             val t0 = System.nanoTime()
             val ok = attempt(name)(fn(spark, sfDir).count())
             val dt = (System.nanoTime() - t0) / 1e9
@@ -342,53 +284,11 @@ object Bench {
       .map { case (k, v) => "\"" + k + "\":" + fmt5(v) }
       .mkString("{", ",", "}")
     println(s"""{"metric":"load_probe","loadavg":$loadJson,"canary":$canaryJson$retryStatsJson,"sf":"$sfDir"}""")
-    // Suite-residency probe (VERDICT r16 #4): re-time the named
-    // queries HERE — end of suite, full pooled/memo/registry/catalog
-    // state resident — with the state counts as covariates. The
-    // committed scripts/residency_probe.py pairs this with the same
-    // queries in a COLD session (graft.Profile, fresh JVM) inside one
-    // load window; the cold-vs-resident delta is then a measurement.
-    // Printed BEFORE the compact total (ADVICE r17): the compact line
-    // must stay the FINAL stdout line or a tail-based parse breaks
-    // whenever the probe env var is set.
-    sys.env.get("SPARK_GRAFT_RESIDENCY_PROBE").filter(_.nonEmpty)
-      .foreach { probe =>
-        val reps =
-          sys.env.getOrElse("SPARK_GRAFT_RESIDENCY_REPS", "5").toInt
-        val qmap = SparkEntry.queries
-        val qobj = probe.split(",").toSeq.filter(qmap.contains).map { n =>
-          val fn = qmap(n)
-          // a rep that throws is left out: it has no time
-          val times = (1 to reps).flatMap { _ =>
-            val t0 = System.nanoTime()
-            try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
-            catch { case NonFatal(_) => None }
-          }
-          "\"" + n + "\":[" + times.map(fmt).mkString(",") + "]"
-        }.mkString("{", ",", "}")
-        println(residencyLine("resident", qobj, spark, sfDir))
-      }
     // Compact duplicate of the headline number as the FINAL stdout line:
     // even a 512-byte tail capture still parses the total.
     val failed = if (errors.isEmpty) "" else s""","failed":${errors.size}"""
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfDir","passes":2,"nqueries":${results.size}$failed}""")
     graft.pipeline.CachePool.release() // suite boundary: drop pinned corpora
     spark.stop()
-  }
-
-  /** One parseable JSON line: per-query rep times plus the session
-    * state counts that distinguish a cold boot from an end-of-suite
-    * JVM. Shared by the resident probe above and [[Profile]]'s cold
-    * mode. */
-  private[graft] def residencyLine(mode: String, qobj: String,
-      spark: SparkSession, sfDir: String): String = {
-    val cov = "{" +
-      s""""cachePool":${graft.pipeline.CachePool.poolSize},""" +
-      s""""memoEntries":${graft.pipeline.CachePool.memoSize},""" +
-      s""""centroidRegistry":${graft.functions.CentroidModels.registrySize},""" +
-      s""""groupedRegistry":${graft.functions.GroupedCentroidModels.registrySize},""" +
-      s""""catalogTables":${spark.catalog.listTables().count()}""" + "}"
-    s"""{"metric":"residency_probe","mode":"$mode","queries":$qobj,""" +
-      s""""covariates":$cov,"sf":"$sfDir"}"""
   }
 }

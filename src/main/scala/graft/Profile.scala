@@ -14,26 +14,7 @@ object Profile {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionNum",
-        math.max(4, cpus.toInt / 4).toString)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // let one-file-per-bucket scans advertise their in-bucket sort
-      // (required by the layout-served as-of face; see BucketedStore)
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse-profile")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.CacheManager",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = GraftSession.local(GraftSession.cpus, "/tmp/graft-warehouse-profile")
     val timed = names.flatMap { name =>
       val fn = SparkEntry.queries(name)
       if (reps == 0) { // explain mode: dump the formatted physical plan
@@ -49,18 +30,31 @@ object Profile {
         dt
       })
     }
-    // machine-readable tail for scripts/profile_flags.py and
-    // scripts/residency_probe.py: this is the COLD-session half of
-    // the residency measurement (fresh JVM, only the probed queries'
-    // state resident), same line shape as Bench's resident probe
+    // machine-readable tail for scripts/profile_flags.py: rep times of
+    // a cold session (fresh JVM, only the probed queries' state
+    // resident) with the session state counts as covariates
     if (timed.nonEmpty) {
       def fmt(v: Double): String =
         String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
       val qobj = timed.map { case (n, ts) =>
         "\"" + n + "\":[" + ts.map(fmt).mkString(",") + "]"
       }.mkString("{", ",", "}")
-      println(Bench.residencyLine("cold", qobj, spark, sfDir))
+      println(residencyLine(qobj, spark, sfDir))
     }
     spark.stop()
+  }
+
+  /** One parseable JSON line: per-query rep times plus the session
+    * state counts that distinguish a cold boot from a long-lived JVM. */
+  private def residencyLine(qobj: String, spark: SparkSession,
+      sfDir: String): String = {
+    val cov = "{" +
+      s""""cachePool":${graft.pipeline.CachePool.poolSize},""" +
+      s""""memoEntries":${graft.pipeline.CachePool.memoSize},""" +
+      s""""centroidRegistry":${graft.functions.CentroidModels.registrySize},""" +
+      s""""groupedRegistry":${graft.functions.GroupedCentroidModels.registrySize},""" +
+      s""""catalogTables":${spark.catalog.listTables().count()}""" + "}"
+    s"""{"metric":"residency_probe","mode":"cold","queries":$qobj,""" +
+      s""""covariates":$cov,"sf":"$sfDir"}"""
   }
 }

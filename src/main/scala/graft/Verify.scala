@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -27,31 +26,7 @@ object Verify {
     // local iteration aid; the driver passes exactly 2 args.
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // same session tuning as Bench (see comments there): parallelism
-      // floor for AQE coalescing + room for 30+ plans' codegen classes
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionNum",
-        math.max(4, cpus.toInt / 4).toString)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // let one-file-per-bucket scans advertise their in-bucket sort
-      // (required by the layout-served as-of face; see BucketedStore)
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      // managed-table home for the bucketed-store queries (kept out of
-      // the repo working dir, which is the default warehouse location)
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse-verify")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // see Bench: plan-deduped caches re-cache by design, silence the WARN
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.CacheManager",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = GraftSession.local(GraftSession.cpus, "/tmp/graft-warehouse-verify")
     new java.io.File(outDir).mkdirs()
     val errors = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }

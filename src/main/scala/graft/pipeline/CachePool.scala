@@ -102,16 +102,16 @@ object CachePool {
   }
 
   /** Unpersist the pooled cached relations but KEEP the memoized
-    * model state — the family-boundary lifecycle for memory-
-    * constrained suites (VERDICT r11 #5): the pool holds the
-    * corpus-scale relations whose accretion pressures unrelated
-    * queries' memory, while memo entries are trained models
+    * model state — a lifecycle for memory-constrained callers: the
+    * pool holds the corpus-scale relations whose accretion pressures
+    * unrelated queries' memory, while memo entries are trained models
     * (centroids, merges, weights, built index-table names) that are
     * expensive to retrain and mostly driver-sized. A memoized value
     * that referenced a pooled cache recomputes lazily — correctness
     * is unaffected, only the cache cost is re-paid on next touch.
-    * NOT the bench default: measured at sf0.1/local[32] the rebuilds
-    * cost +11% wall vs accretion (see Bench.scala's finding). */
+    * Not used by the mains: releasing at every query-family boundary
+    * measured 185.4 s vs 167.1 s for the full suite at sf0.1/local[32]
+    * (the rebuilds cost more than the memory they free). */
   def releaseCaches(): Unit = synchronized {
     pairs.foreach(_._1.unpersist(false))
     pairs.clear()
@@ -148,11 +148,10 @@ object CachePool {
     * [[release]] would needlessly drop every other trained model. */
   def memoDrop(key: Any): Unit = synchronized { memo.remove(key); () }
 
-  /** Diagnostic counts for the suite-residency probe (VERDICT r16
-    * #4): how much pooled/memoized state a long-lived session has
-    * accreted — recorded as covariates next to end-of-suite vs
-    * cold-session timings so residency cost is a measurement, not a
-    * hypothesis. */
+  /** Diagnostic counts: how much pooled/memoized state the session has
+    * accreted. perfbench records them as its `pool.size`/`pool.memo`
+    * metrics and `graft.Profile` prints them as covariates next to its
+    * rep timings; the tests read `poolSize` to check pooling. */
   def poolSize: Int = synchronized { pool.size }
   def memoSize: Int = synchronized { memo.size }
 }

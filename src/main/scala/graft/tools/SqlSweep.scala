@@ -1,8 +1,9 @@
 package graft.tools
 
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 import graft.queries.SqlQueries
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** SQL-face coverage sweep: attempts every registered oracle string
   * through `spark.sql` against the temp-view catalog and classifies it.
@@ -37,10 +38,10 @@ object SqlSweep {
               .map(_.toSeq.map(String.valueOf)).sortBy(_.mkString("|"))
             if (a.sameElements(b)) "MATCH"
             else s"DIFF ${a.length}/${b.length}"
-          } catch { case e: Throwable =>
+          } catch { case NonFatal(e) =>
             s"EXEC_FAIL ${e.getClass.getSimpleName}"
           }
-        } catch { case e: Throwable =>
+        } catch { case NonFatal(e) =>
           val msg = Option(e.getMessage).getOrElse("").linesIterator
             .take(1).mkString.take(90)
           s"ANALYZE_FAIL $msg"
@@ -51,15 +52,8 @@ object SqlSweep {
 
   def main(args: Array[String]): Unit = {
     val d = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val s = SparkSession.builder().master("local[8]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh-sweep").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
+    val s = GraftSession.local(GraftSession.cpus,
+      java.nio.file.Files.createTempDirectory("graft-wh-sweep").toString)
     val res = classify(s, d)
     res.toSeq.sortBy(_._1).foreach { case (n, st) => println(s"$n: $st") }
     val m = res.values.count(_ == "MATCH")

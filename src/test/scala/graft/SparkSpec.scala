@@ -21,21 +21,8 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.ui.enabled", "false")
-      // managed-table home for the bucketed-store tests; keeps
-      // `spark-warehouse` litter out of the repo root
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .appName("graft-tests")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The mains' session ([[GraftSession.local]]) on 4 cores, with a
+    * throwaway managed-table home for the bucketed-store tests. */
+  lazy val session: SparkSession = GraftSession.local(4,
+    java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
 }

@@ -4,7 +4,6 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.metrics.source.HiveCatalogMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, sum}
 
 /** `Tables` resolves each table once per session: later calls return a
@@ -63,9 +62,8 @@ class TablesSpec extends SparkSpec {
 /** Child-JVM half of TablesSpec's stop test. */
 object TablesStopCheck {
   def main(args: Array[String]): Unit = {
-    val s = SparkSession.builder().master("local[1]")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
+    val s = GraftSession.local(1,
+      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
     Tables.lineitem(s, args(0)).count()
     println(s"held before stop: ${Tables.sessionsHeld}")
     s.stop()
