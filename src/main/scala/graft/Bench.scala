@@ -1,8 +1,12 @@
 package graft
 import scala.util.control.NonFatal
 
+import org.apache.spark.sql.GraftDatasetBridge
+
 /** Benchmark main (driver contract): runs every SparkEntry query on
-  * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
+  * SPARK_GRAFT_SF_DIR and prints three JSON lines: the raw total with
+  * per-query seconds, the per-query execution counters, and the compact
+  * total, which is always the last stdout line.
   *
   * Each query is first executed once untimed at sf0.001 to pay the
   * one-time JVM/JIT + whole-stage-codegen compilation cost (measured:
@@ -12,14 +16,10 @@ import scala.util.control.NonFatal
   * is a per-process constant, not a per-byte cost.
   *
   * A query that throws in any run is reported under an `errors` key of
-  * the raw total line (name → first error) and left out of `queries`
-  * and the totals: a failure is never timed as a result.
+  * the raw total line (name → first error) and left out of `queries`,
+  * the counters and the totals: a failure is never timed as a result.
   */
 object Bench {
-  /** Sink for the contention canary's result, so the JIT cannot
-    * dead-code-eliminate the fixed-work loop. */
-  @volatile private var canaryBlackhole: Long = 0L
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = "/root/testdata/sf0.001"
@@ -46,215 +46,23 @@ object Bench {
     // dedup_simhash at 78.6 s vs 2-3 s profiled steady-state on
     // byte-identical code); with interleaved sweeps a window must span
     // the entire suite twice to poison any single query's min.
-    // Contamination instrumentation (VERDICT r17 #1): the host bursts
-    // to load 10-19 every ~10 minutes INSIDE bench windows, and a
-    // window stamped with one record-time loadavg cannot distinguish a
-    // clean sweep from a burst-hit one — so r17 carried 29 all-family
-    // watch flags that were pure environment. Two in-run signals:
-    //  (a) a daemon samples /proc/loadavg every 10 s across the timed
-    //      sweeps (min/mean/max tell the adjudicator whether a burst
-    //      landed mid-window at all);
-    //  (b) an ALL-CORE fixed-work CPU canary timed immediately before
-    //      EVERY per-query measurement: one thread of pure ALU work
-    //      per processor, wall = time to get every core at once. The
-    //      suite is sequential, so nothing of ours competes with the
-    //      canary — its inflation over the cross-window floor measures
-    //      EXTERNAL contention at that instant. All-core, not
-    //      single-thread, deliberately (measured on this host,
-    //      r18_w1): a co-tenant burst to load 19 on 32 cpus leaves 13
-    //      cores free, so a lone canary thread never queues (max
-    //      20 ms vs 15 ms floor) while the 32-thread Spark queries it
-    //      is supposed to vouch for ARE starved — the canary must
-    //      demand what a query demands. The canary co-located with
-    //      the pass that produced each query's min tells the
-    //      adjudicator whether that specific number is trustworthy.
-    val loadSamples = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Double]()
-    val sampler = new Thread(() => {
-      try while (true) {
-        val src = scala.io.Source.fromFile("/proc/loadavg")
-        try loadSamples.add(src.mkString.split(" ")(0).toDouble)
-        finally src.close()
-        Thread.sleep(10000)
-      } catch { case _: InterruptedException => () }
-    })
-    sampler.setDaemon(true); sampler.start()
-    // The canary's work is a MEMORY STREAM, not a register-only ALU
-    // loop (measured r18_w1-w3 in sequence: a pure-LCG canary — all
-    // state in registers, zero memory traffic — stayed within 1.5× of
-    // its floor through co-tenant episodes that inflated scan-heavy
-    // queries 60-120%, because this host's contention is bandwidth/
-    // cache pressure, not CPU-queue depth). One thread per core, each
-    // streaming read+write passes over a private 4 MB buffer (well
-    // past LLC share), wall = time to get every core AND its memory
-    // lane at once — the resource mix a Spark scan actually demands.
-    val canaryThreads = Runtime.getRuntime.availableProcessors
-    val canaryBufs = Array.fill(canaryThreads)(new Array[Long](512 * 1024))
-    def canarySecs(): Double = {
-      val t0 = System.nanoTime()
-      val ts = (0 until canaryThreads).map { t =>
-        val th = new Thread(() => {
-          val buf = canaryBufs(t)
-          var s = 0x9E3779B97F4A7C15L + t
-          var p = 0
-          while (p < 4) { // 4 passes × 4 MB read+write per core
-            var i = 0
-            while (i < buf.length) {
-              s += buf(i); buf(i) = s ^ (s >>> 7); i += 1
-            }
-            p += 1
-          }
-          Bench.canaryBlackhole = s // defeat DCE
-        })
-        th.start(); th
-      }
-      ts.foreach(_.join())
-      (System.nanoTime() - t0) / 1e9
-    }
-    // Each measurement is BRACKETED by canaries (the after-canary of
-    // query i doubles as the before-canary of query i+1 — one extra
-    // canary per pass, not two per query) and carries the PAIR MAX: a
-    // burst arriving mid-query is invisible to a single leading probe
-    // (measured r18_w1: broad +30-100% movers whose leading canary was
-    // clean) but lands on the trailing one for anything shorter than
-    // the burst itself.
-    // Clean-retry mode (round 18). The window-level contamination gate
-    // is honest but starved: the host bursts every ~10 min, a 2-pass
-    // sweep takes ~25 min wall, so every r18 window self-identified
-    // CONTAMINATED (median canary 1.6-2.3x the committed floor) and the
-    // adjudicator correctly refused to adjudicate — flags neither
-    // cleared nor confirmed. The fix is better SAMPLING, not looser
-    // policy: with SPARK_GRAFT_CLEAN_RETRY=<wall-budget-seconds> set,
-    // after the two standard sweeps every query whose best sample was
-    // burst-bracketed is re-measured inside quiet gaps (probe the
-    // canary; sleep while dirty; when quiet, burn through the dirty
-    // list until the trailing canary goes dirty again), and the
-    // reported number PREFERS the query's best CLEAN-bracketed sample
-    // over a faster-but-dirty one. Every kept number then genuinely ran
-    // on a quiet host, the recorded canary map reflects the kept
-    // samples, and the adjudicator's existing median gate passes on its
-    // own terms — no adjudicator change, no threshold loosening. The
-    // clean threshold is the adjudicator's own: canary <= max(1.5x
-    // floor, floor+5ms) against the COMMITTED cross-round floor
-    // (SPARK_GRAFT_CANARY_FLOOR, else bench/reference.json, else this
-    // run's own canary min). Default OFF: the driver's unattended runs
-    // are byte-identical to the pre-retry behavior.
-    val retryBudget = sys.env.getOrElse("SPARK_GRAFT_CLEAN_RETRY", "0").toInt
-    val floorOpt: Option[Double] =
-      sys.env.get("SPARK_GRAFT_CANARY_FLOOR").map(_.toDouble)
-        .orElse {
-          val f = new java.io.File("bench/reference.json")
-          if (f.exists) {
-            val src = scala.io.Source.fromFile(f)
-            val txt = try src.mkString finally src.close()
-            "\"canary_floor\":\\s*([0-9.eE+-]+)".r
-              .findFirstMatchIn(txt).map(_.group(1).toDouble)
-          } else None
-        }
-    val cleanMode = retryBudget > 0 && floorOpt.isDefined
-    def cleanThr: Double = {
-      val fl = floorOpt.get; math.max(fl * 1.5, fl + 0.005)
-    }
+    // Each timed run is tagged with the job group `bench|<pass>|<face>`
+    // (warm-up runs are not), so `counters` charges its jobs to the face.
+    val sc = spark.sparkContext
+    val counters = new QueryCounters
+    sc.addSparkListener(counters)
     val mins = Array.fill(qs.size)(Double.MaxValue)
-    val canaryAtMin = Array.fill(qs.size)(0.0)
-    val cleanMins = Array.fill(qs.size)(Double.MaxValue)
-    val cleanCanary = Array.fill(qs.size)(0.0)
-    for (p <- 1 to 2) {
-      var prevCanary = canarySecs()
-      for (((name, fn), i) <- qs.zipWithIndex) {
-        val t0 = System.nanoTime()
-        val ok = attempt(name)(fn(spark, sfDir).count())
-        val dt = (System.nanoTime() - t0) / 1e9
-        val after = canarySecs()
-        System.err.println(f"[bench sweep$p] $name $dt%.1fs")
-        val pair = math.max(prevCanary, after)
-        if (ok && dt < mins(i)) {
-          mins(i) = dt
-          canaryAtMin(i) = pair
-        }
-        if (ok && cleanMode && pair <= cleanThr && dt < cleanMins(i)) {
-          cleanMins(i) = dt
-          cleanCanary(i) = pair
-        }
-        prevCanary = after
-      }
-    }
-    var retryStatsJson = ""
-    if (cleanMode) {
-      val thr = cleanThr
-      val deadline = System.nanoTime() + retryBudget * 1000000000L
-      // Two ways a query needs a quiet-gap re-measure (round 18): it
-      // never got a clean bracket at all, OR its only clean sample is
-      // far slower than a dirty one it also produced — the memoized-
-      // build faces hit this when the build rep (sweep 1, first touch
-      // per dataset) lands in a quiet moment and the cheap memo-served
-      // rep lands in a burst: "prefer clean" would then report the
-      // 30 s build as the query's number (measured r18opt_w2:
-      // ann_ivfpq_recluster_cycle kept a clean 33.9 s build rep over a
-      // dirty 1.1 s steady rep). Re-measuring in a quiet gap gets a
-      // clean STEADY sample; the preference policy itself is unchanged.
-      var dirty = qs.indices.filter(i => !errors.contains(qs(i)._1) && (
-        cleanMins(i) == Double.MaxValue ||
-          cleanMins(i) > mins(i) * 1.5 + 0.05)).toList
-      val dirtyAfterSweeps = dirty.size
-      var waitedS = 0
-      System.err.println(
-        f"[bench retry] $dirtyAfterSweeps queries lack a clean sample; " +
-          f"budget ${retryBudget}s, threshold ${thr * 1000}%.1f ms")
-      while (dirty.nonEmpty && System.nanoTime() < deadline) {
-        var c = canarySecs()
-        if (c > thr) { Thread.sleep(5000); waitedS += 5 }
-        else {
-          // the host is quiet NOW: re-measure until a trailing canary
-          // reports the next burst, then go back to waiting
-          var remaining = dirty
-          var stillDirty = List.empty[Int]
-          var burst = false
-          while (remaining.nonEmpty && !burst && System.nanoTime() < deadline) {
-            val i = remaining.head; remaining = remaining.tail
-            val (name, fn) = qs(i)
-            val t0 = System.nanoTime()
-            val ok = attempt(name)(fn(spark, sfDir).count())
-            val dt = (System.nanoTime() - t0) / 1e9
-            val after = canarySecs()
-            val pair = math.max(c, after)
-            if (ok && dt < mins(i)) { mins(i) = dt; canaryAtMin(i) = pair }
-            if (!ok) System.err.println(s"[bench retry] $name failed")
-            else if (pair <= thr) {
-              if (dt < cleanMins(i)) { cleanMins(i) = dt; cleanCanary(i) = pair }
-              System.err.println(f"[bench retry] $name $dt%.1fs clean")
-            } else {
-              stillDirty ::= i
-              burst = after > thr
-              System.err.println(
-                f"[bench retry] $name $dt%.1fs dirty (canary ${pair * 1000}%.1f ms)")
-            }
-            c = after
-          }
-          dirty = stillDirty.reverse ++ remaining
-        }
-      }
-      val recovered = dirtyAfterSweeps - dirty.size
-      System.err.println(
-        s"[bench retry] recovered $recovered/$dirtyAfterSweeps, " +
-          s"still dirty ${dirty.size}, waited ${waitedS}s")
-      retryStatsJson =
-        s""","retry":{"budget_s":$retryBudget,"dirty_after_sweeps":$dirtyAfterSweeps,""" +
-          s""""recovered":$recovered,"still_dirty":${dirty.size},"waited_s":$waitedS}"""
-    }
-    sampler.interrupt()
-    // In clean mode each query reports its best CLEAN sample when one
-    // exists (even if a burst-bracketed sample was numerically smaller:
-    // trustworthy beats lucky); queries that never got a clean bracket
-    // fall back to the dirty min, and their dirty canary marks them
-    // UNADJUDICATED downstream exactly as before.
-    val outMins = Array.tabulate(qs.size) { i =>
-      if (cleanMode && cleanMins(i) != Double.MaxValue) cleanMins(i) else mins(i)
-    }
-    val outCanary = Array.tabulate(qs.size) { i =>
-      if (cleanMode && cleanMins(i) != Double.MaxValue) cleanCanary(i) else canaryAtMin(i)
+    for (p <- 1 to 2; ((name, fn), i) <- qs.zipWithIndex) {
+      sc.setJobGroup(s"bench|$p|$name", name)
+      val t0 = System.nanoTime()
+      val ok = attempt(name)(fn(spark, sfDir).count())
+      val dt = (System.nanoTime() - t0) / 1e9
+      sc.clearJobGroup()
+      System.err.println(f"[bench sweep$p] $name $dt%.1fs")
+      if (ok) mins(i) = math.min(mins(i), dt)
     }
     val kept = qs.indices.filterNot(i => errors.contains(qs(i)._1))
-    val results = kept.map(i => qs(i)._1 -> outMins(i))
+    val results = kept.map(i => qs(i)._1 -> mins(i))
     // 3-decimal rounding halves the per-query line (~96 queries × full-
     // precision doubles overflowed the driver's ~2 KB tail window in a
     // prior run and the official total came back unparseable).
@@ -270,20 +78,16 @@ object Bench {
       else errors.map { case (k, v) => s"${Verify.q(k)}:${Verify.q(v)}" }
         .mkString(""","errors":{""", ",", "}")
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qjson$errJson,"sf":"$sfDir","passes":2}""")
-    // The contamination line (parsed by bench_adjudicate.py record):
-    // mid-run loadavg stats + the per-query canary co-located with
-    // each query's min. 5-decimal canary format — the ~12 ms canary
-    // needs sub-ms resolution for the 1.5× clean threshold.
-    def fmt5(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.5f", Double.box(v))
-    val ls = loadSamples.toArray(Array.empty[java.lang.Double]).map(_.doubleValue)
-    val loadJson =
-      if (ls.isEmpty) """{"n":0}"""
-      else s"""{"min":${fmt(ls.min)},"mean":${fmt(ls.sum / ls.length)},"max":${fmt(ls.max)},"n":${ls.length}}"""
-    val canaryJson = kept.map(i => qs(i)._1 -> outCanary(i))
-      .map { case (k, v) => "\"" + k + "\":" + fmt5(v) }
-      .mkString("{", ",", "}")
-    println(s"""{"metric":"load_probe","loadavg":$loadJson,"canary":$canaryJson$retryStatsJson,"sf":"$sfDir"}""")
+    // Steady execution counters per face: the per-counter min over the
+    // two sweeps (sweep 1 pays first-touch pool builds). Host load cannot
+    // move them, so scripts/bench_adjudicate.py gates drift on this line.
+    GraftDatasetBridge.drain(sc)
+    val cjson = kept.map { i =>
+      val name = qs(i)._1
+      val steady = counters(s"bench|1|$name").lazyZip(counters(s"bench|2|$name")).map(math.min)
+      Verify.q(name) + steady.mkString(":[", ",", "]")
+    }.mkString("{", ",", "}")
+    println(s"""{"metric":"counters","cpus":${GraftSession.cpus},"sf":"$sfDir","queries":$cjson}""")
     // Compact duplicate of the headline number as the FINAL stdout line:
     // even a 512-byte tail capture still parses the total.
     val failed = if (errors.isEmpty) "" else s""","failed":${errors.size}"""

@@ -41,6 +41,14 @@ object GraftSession {
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.CacheManager",
       org.apache.logging.log4j.Level.ERROR)
+    // every cache()/persist clones the session (CacheManager turns
+    // autoBucketedScan off on the clone), and each clone re-runs
+    // GraftExtensions' injectFunction calls: the registry WARNs "replaced
+    // a previously registered function" 16 times per cache. FunctionsSpec
+    // pins that the injected names never clash with a built-in.
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry",
+      org.apache.logging.log4j.Level.ERROR)
     spark
   }
 }

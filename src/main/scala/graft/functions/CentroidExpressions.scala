@@ -872,8 +872,6 @@ object GroupedCentroidModels {
       groups: Seq[(Int, Seq[(Int, Seq[Double])])]): Long =
     reg.idFor(s, GroupedCentroidModel.of(groups))
 
-  private[graft] def registrySize: Int = reg.registrySize
-
   private[functions] def bcFor(id: Long): Broadcast[GroupedCentroidModel] =
     reg.bcFor(id)
 

@@ -150,8 +150,7 @@ object CachePool {
 
   /** Diagnostic counts: how much pooled/memoized state the session has
     * accreted. perfbench records them as its `pool.size`/`pool.memo`
-    * metrics and `graft.Profile` prints them as covariates next to its
-    * rep timings; the tests read `poolSize` to check pooling. */
+    * metrics; the tests read `poolSize` to check pooling. */
   def poolSize: Int = synchronized { pool.size }
   def memoSize: Int = synchronized { memo.size }
 }

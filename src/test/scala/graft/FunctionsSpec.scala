@@ -205,4 +205,22 @@ class FunctionsSpec extends SparkSpec {
       }
     }
   }
+
+  // GraftSession silences the registry's "replaced a previously registered
+  // function" WARN (every session clone re-injects); this keeps a real
+  // clash from hiding behind it
+  test("injected function names are distinct, graft_-prefixed and not built-in") {
+    import org.apache.spark.sql.SparkSessionExtensions
+    import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+    val names = scala.collection.mutable.Buffer.empty[String]
+    new graft.functions.GraftExtensions().apply(new SparkSessionExtensions {
+      override def injectFunction(f: FunctionDescription): Unit =
+        names += f._1.funcName
+    })
+    assert(names.size == 16)
+    assert(names.distinct == names, names)
+    assert(names.forall(_.startsWith("graft_")), names)
+    assert(names.forall(n => !FunctionRegistry.builtin.functionExists(
+      org.apache.spark.sql.catalyst.FunctionIdentifier(n))), names)
+  }
 }

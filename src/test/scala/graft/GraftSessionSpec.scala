@@ -34,4 +34,10 @@ class GraftSessionSpec extends SparkSpec {
     assert(LogManager.getLogger("org.apache.spark.sql.execution.CacheManager")
       .getLevel == Level.ERROR)
   }
+
+  test("function re-registration on session clones logs at ERROR only") {
+    assert(LogManager.getLogger(
+      "org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry")
+      .getLevel == Level.ERROR)
+  }
 }
