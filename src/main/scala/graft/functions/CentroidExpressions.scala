@@ -592,20 +592,19 @@ case class NearestInGroup(vec: Expression, gid: Expression, modelId: Long,
   * ‖c‖² for each code the group holds, `Double.MaxValue` for holes
   * (a code that emptied during Lloyd — never referenced, since
   * candidates carry only codes the same books emitted). This is the
-  * streaming serving shape of PER-CELL residual PQ: the batch face
-  * computes these slots as driver-side literals per (query, probed
-  * cell) pair, which cannot be a stream's plan; here the identical
-  * IEEE sequence (sequential left-fold dots, ‖c‖² folded at model
-  * build, the a − 2b + c association) is evaluated per (query row,
-  * probe) as ONE plan node over the one-broadcast family —
+  * ADC serving shape of every PQ tier, batch and streaming
+  * (`SimilarityQueries.adcProbed`; a shared book is the singleton
+  * group 0): the IEEE sequence (sequential left-fold dots, ‖c‖² folded
+  * at model build, the a − 2b + c association) is evaluated per
+  * (query row, probe) as ONE plan node over the one-broadcast family —
   * candidates then cost one `element_at` per subspace, never an
   * O(dim) dot.
   *
   * A gid with NO group yields the inert all-MaxValue table rather
   * than failing: a probe may legitimately select an EMPTY coarse cell
-  * (the quantizer covers cells no corpus vector landed in), and the
-  * batch face simply skips such (query, cell) pairs — no candidate
-  * can exist in an unindexed cell, so the slots are never consumed.
+  * (the quantizer covers cells no corpus vector landed in), and no
+  * candidate can exist in an unindexed cell, so the slots are never
+  * consumed.
   * (Contrast [[NearestInGroup]], where the gid comes from the row's
   * own assignment and a missing group IS a contract violation.) */
 case class GroupAdcTable(vec: Expression, gid: Expression, modelId: Long,
@@ -886,7 +885,7 @@ object GroupedCentroidModels {
   }
 
   /** The nslots-slot ADC table of `v` against group `gid`'s own
-    * codebook — the per-cell residual streaming-serving projection. */
+    * codebook — the ADC serving projection of every PQ tier. */
   def adcTable(s: SparkSession,
       groups: Seq[(Int, Seq[(Int, Seq[Double])])],
       v: Column, gid: Column, nslots: Int): Column = {

@@ -3,7 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.operators.SkewJoin
 import graft.sources.BucketedStore
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Oracle-checked faces of the infra layer: the bucketed storage
@@ -141,21 +141,47 @@ GROUP BY d.tier ORDER BY d.tier"""
 FROM events WHERE event_type = 'click'
 GROUP BY user_id ORDER BY user_id"""
 
-  /** Range-clustered events layout + its file-level min/max stats
-    * index, built once per (app, dataset): `repartitionByRange(ts)`
-    * makes each file hold a contiguous time slice, then ONE pass over
-    * the written files (`input_file_name` groupBy) derives the
-    * Delta-log-style stats table. Returns (dataPath, statsPath). */
+  /** `events` split into n output partitions equi-width over the key
+    * rank(group) + (ts − lo) / (hi − lo + 1), with lo, hi the table's
+    * own ts bounds and rank(group) the row's place among the sorted
+    * distinct `group` values: a range partitioning over (group, ts)
+    * whose bounds come from one stats job, and n equi-width time slices
+    * when `group` is a constant. The file boundaries depend on the data
+    * alone; a sampled range partitioner (`repartitionByRange`) would
+    * draw them from a sample Spark seeds with the RDD id, so they would
+    * move with whatever ran earlier in the JVM. */
+  private def sliced(s: SparkSession, d: String, n: Int,
+      group: Column): DataFrame = {
+    val ev = Tables.events(s, d)
+    val us = unix_micros(col("ts"))
+    val b = ev.agg(min(us), max(us), array_sort(collect_set(group))).head()
+    val (lo, hi, keys) = (b.getLong(0), b.getLong(1), b.getSeq[String](2))
+    val key = array_position(typedLit(keys), group) - 1 +
+      (us - lit(lo)) / lit(hi - lo + 1)
+    ev.repartitionById(n, floor(key * n / keys.size).cast("int"))
+  }
+
+  /** The per-file [ts_min, ts_max] stats table of the layout under
+    * `p/data` (grouped by `keys` too), ONE pass over the written files. */
+  private def writeStats(s: SparkSession, p: String, keys: String*): Unit =
+    s.read.parquet(s"$p/data")
+      .groupBy(input_file_name().as("file") +: keys.map(col): _*)
+      .agg(min("ts").as("ts_min"), max("ts").as("ts_max"))
+      .coalesce(1)
+      .write.mode("overwrite").parquet(s"$p/stats")
+
+  /** Write the range-clustered events layout under `p/data` (16
+    * equi-width time slices, one file each) and its file-level min/max
+    * stats index under `p/stats`, the Delta-log-style table. */
+  def writeMinmaxLayout(s: SparkSession, d: String, p: String): Unit = {
+    sliced(s, d, 16, lit("")).write.mode("overwrite").parquet(s"$p/data")
+    writeStats(s, p)
+  }
+
+  /** [[writeMinmaxLayout]] built once per (app, dataset). Returns
+    * (dataPath, statsPath). */
   def minmaxEventsPaths(s: SparkSession, d: String): (String, String) = {
-    val root = materialize(s, "minmax-events", d) { p =>
-      Tables.events(s, d).repartitionByRange(16, col("ts"))
-        .write.mode("overwrite").parquet(s"$p/data")
-      s.read.parquet(s"$p/data")
-        .groupBy(input_file_name().as("file"))
-        .agg(min("ts").as("ts_min"), max("ts").as("ts_max"))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$p/stats")
-    }
+    val root = materialize(s, "minmax-events", d)(writeMinmaxLayout(s, d, _))
     (s"$root/data", s"$root/stats")
   }
 
@@ -284,20 +310,20 @@ GROUP BY event_type ORDER BY event_type"""
     * partition, with a per-file min/max stats index over the whole
     * store. Partition pruning (directory level, at planning) and file
     * skipping (stats level, before I/O) then compose — the two-level
-    * pruning every Delta/Iceberg table relies on. Built once per
-    * (app, dataset); returns (dataPath, statsPath). */
+    * pruning every Delta/Iceberg table relies on: 8 ranges over
+    * (event_type, ts), each written as one file per event_type
+    * directory it spans. */
+  def writeTwoLevelLayout(s: SparkSession, d: String, p: String): Unit = {
+    sliced(s, d, 8, col("event_type"))
+      .write.mode("overwrite").partitionBy("event_type")
+      .parquet(s"$p/data")
+    writeStats(s, p, "event_type")
+  }
+
+  /** [[writeTwoLevelLayout]] built once per (app, dataset). Returns
+    * (dataPath, statsPath). */
   def twoLevelPaths(s: SparkSession, d: String): (String, String) = {
-    val root = materialize(s, "twolevel-events", d) { p =>
-      Tables.events(s, d)
-        .repartitionByRange(8, col("event_type"), col("ts"))
-        .write.mode("overwrite").partitionBy("event_type")
-        .parquet(s"$p/data")
-      s.read.parquet(s"$p/data")
-        .groupBy(input_file_name().as("file"), col("event_type"))
-        .agg(min("ts").as("ts_min"), max("ts").as("ts_max"))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$p/stats")
-    }
+    val root = materialize(s, "twolevel-events", d)(writeTwoLevelLayout(s, d, _))
     (s"$root/data", s"$root/stats")
   }
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.pipeline.EventQueries
+import graft.pipeline.{EventQueries, SimilarityQueries}
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
@@ -467,17 +467,12 @@ object StreamingEvents {
     * table's probed buckets via ONE stream-static equi-join on cid
     * (bucket-co-located at rest, stateless).
     *
-    * ADC at runtime: the batch face knows its queries and folds each
-    * per-query distance table into literals driver-side; here the
-    * query vector is a COLUMN, so the m per-subspace 16-slot tables
-    * are projected per query row BEFORE the join —
-    * `‖qs‖² − 2·qs·cv + ‖cv‖²` per codebook entry, with `qs·qs` /
-    * `qs·cv` as the same sequential-fold `graft_dot` and `‖cv‖²`
-    * pre-folded on the driver, so every slot is the bit-identical
-    * IEEE sequence of [[graft.pipeline.SimilarityQueries.pqAdc]]'s
-    * literals (an emptied codebook slot stays Double.MaxValue). Each
-    * candidate then costs m `element_at` lookups — never an O(dim)
-    * dot — which is the ADC property carried into the stream. Only
+    * ADC at runtime: the query vector is a COLUMN, so the m
+    * per-subspace 16-slot tables are projected per (query row, probe)
+    * BEFORE the join by [[graft.pipeline.SimilarityQueries.adcProbed]],
+    * the same serving path the batch faces run. Each candidate then
+    * costs m `element_at` lookups — never an O(dim) dot — which is the
+    * ADC property carried into the stream. Only
     * the per-query top-k accumulator is stateful: ≤ k (doc, adc)
     * pairs per open query, emitted once with batch tie-breaks
     * (adc asc, neighbor asc) and `round(adc, 6)` at event-time close.
@@ -486,9 +481,9 @@ object StreamingEvents {
   def annServePqStream(queries: DataFrame,
       s: org.apache.spark.sql.SparkSession, d: String,
       k: Int = 5, delayMs: Long = 7200000L): Dataset[PqHit] = {
-    val sq = graft.pipeline.SimilarityQueries
+    val sq = SimilarityQueries
     val (cents, books) = sq.storedPqModels(s, d)
-    annServePqCore(queries, s, cents, books,
+    annServePqCore(queries, s, cents, sq.AdcTier.shared(books),
       graft.sources.BucketedStore.read(s, sq.ivfPqTable(s, d)), k, delayMs)
   }
 
@@ -504,9 +499,9 @@ object StreamingEvents {
   def annServePqPtrStreamAt(queries: DataFrame,
       s: org.apache.spark.sql.SparkSession, ptrTable: String,
       k: Int = 5, delayMs: Long = 7200000L): Dataset[PqHit] = {
-    val sq = graft.pipeline.SimilarityQueries
+    val sq = SimilarityQueries
     val (cents, books, pqbT, pqdT) = sq.ptrPqModelAt(s, ptrTable)
-    annServePqCore(queries, s, cents, books,
+    annServePqCore(queries, s, cents, sq.AdcTier.shared(books),
       graft.sources.BucketedStore.read(s, pqbT)
         .unionByName(graft.sources.BucketedStore.read(s, pqdT)),
       k, delayMs)
@@ -519,21 +514,20 @@ object StreamingEvents {
     * exactly like the batch `ann_topk_ivfpq_residual_stored`. Same
     * boot discipline as [[annServePqStream]] — coarse quantizer,
     * residual codebooks, and code table are all catalog reads — with
-    * ONE structural difference carried into the plan: the ADC table
-    * keys on the (query, probed cell) pair, so the per-subspace slots
-    * fold over the query RESIDUAL q − c_probe, computed as a COLUMN
-    * (centroid literal-map lookup + codegen'd `graft_sub`) after the
-    * probe explode rather than the batch face's driver-side literal
-    * CASE. Candidates still cost m `element_at` lookups each. */
+    * ONE structural difference: the ADC table keys on the (query,
+    * probed cell) pair, so the per-subspace slots fold over the query
+    * RESIDUAL q − c_probe (`graft_cell_vec` + codegen'd `graft_sub`
+    * after the probe explode). Candidates still cost m `element_at`
+    * lookups each. */
   def annServePqrStream(queries: DataFrame,
       s: org.apache.spark.sql.SparkSession, d: String,
       k: Int = 5, delayMs: Long = 7200000L): Dataset[PqHit] = {
-    val sq = graft.pipeline.SimilarityQueries
+    val sq = SimilarityQueries
     val (cents, _) = sq.storedPqModels(s, d)
     val (booksT, codesT) = sq.pqrTables(s, d)
-    annServePqCore(queries, s, cents, sq.booksFrom(s, booksT),
-      graft.sources.BucketedStore.read(s, codesT), k, delayMs,
-      residual = true)
+    annServePqCore(queries, s, cents,
+      sq.AdcTier.residual(s, cents, sq.booksFrom(s, booksT)),
+      graft.sources.BucketedStore.read(s, codesT), k, delayMs)
   }
 
   /** Streaming residual ADC through the cycled GENERATION POINTER —
@@ -543,12 +537,12 @@ object StreamingEvents {
   def annServePqrPtrStreamAt(queries: DataFrame,
       s: org.apache.spark.sql.SparkSession, ptrTable: String,
       k: Int = 5, delayMs: Long = 7200000L): Dataset[PqHit] = {
-    val sq = graft.pipeline.SimilarityQueries
+    val sq = SimilarityQueries
     val (cents, books, pqrbT, pqrdT) = sq.ptrPqrModelAt(s, ptrTable)
-    annServePqCore(queries, s, cents, books,
+    annServePqCore(queries, s, cents, sq.AdcTier.residual(s, cents, books),
       graft.sources.BucketedStore.read(s, pqrbT)
         .unionByName(graft.sources.BucketedStore.read(s, pqrdT)),
-      k, delayMs, residual = true)
+      k, delayMs)
   }
 
   /** Streaming PER-CELL residual ADC — the serving face of
@@ -565,12 +559,12 @@ object StreamingEvents {
   def annServePqrCellStream(queries: DataFrame,
       s: org.apache.spark.sql.SparkSession, d: String,
       k: Int = 5, delayMs: Long = 7200000L): Dataset[PqHit] = {
-    val sq = graft.pipeline.SimilarityQueries
+    val sq = SimilarityQueries
     val (cents, _) = sq.storedPqModels(s, d)
     val (booksT, codesT) = sq.pqrcTables(s, d)
-    annServePqCore(queries, s, cents, Nil,
-      graft.sources.BucketedStore.read(s, codesT), k, delayMs,
-      residual = true, cellBooks = sq.cellBooksFrom(s, booksT))
+    annServePqCore(queries, s, cents,
+      sq.AdcTier.perCell(s, cents, sq.cellBooksFrom(s, booksT)),
+      graft.sources.BucketedStore.read(s, codesT), k, delayMs)
   }
 
   /** Streaming PER-CELL residual ADC through the cycled GENERATION
@@ -585,77 +579,24 @@ object StreamingEvents {
   def annServePqrcPtrStreamAt(queries: DataFrame,
       s: org.apache.spark.sql.SparkSession, ptrTable: String,
       k: Int = 5, delayMs: Long = 7200000L): Dataset[PqHit] = {
-    val sq = graft.pipeline.SimilarityQueries
-    val (cents, cellBooks, pqrcbT, pqrcdT) = sq.ptrPqrcModelAt(s, ptrTable)
-    annServePqCore(queries, s, cents, Nil,
+    val sq = SimilarityQueries
+    val (cents, groups, pqrcbT, pqrcdT) = sq.ptrPqrcModelAt(s, ptrTable)
+    annServePqCore(queries, s, cents, sq.AdcTier.perCell(s, cents, groups),
       graft.sources.BucketedStore.read(s, pqrcbT)
         .unionByName(graft.sources.BucketedStore.read(s, pqrcdT)),
-      k, delayMs, residual = true, cellBooks = cellBooks)
+      k, delayMs)
   }
 
   private def annServePqCore(queries: DataFrame,
       s: org.apache.spark.sql.SparkSession,
-      cents: Seq[(Int, Seq[Double])],
-      books: Seq[Seq[(Int, Seq[Double])]],
-      codes: DataFrame, k: Int, delayMs: Long,
-      residual: Boolean = false,
-      cellBooks: Seq[Seq[(Int, Seq[(Int, Seq[Double])])]] = null)
-      : Dataset[PqHit] = {
+      cents: Seq[(Int, Seq[Double])], tier: SimilarityQueries.AdcTier,
+      codes: DataFrame, k: Int, delayMs: Long): Dataset[PqHit] = {
     import s.implicits._
-    import graft.pipeline.SimilarityQueries.{PqM, PqW, PqK, foldDot}
-    graft.functions.VectorExpressions.register(s)
-    val sq = graft.pipeline.SimilarityQueries
-    def gdot(a: Column, b: Column) = call_function("graft_dot", a, b)
-    // explode probes FIRST: for residual PQ the ADC table keys on the
-    // (query, probed cell) PAIR — the query-side vector the slots fold
-    // over is the RESIDUAL q − c_probe, so the table is a per
-    // (query row, probe) projection; for shared-codebook PQ the same
-    // post-explode projection computes the identical IEEE sequence it
-    // did pre-explode (nprobe duplicate evaluations of a tiny fold —
-    // model-sized work, not corpus-sized)
     val exploded = queries.withWatermark("ts", s"$delayMs milliseconds")
       .select(col("query_id"), col("ts"), col("qv"),
         explode(graft.functions.CentroidModels.probes(
-          s, cents, col("qv"), sq.KmProbe)).as("probe_cid"))
-    // the query-side vector the ADC slots derive from: raw query for
-    // shared-codebook PQ; the residual against the probed cell's
-    // centroid for residual PQ — the centroid comes from the BROADCAST
-    // model via graft_cell_vec (one plan node and an O(log nlist)
-    // per-row lookup; a literal cid→array map here would be
-    // O(nlist·dim) plan nodes, the exact plan-size failure the
-    // broadcast argmin eliminated) and the subtraction is the
-    // codegen'd graft_sub — bit-identical to the batch face's
-    // driver-side per-dimension subtraction
-    val qb =
-      if (residual)
-        call_function("graft_sub", col("qv"),
-          graft.functions.CentroidModels.cellVec(s, cents, col("probe_cid")))
-      else col("qv")
-    // per-subspace 16-slot ADC table, projected per (query row, probe):
-    // shared-family books inline as bounded literal slots (PqM·PqK·PqW
-    // doubles — codebook-sized, constant in nlist); PER-CELL families
-    // resolve the probed cell's own book from the one-broadcast family
-    // via graft_group_adc (a literal encoding would be O(nlist·PqK·PqW)
-    // plan nodes)
-    val adts = (0 until PqM).map { sub =>
-      val qs = slice(col("qb"), sub * PqW + 1, PqW)
-      if (cellBooks != null)
-        graft.functions.GroupedCentroidModels.adcTable(
-          s, cellBooks(sub), qs, col("probe_cid"), PqK).as(s"adt$sub")
-      else {
-        val bm = books(sub).toMap
-        val slots = (0 until PqK).map(cid => bm.get(cid)
-          .map(cv => gdot(qs, qs) - lit(2.0) * gdot(qs, typedLit(cv)) +
-            lit(foldDot(cv, cv)))
-          .getOrElse(lit(Double.MaxValue)))
-        array(slots: _*).as(s"adt$sub")
-      }
-    }
-    val probed = exploded.withColumn("qb", qb)
-      .select(col("query_id") +: col("ts") +: col("probe_cid") +: adts: _*)
-    val adc = (0 until PqM)
-      .map(sub => element_at(col(s"adt$sub"), col(s"code$sub") + 1))
-      .reduce(_ + _)
+          s, cents, col("qv"), SimilarityQueries.KmProbe)).as("probe_cid"))
+    val (probed, adc) = SimilarityQueries.adcProbed(s, exploded, tier, "ts")
     probed.join(codes,
         col("probe_cid") === col("cid") && col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("ts"), col("vec_id").as("doc_id"),

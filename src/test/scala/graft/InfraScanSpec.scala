@@ -74,6 +74,42 @@ class InfraScanSpec extends SparkSpec {
       cnt(spark.read.parquet(dataPath)))
   }
 
+  test("time-sliced layouts repeat file for file: unrelated jobs in between change no boundary") {
+    // SfMid: there a sampled range partitioner's bounds move with the
+    // RDD id (at Sf they happened to repeat)
+    requireFixture(SfMid)
+    // per file: (event_type directory, ts_min, ts_max, rows), sorted
+    def files(root: String) =
+      spark.read.parquet(s"$root/data")
+        .groupBy(input_file_name().as("file"))
+        .agg(min("ts").as("lo"), max("ts").as("hi"), count(lit(1)).as("n"))
+        .collect().map { r =>
+          val f = r.getString(0)
+          (f.split("/").find(_.startsWith("event_type=")).getOrElse(""),
+            r.getTimestamp(1).getTime, r.getTimestamp(2).getTime, r.getLong(3))
+        }.toSeq.sorted
+    val base = java.nio.file.Files.createTempDirectory("graft-layout").toString
+    val layouts = Seq[(org.apache.spark.sql.SparkSession, String, String) => Unit](
+      InfraQueries.writeMinmaxLayout, InfraQueries.writeTwoLevelLayout)
+    try {
+      layouts.zipWithIndex.foreach { case (write, i) =>
+        write(spark, SfMid, s"$base/a$i")
+        // unrelated jobs move every JVM-wide RDD and shuffle id
+        (1 to 3).foreach(k =>
+          spark.range(0, 5000, 1, 3 + k).repartition(k + 1).count())
+        write(spark, SfMid, s"$base/b$i")
+        val (a, b) = (files(s"$base/a$i"), files(s"$base/b$i"))
+        assert(a.nonEmpty && a == b, s"layout $i moved:\n$a\nvs\n$b")
+        assert(a.map(_._4).sum == Tables.events(spark, SfMid).count())
+      }
+      assert(files(s"$base/a0").size == 16, "one file per time slice")
+    } finally {
+      val root = new org.apache.hadoop.fs.Path(base)
+      root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .delete(root, true)
+    }
+  }
+
   test("csv round trip is identity on the declared integer/string subset") {
     val viaCsv = InfraQueries.queries("infra_csv_roundtrip")(spark, Sf)
       .collect().map(_.toSeq).toSeq

@@ -100,23 +100,6 @@ class Round16Spec extends SparkSpec {
       s"rank<=5 must plan as WindowGroupLimit:\n${plan.take(3000)}")
   }
 
-  test("IVF-PQ stored codes: m codes per vector on disk, serving equals in-plan") {
-    // the compression claim made physical: the persisted index holds
-    // one row per corpus vector with ONLY (vec_id, cid, code0..3) —
-    // no embedding column travels to the serving scan
-    val t = SimilarityQueries.ivfPqTable(spark, Sf)
-    val codes = graft.sources.BucketedStore.read(spark, t)
-    assert(codes.columns.toSeq ==
-      Seq("vec_id", "cid", "code0", "code1", "code2", "code3"))
-    assert(codes.count() == Tables.embeddings(spark, Sf).count())
-    val stored = SparkEntry.queries("ann_topk_ivfpq_stored")(spark, Sf)
-      .collect().toSeq
-    val inPlan = SparkEntry.queries("ann_topk_ivfpq")(spark, Sf)
-      .collect().toSeq
-    assert(stored.nonEmpty && stored == inPlan,
-      "stored-codes serving must equal the in-plan encoding")
-  }
-
   test("ModelStore retrain is a rename-swap: catalog entry survives, readers resolve") {
     // VERDICT r11 #4: the old DROP TABLE -> delete -> saveAsTable had a
     // window where a concurrent serving job caught a missing table.

@@ -157,85 +157,6 @@ class Round20Spec extends SparkSpec {
       spark.sql(s"DROP TABLE IF EXISTS `$t`"))
   }
 
-  test("shared-residual batch face: the arbitrary-|Q| column shape is bit-equal to the stored eval face") {
-    // VERDICT r15 #4: both residual tiers now have the deployable
-    // batch shape. The per-(query, probe) slot tables ride the same
-    // codegen'd graft_group_adc as the per-cell tier (singleton-group
-    // family), so every (query, neighbor, rank, adc) must match the
-    // driver-literal eval face exactly.
-    def row(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))
-    val batch = SparkEntry.queries("ann_topk_ivfpq_residual_batch")(
-      spark, Sf).collect().map(row).toSeq
-    val stored = SparkEntry.queries("ann_topk_ivfpq_residual_stored")(
-      spark, Sf).collect().map(row).toSeq
-    assert(batch == stored && batch.nonEmpty)
-  }
-
-  test("per-cell residual lifecycle: generation-scoped per-cell tables — g1 reaped, g2 drain, g3 live; pointer names them; day-2 encoded through the pointer") {
-    // VERDICT r15 #2: the per-cell tier joins the maintenance cycle
-    // exactly like the shared residual tier.
-    import graft.pipeline.SimilarityQueries
-    SimilarityQueries.reclusterCycleExecute(spark, Sf)
-    val g1 = SimilarityQueries.cyclePqrcNames(Sf, 1)
-    val g2 = SimilarityQueries.cyclePqrcNames(Sf, 2)
-    val g3 = SimilarityQueries.cyclePqrcNames(Sf, 3)
-    Seq(g1._1, g1._2, g1._3).foreach(t =>
-      assert(!spark.catalog.tableExists(t), s"g1 table $t must be reaped"))
-    (Seq(g2._1, g2._2, g2._3) ++ Seq(g3._1, g3._2, g3._3)).foreach(t =>
-      assert(spark.catalog.tableExists(t), s"$t must survive"))
-    val ptr = graft.sources.ModelStore
-      .read(spark, SimilarityQueries.cyclePtr(Sf)).collect()(0)
-    assert((ptr.getString(10), ptr.getString(11), ptr.getString(12)) == g3)
-    // g3's base per-cell code table holds corpus + day-2 (the day-2
-    // batch was encoded THROUGH the g2 pointer, then folded)
-    val n = Tables.embeddings(spark, Sf).count()
-    val n2 = n + Tables.embeddings(spark, Sf)
-      .filter(col("vec_id") % 7 === 3).count()
-    val codes = spark.table(g3._1)
-    assert(codes.count() == n2, "g3 per-cell codes must cover corpus + day-2")
-    assert(codes.filter(col("code0") < 0 || col("code0") > 15).count() == 0)
-    assert(codes.filter(col("vec_id") >= n).count() == n2 - n)
-    // the g2 DELTA per-cell table holds exactly the day-2 batch — the
-    // through-the-pointer upsert the serving tier ran on day 2
-    assert(spark.table(g2._2).count() == n2 - n,
-      "day-2 per-cell codes must have landed in the pointer-named delta")
-  }
-
-  test("streaming PER-CELL residual ADC through the CYCLED pointer: serves generation 3's per-cell codes after the reap") {
-    import spark.implicits._
-    import graft.streaming.StreamingEvents
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    def row(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))
-    val want = SparkEntry.queries("ann_ivfpqrc_recluster_cycle")(spark, Sf)
-      .filter(col("query_id").isin(2L, 3L, 7L))
-      .collect().map(row).toSet
-    val qvs = Tables.embeddings(spark, Sf)
-      .filter(col("vec_id").isin(2L, 3L, 7L))
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1))
-    val mem = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Long, Seq[Double])]
-    val typed = mem.toDF().toDF("ts_ms", "query_id", "qv")
-      .select(timestamp_millis(col("ts_ms")).as("ts"),
-        col("query_id"), col("qv"))
-    val q = StreamingEvents.annServePqrcPtrStreamAt(typed, spark,
-        graft.pipeline.SimilarityQueries.cyclePtr(Sf),
-        k = 5, delayMs = 3600000L)
-      .writeStream.format("memory").queryName("ann_serve_pqrc_cyc")
-      .outputMode("append").start()
-    try {
-      mem.addData(qvs.map { case (id, v) => (1000L, id, v) }: _*)
-      q.processAllAvailable()
-      mem.addData((1000L + 3600000L * 3, 999L, qvs.head._2))
-      q.processAllAvailable()
-      val got = spark.table("ann_serve_pqrc_cyc").collect().map(row).toSet
-      assert(got == want, s"streamed $got vs batch $want")
-      assert(got.nonEmpty)
-    } finally q.stop()
-  }
-
   test("pairs fold crash window: a delta stranded between the replace and its drop double-counts nothing — reads stay exact, the next fold converges") {
     requireFixture(SfMid)
     import spark.implicits._
