@@ -12,8 +12,19 @@ object SparkEntry {
       spark, "/root/testdata/sf0.001")
   /** One entry per implemented operator from SURVEY.md §2 (etl_*) plus
     * the north-star LLM-pipeline operator families (dedup_*, ann_*,
-    * text_*, events_*, ...). */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    * text_*, events_*, ...). Each face first tells the cache pool which
+    * dataset it serves, so a dataset switch releases the previous
+    * dataset's cached relations ([[graft.pipeline.CachePool.serving]]).
+    * Names bound to one face function share one wrapper. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] = served
+  private lazy val served = faces.groupBy(_._2).flatMap { case (face, named) =>
+    val serve = (s: SparkSession, d: String) => {
+      graft.pipeline.CachePool.serving(d)
+      face(s, d)
+    }
+    named.keys.map(_ -> serve)
+  }
+  private def faces: Map[String, (SparkSession, String) => DataFrame] =
     graft.queries.EtlQueries.queries ++
       graft.queries.SinkQueries.queries ++
       graft.queries.AnalyticsQueries.queries ++

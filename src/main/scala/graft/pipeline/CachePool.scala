@@ -15,12 +15,24 @@ import org.apache.spark.sql.execution.columnar.InMemoryRelation
   * corpora through the same SparkSession would accrete cached
   * relations until eviction pressure hurts unrelated queries. Every
   * `.cache()` on those paths therefore registers here, and the session
-  * owner calls [[release]] at corpus-lifecycle boundaries (end of a
-  * verify/bench suite, corpus switch). Registration is deduped by
-  * canonicalized plan (ADVICE r10: planning-only sweeps construct the
-  * same queries repeatedly and must not grow the pool), and the
-  * two-phase rank pattern's scaffold cache has its own shorter
-  * lifecycle — see [[cachedPair]].
+  * owner calls [[release]] at the end of a verify/bench suite.
+  *
+  * A dataset switch is the other boundary, and [[serving]] acts on it:
+  * `SparkEntry.queries` calls it before every face, so the first face
+  * served on a new dataset drops the previous dataset's cached
+  * relations ([[releaseCaches]]) while its trained models stay
+  * memoized (they are keyed by dataset, driver-sized, and cost seconds
+  * to retrain). A bench that warms up on sf0.001 and then sweeps
+  * sf0.01 therefore holds only the sf0.01 relations during the sweeps.
+  * No memo entry returns a pooled handle: a handle re-executed after
+  * its cache was released would rebuild and re-pin blocks no pool
+  * entry tracks, so memoized bodies keep only models, table names and
+  * `localCheckpoint`s.
+  *
+  * Registration is deduped by canonicalized plan (ADVICE r10:
+  * planning-only sweeps construct the same queries repeatedly and must
+  * not grow the pool), and the two-phase rank pattern's scaffold cache
+  * has its own shorter lifecycle — see [[cachedPair]].
   *
   * Relations with a natural key — a (name, dataset) pair, like the
   * memo entries below — are pooled through the keyed overload
@@ -109,9 +121,10 @@ object CachePool {
     * expensive to retrain and mostly driver-sized. A memoized value
     * that referenced a pooled cache recomputes lazily — correctness
     * is unaffected, only the cache cost is re-paid on next touch.
-    * Not used by the mains: releasing at every query-family boundary
-    * measured 185.4 s vs 167.1 s for the full suite at sf0.1/local[32]
-    * (the rebuilds cost more than the memory they free). */
+    * [[serving]] calls it at a dataset switch. Releasing at every
+    * query-family boundary instead measured 185.4 s vs 167.1 s for the
+    * full suite at sf0.1/local[32] (the rebuilds cost more than the
+    * memory they free). */
   def releaseCaches(): Unit = synchronized {
     pairs.foreach(_._1.unpersist(false))
     pairs.clear()
@@ -119,6 +132,18 @@ object CachePool {
     pool.clear()
     seen.clear()
     keyed.clear()
+  }
+
+  // the dataset the last face was served on; see [[serving]]
+  private var servingDir: String = null
+
+  /** The dataset-switch boundary: called with the dataset directory
+    * before each face is built. When it differs from the directory of
+    * the previous call, the previous dataset's cached relations are
+    * released ([[releaseCaches]]); memoized models stay. */
+  def serving(sfDir: String): Unit = synchronized {
+    if (servingDir != null && servingDir != sfDir) releaseCaches()
+    servingDir = sfDir
   }
 
   /** Unpersist every registered relation (non-blocking) and forget it,

@@ -61,10 +61,11 @@ object DedupQueries {
       .select(col("doc_a"), col("doc_b"), round(j, 6).as("jaccard"))
   }
 
-  /** Distinct word-3-gram shingles per doc with their h60 hash, built
-    * relationally (posexplode + window lead): every operator here is
-    * whole-stage codegen'd. The equivalent transform(sequence(...))
-    * lambda is a higher-order function, which Spark always interprets —
+  /** Distinct word-3-gram shingles per doc as (doc_id, h), h the
+    * shingle's h60 hash, built relationally (posexplode + window
+    * lead): every operator here is whole-stage codegen'd. The
+    * equivalent transform(sequence(...)) lambda is a higher-order
+    * function, which Spark always interprets —
     * and the interpreter re-evaluates the split() subtree per element
     * (measured 10×+ slower on the bench).
     *
@@ -76,8 +77,10 @@ object DedupQueries {
     * required distribution, so the whole pipeline runs exchange-free
     * and the cache inherits doc_id partitioning for the downstream
     * per-doc aggregations. CacheManager dedupes by canonical plan, so
-    * minhash and ngram_jaccard share one cached copy per sfDir. */
-  private def shingleRows(corpus: DataFrame): DataFrame =
+    * minhash and ngram_jaccard share one cached copy per sfDir. The
+    * shingle text is dropped after the dedup, so the cache holds two
+    * longs per row: every consumer reads only (doc_id, h). */
+  private[graft] def shingleRows(corpus: DataFrame): DataFrame =
     CachePool.cached(shingleRowsOf(corpus))
 
   /** The uncached body — for per-micro-batch callers (the ingest
@@ -94,7 +97,7 @@ object DedupQueries {
       .select(col("doc_id"),
         concat_ws(" ", col("tok"), col("t1"), col("t2")).as("shingle"))
       .dropDuplicates("doc_id", "shingle")
-      .withColumn("h", DupCorpus.h60(col("shingle")))
+      .select(col("doc_id"), DupCorpus.h60(col("shingle")).as("h"))
   }
 
   // ---------------------------------------------------------------- exact

@@ -148,9 +148,9 @@ ORDER BY query_id, rank"""
     * between batches k and k+1 is the re-embed/retrain alarm. The
     * whole computation never materializes an array: centroids live as
     * the (batch, dim) relation (8×64 rows) and the consecutive-batch
-    * cosine is one equi-join on dim + a decimal-exact 3-sum aggregate
-    * — at 100 TB the only data-sized work is the one posexplode scan
-    * feeding the per-(batch, dim) partial sums. */
+    * cosine is one `lead` over each dim's batches + a decimal-exact
+    * 3-sum aggregate — at 100 TB the only data-sized work is the one
+    * posexplode scan feeding the per-(batch, dim) partial sums. */
   private val embedDrift: Q = (s, d) => {
     val e = embDouble(s, d)
     val mx = broadcast(e.agg((max("vec_id") + 1).as("n_ids")))
@@ -160,13 +160,15 @@ ORDER BY query_id, rank"""
       .groupBy("batch", "dim")
       .agg((sum(col("x").cast("decimal(25,15)")).cast("double")
         / count(lit(1))).as("m"))
-      // 8×64 rows; both sides of the consecutive-batch join read it —
-      // materialize once so the posexplode scan doesn't plan twice
-      .localCheckpoint()
-    val a = means.toDF("batch", "dim", "ma")
-    val b = means.toDF("b2", "dim", "mb")
+    // each (batch, dim) mean meets the next batch's mean of its dim
+    // through `lead`, kept only where that batch is batch + 1 (the
+    // pairs the oracle's self equi-join makes): the means are read
+    // once, inside the plan, so building the face runs no job
+    val w = Window.partitionBy("dim").orderBy("batch")
     def dsum(c: Column) = sum(c.cast("decimal(30,18)")).cast("double")
-    a.join(b, col("b2") === col("batch") + 1 && a("dim") === b("dim"))
+    means.select(col("batch"), lead("batch", 1).over(w).as("b2"),
+        col("m").as("ma"), lead("m", 1).over(w).as("mb"))
+      .filter(col("b2") === col("batch") + 1)
       .groupBy(col("batch").as("batch_from"), col("b2").as("batch_to"))
       .agg(dsum(col("ma") * col("mb")).as("dot"),
         dsum(col("ma") * col("ma")).as("na"),

@@ -5,10 +5,14 @@ import graft.pipeline.{CachePool, DedupQueries, DupCorpus, SimilarityQueries}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 
 /** The keyed pooled handles of `CachePool.cached(key)(build)`: a steady
   * call returns the pooled handle without growing the pool, and a
-  * release drops the handle so the next call caches again. */
+  * release drops the handle so the next call caches again. Through
+  * `SparkEntry.queries`, a dataset switch releases the previous
+  * dataset's cached relations and keeps its memoized models. */
 class CachePoolSpec extends SparkSpec {
 
   private val keyedRelations: Seq[(String, () => DataFrame)] = Seq(
@@ -66,4 +70,70 @@ class CachePoolSpec extends SparkSpec {
       try assert(cachedPartitions(touch()) == 3)
       finally spark.conf.set("spark.sql.shuffle.partitions", "4")
     }
+
+  /** The id of the RDD holding `df`'s cached column buffers, which must
+    * already be materialized. */
+  private def cachedRdd(df: DataFrame): Int =
+    df.queryExecution.withCachedData.collectFirst {
+      case r: InMemoryRelation =>
+        assert(r.cacheBuilder.isCachedColumnBuffersLoaded, "relation not materialized")
+        r.cacheBuilder.cachedColumnBuffers.id
+    }.get
+
+  private def storedRdds: Set[Int] =
+    spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+
+  // faces that pool the dup corpus, shingle rows, minhash candidates
+  // and pairs, the cast embeddings and the ETL requests between them
+  private val pooling = Seq("dedup_minhash", "ann_topk_brute", "etl_route")
+  private def serve(face: String, d: String): DataFrame =
+    SparkEntry.queries(face)(spark, d)
+
+  /** The keyed pooled handles the `pooling` faces leave on `d`. */
+  private def keyedOn(d: String): Seq[DataFrame] = Seq(
+    DupCorpus.corpus(spark, d), DedupQueries.minhashPairs(spark, d),
+    SimilarityQueries.embDouble(spark, d), Corpus.requests(spark, d))
+
+  test("a dataset switch frees every block of the previous dataset's pooled relations") {
+    requireFixture(SfMid)
+    pooling.foreach(serve(_, Sf).count())
+    val sfPooled = keyedOn(Sf) ++ Seq(
+      DedupQueries.shingleRows(DupCorpus.corpus(spark, Sf)),
+      DedupQueries.minhashCandidates(spark, Sf))
+    val rdds = sfPooled.map(cachedRdd).toSet
+    assert(rdds.subsetOf(storedRdds))
+    serve("etl_route", SfMid)
+    eventually(timeout(30.seconds), interval(100.millis)) {
+      assert((rdds & storedRdds).isEmpty, "the switch must unpersist every Sf relation")
+    }
+  }
+
+  test("a second call on the served dataset returns the same handles and releases nothing") {
+    requireFixture(SfMid)
+    pooling.foreach(serve(_, SfMid).count())
+    val handles = keyedOn(SfMid)
+    val rdds = handles.map(cachedRdd).toSet
+    val size = CachePool.poolSize
+    pooling.foreach(serve(_, SfMid).count())
+    assert(keyedOn(SfMid).lazyZip(handles).forall(_ eq _),
+      "a call on the same dataset must keep the pooled handles")
+    assert(CachePool.poolSize == size)
+    assert(rdds.subsetOf(storedRdds))
+  }
+
+  test("the memoized models survive a dataset switch") {
+    requireFixture(SfMid)
+    serve("dedup_cluster", Sf).count()
+    serve("ann_topk_ivf_kmeans", Sf).count()
+    val cents = SimilarityQueries.corpusCentroids(spark, Sf)
+    def labels = DedupQueries.ccLabelsMemo("minhash", Sf)(
+      fail("the switch dropped the memoized CC labels"))
+    val (labelsBefore, rows) = (labels, labels.count())
+    serve("etl_route", SfMid)
+    serve("etl_route", Sf)
+    assert(SimilarityQueries.corpusCentroids(spark, Sf) eq cents,
+      "the switch dropped the memoized centroids")
+    assert(labels eq labelsBefore)
+    assert(labels.count() == rows, "the memoized labels must stay readable")
+  }
 }

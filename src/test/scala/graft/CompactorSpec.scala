@@ -8,7 +8,7 @@ class CompactorSpec extends SparkSpec {
 
   test("compaction merges small files, preserves data, sizes from bytes") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-compact").toString + "/store"
+    val dir = SparkSpec.tempDir("graft-compact") + "/store"
     // accrete 40 micro-batch-sized files
     (0 until 40).foreach { i =>
       Seq.tabulate(50)(j => (i * 50L + j, s"row-$i-$j")).toDF("id", "v")
@@ -35,7 +35,7 @@ class CompactorSpec extends SparkSpec {
 
   test("compaction recovers from a crashed predecessor's leftovers") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-compact-crash").toString
+    val base = SparkSpec.tempDir("graft-compact-crash")
     val dir = base + "/store"
     (0 until 10).foreach { i =>
       Seq.tabulate(20)(j => (i * 20L + j, s"r-$i-$j")).toDF("id", "v")
@@ -64,7 +64,7 @@ class CompactorSpec extends SparkSpec {
   test("metadata store compaction collapses per-pid fan-out, read unchanged") {
     import spark.implicits._
     import graft.streaming.StreamingEtl
-    val dir = Files.createTempDirectory("graft-store-compact").toString + "/meta"
+    val dir = SparkSpec.tempDir("graft-store-compact") + "/meta"
     val store = new StreamingEtl.ParquetMetadataStore(spark, dir)
     // disable AQE for the merge so the shuffle keeps its full task
     // width and every pid receives files from several writer tasks —

@@ -1,6 +1,7 @@
 package graft
 
 import graft.pipeline.{DedupQueries, DupCorpus}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 
 /** Dedup-family recall against the synthetic ground truth: the oracle
@@ -163,5 +164,14 @@ class DedupSpec extends SparkSpec {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcast)
       spark.conf.set("spark.sql.adaptive.enabled", aqe)
     }
+  }
+
+  test("the pooled shingle relation holds only (doc_id, h)") {
+    val sh = DedupQueries.shingleRows(DupCorpus.corpus(spark, Sf))
+    assert(sh.schema.fieldNames.toSeq == Seq("doc_id", "h"))
+    val cached = sh.queryExecution.withCachedData.collectFirst {
+      case r: InMemoryRelation => r.output.map(_.name)
+    }
+    assert(cached.contains(Seq("doc_id", "h")), s"cached columns: $cached")
   }
 }

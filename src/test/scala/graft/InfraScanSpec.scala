@@ -88,7 +88,7 @@ class InfraScanSpec extends SparkSpec {
           (f.split("/").find(_.startsWith("event_type=")).getOrElse(""),
             r.getTimestamp(1).getTime, r.getTimestamp(2).getTime, r.getLong(3))
         }.toSeq.sorted
-    val base = java.nio.file.Files.createTempDirectory("graft-layout").toString
+    val base = SparkSpec.tempDir("graft-layout")
     val layouts = Seq[(org.apache.spark.sql.SparkSession, String, String) => Unit](
       InfraQueries.writeMinmaxLayout, InfraQueries.writeTwoLevelLayout)
     try {

@@ -151,8 +151,7 @@ class Round18Spec extends SparkSpec {
     assert(b1.exists(_._1 == spanA) && b2.nonEmpty)
     val mem = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)]
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-ingest-ckpt").toString
+    val ckpt = SparkSpec.tempDir("graft-ingest-ckpt")
     val q = StreamingEvents.dedupIngestStream(
       mem.toDF().toDF("doc_id", "text"), spark, SfMid, ckpt)
     try {

@@ -197,8 +197,7 @@ class Round19Spec extends SparkSpec {
       .map(r => (r.getLong(0), r.getString(1)))
     val mem = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)]
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-sdc-ckpt").toString
+    val ckpt = SparkSpec.tempDir("graft-sdc-ckpt")
     val q = StreamingEvents.dedupIngestStream(
       mem.toDF().toDF("doc_id", "text"), spark, SfMid, ckpt,
       compactAtDeltaDocs = 1L)

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** Round-21 pins: the Compactor crash roll-forward and its K2
   * consumers (VERDICT r16 top item — the third, SILENT instance of
@@ -36,7 +35,7 @@ class Round21Spec extends SparkSpec {
 
   test("Compactor.recover promotes a parked store; compact() itself recovers first") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-r21-comp").toString
+    val base = SparkSpec.tempDir("graft-r21-comp")
     val dir = base + "/store"
     (0 until 6).foreach { i =>
       Seq.tabulate(20)(j => (i * 20L + j, s"r-$i-$j")).toDF("id", "v")
@@ -76,7 +75,7 @@ class Round21Spec extends SparkSpec {
     // orphaning the parked metadata permanently.
     import spark.implicits._
     import graft.streaming.StreamingEtl
-    val dir = Files.createTempDirectory("graft-r21-k2").toString + "/meta"
+    val dir = SparkSpec.tempDir("graft-r21-k2") + "/meta"
     val boot = new StreamingEtl.ParquetMetadataStore(spark, dir)
     boot.merge((0 until 200).map(i => (s"item-$i", "status", "ingested"))
       .toDF("id", "mkey", "mvalue"))
@@ -130,7 +129,7 @@ class Round21Spec extends SparkSpec {
     import graft.streaming.StreamingEtl
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-r21-stream").toString
+    val dir = SparkSpec.tempDir("graft-r21-stream")
     // fold check every 2 merges (the counter is seeded AT the
     // threshold, so folds land after batches 1, 3, 5, 7, 9), fold any
     // pid past 1 file
@@ -191,7 +190,7 @@ class Round21Spec extends SparkSpec {
 
   test("SwapStore.recover is the one roll-forward: promotes exactly when the root is missing and reports it") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-r21-swap").toString
+    val base = SparkSpec.tempDir("graft-r21-swap")
     val root = new org.apache.hadoop.fs.Path(base, "st")
     val fs = fsOf(base)
     Seq((1L, "a")).toDF("id", "v").write.parquet(root.toString)

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** Round-22 pins: the K2 merge's last argued-but-untested crash seam
   * (VERDICT r17 missing #3 — death between the staging write and the
@@ -39,7 +38,7 @@ class Round22Spec extends SparkSpec {
 
   test("K2 mid-merge crash, window 1: staged-but-uncommitted merge — boot sweeps the orphan, checkpointed replay converges to LWW") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-r22-k2a").toString + "/meta"
+    val dir = SparkSpec.tempDir("graft-r22-k2a") + "/meta"
     val writer = new StreamingEtl.ParquetMetadataStore(spark, dir)
     writer.merge((0 until 200).map(i => (s"item-$i", "status", "ingested"))
       .toDF("id", "mkey", "mvalue"))
@@ -76,7 +75,7 @@ class Round22Spec extends SparkSpec {
 
   test("K2 mid-merge crash, window 2: PARTIAL dynamic overwrite (one touched pid committed, one stale) — replay converges to LWW") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-r22-k2b").toString + "/meta"
+    val dir = SparkSpec.tempDir("graft-r22-k2b") + "/meta"
     val writer = new StreamingEtl.ParquetMetadataStore(spark, dir)
     writer.merge((0 until 200).map(i => (s"item-$i", "status", "ingested"))
       .toDF("id", "mkey", "mvalue"))
@@ -116,7 +115,7 @@ class Round22Spec extends SparkSpec {
 
   test("maybeCompact re-probes on a failed fold: the retry resumes instead of no-opping (ADVICE r17)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-r22-fold").toString + "/meta"
+    val dir = SparkSpec.tempDir("graft-r22-fold") + "/meta"
     val store = new StreamingEtl.ParquetMetadataStore(spark, dir,
       compactEveryMerges = 1, maxFilesPerPid = 1)
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")

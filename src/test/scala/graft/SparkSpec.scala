@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,6 +25,25 @@ trait SparkSpec extends AnyFunSuite {
 object SparkSpec {
   /** The mains' session ([[GraftSession.local]]) on 4 cores, with a
     * throwaway managed-table home for the bucketed-store tests. */
-  lazy val session: SparkSession = GraftSession.local(4,
-    java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+  lazy val session: SparkSession = GraftSession.local(4, tempDir("graft-warehouse"))
+
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[Path]
+  sys.addShutdownHook(tempDirs.forEach(deleteRecursively))
+
+  /** A fresh directory under the system temp dir, deleted with
+    * everything in it when the JVM exits: the suite's scratch roots
+    * and warehouse never outlive the run. */
+  def tempDir(prefix: String): String = {
+    val dir = Files.createTempDirectory(prefix)
+    tempDirs.add(dir)
+    dir.toString
+  }
+
+  private def deleteRecursively(root: Path): Unit =
+    if (Files.exists(root)) {
+      val paths = Files.walk(root)
+      try paths.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(p => Files.deleteIfExists(p))
+      finally paths.close()
+    }
 }

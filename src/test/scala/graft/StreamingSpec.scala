@@ -3,7 +3,6 @@ package graft
 import graft.streaming.StreamingEtl
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** K2 merge idempotence + the S1/K4 streaming wrapper (SURVEY.md §5
   * items 4-5): replaying a batch must leave the metadata store
@@ -1150,7 +1149,7 @@ class StreamingSpec extends SparkSpec {
 
   test("K2 partition-scoped merge: untouched pid dirs are not rewritten") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-store").toString + "/meta"
+    val dir = SparkSpec.tempDir("graft-store") + "/meta"
     val store = new StreamingEtl.ParquetMetadataStore(spark, dir)
     store.merge((0 until 40).map(i => (s"item-$i", "status", "ingested"))
       .toDF("id", "mkey", "mvalue"))
@@ -1181,7 +1180,7 @@ class StreamingSpec extends SparkSpec {
   test("S1/K4 streaming wrapper: MemoryStream -> foreachBatch merge, replay-idempotent") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-stream").toString
+    val dir = SparkSpec.tempDir("graft-stream")
     val store = new StreamingEtl.ParquetMetadataStore(spark, s"$dir/meta")
 
     val mem = MemoryStream[String]

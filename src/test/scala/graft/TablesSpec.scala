@@ -62,8 +62,7 @@ class TablesSpec extends SparkSpec {
 /** Child-JVM half of TablesSpec's stop test. */
 object TablesStopCheck {
   def main(args: Array[String]): Unit = {
-    val s = GraftSession.local(1,
-      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+    val s = GraftSession.local(1, SparkSpec.tempDir("graft-warehouse"))
     Tables.lineitem(s, args(0)).count()
     println(s"held before stop: ${Tables.sessionsHeld}")
     s.stop()
