@@ -1,4 +1,6 @@
 package graft
+import java.nio.file.{Files, Path, Paths}
+
 import org.apache.spark.sql.SparkSession
 
 /** The one local SparkSession configuration: `Bench`, `Verify`,
@@ -51,4 +53,25 @@ object GraftSession {
       org.apache.logging.log4j.Level.ERROR)
     spark
   }
+
+  private val scratchRoots = java.util.concurrent.ConcurrentHashMap.newKeySet[Path]()
+
+  /** The application's scratch root, `/tmp/graft-scratch/<applicationId>`,
+    * for layouts and summaries a run materializes once and reads back.
+    * The root is deleted with everything in it when the JVM exits, so
+    * finished runs leave nothing behind. */
+  def scratch(s: SparkSession): String = {
+    val root = Paths.get("/tmp/graft-scratch", s.sparkContext.applicationId)
+    if (scratchRoots.add(root)) sys.addShutdownHook(deleteRecursively(root))
+    root.toString
+  }
+
+  /** Delete `root` and everything under it, if it exists. */
+  private[graft] def deleteRecursively(root: Path): Unit =
+    if (Files.exists(root)) {
+      val paths = Files.walk(root)
+      try paths.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(p => Files.deleteIfExists(p))
+      finally paths.close()
+    }
 }

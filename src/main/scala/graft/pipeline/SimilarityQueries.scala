@@ -413,7 +413,7 @@ ORDER BY query_id, rank"""
     * centroid means are decimal-exact sums (order-independent) cast to
     * double once, divided in double — so Spark and DuckDB walk
     * identical centroid trajectories. */
-  private[graft] val KmK = 8; private val KmIters = 2; private[graft] val KmProbe = 2
+  private[graft] val KmK = 8; private[graft] val KmIters = 2; private[graft] val KmProbe = 2
 
   /** nlist as a FUNCTION of corpus size — the classic nlist ∝ √N rule
     * (VERDICT r11 top item: a fixture-constant nlist makes the
@@ -461,13 +461,13 @@ ORDER BY query_id, rank"""
     * list_dot_product and the scan breaks distance ties by cid, so
     * results are bit-identical to the literal `least()` form this
     * replaces (see [[graft.functions.NearestCentroid]]). Shared by
-    * [[assignCells]], the fused IVF-PQ training pass, and the
+    * [[assignCells]], the index build's drift sums and the
     * cluster-profile inertia. */
   private def cellMin(s: SparkSession, cents: Seq[(Int, Seq[Double])]): Column =
     graft.functions.CentroidModels.nearest(s, cents, col("v"))
 
   /** The argmin cell id over the full vector as a Column — shared by
-    * [[assignCells]] and the fused IVF-PQ training pass. The owning
+    * [[assignCells]] and the kNN label eval. The owning
     * session is threaded explicitly (ADVICE r13): registering the
     * function — and minting the model id — on `SparkSession.active`
     * binds whichever session HAPPENS to be active in a multi-session
@@ -479,30 +479,91 @@ ORDER BY query_id, rank"""
                           cents: Seq[(Int, Seq[Double])]): DataFrame =
     e.select(col("vec_id"), col("v"), cellCol(e.sparkSession, cents).as("cid"))
 
-  /** KmIters Lloyd iterations over `e` (vec_id, v) → final centroids.
-    * Deterministic init = vectors 0..k-1; per-iteration state is k×dim
-    * doubles on the driver (constant-size model, not a data collect).
-    * k defaults to [[nlistOf]] the training relation's own count (one
-    * count job, cheap against a cached input and paid once per
-    * memoized index build); pass k explicitly for the fixed-k
-    * analytics-clustering faces. */
-  private def kmeansCentroids(s: SparkSession, e: DataFrame,
-                              k0: Int = 0): Seq[(Int, Seq[Double])] = {
+  /** A codebook: (cid, centroid) rows, cid-ascending. */
+  private[graft] type Book = Seq[(Int, Seq[Double])]
+  /** A codebook family: (group key, book) rows, key-ascending. A shared
+    * book is the singleton group 0; per-cell families key on the cell. */
+  private[graft] type Family = Seq[(Int, Book)]
+
+  private def singleton(books: Seq[Book]): Seq[Family] =
+    books.map(b => Seq((0, b)))
+
+  /** The m code columns `code0..` of `v`: slice sub (the books' width)
+    * argmin over group `gid`'s book of family sub
+    * (`graft_group_nearest`: ‖c‖² − 2·v·c as sequential folds, ties to
+    * the smaller cid). Shared by [[lloyd]] and every PQ encode. */
+  private def codeCols(s: SparkSession, fams: Seq[Family],
+      gid: Column): Seq[Column] = {
+    val width = fams.head.head._2.head._2.length
+    fams.zipWithIndex.map { case (f, sub) =>
+      graft.functions.GroupedCentroidModels.nearestInGroup(
+          s, f, slice(col("v"), sub * width + 1, width), gid)
+        .getField("cid").as(s"code$sub") }
+  }
+
+  /** Unpivoted (sub, gid, cid, pos, x) rows collected into m families:
+    * groups, books and vectors sorted by gid, cid and pos. The one
+    * reader of every model, trained ([[lloyd]]'s rounds) or stored. */
+  private def modelFrom(rows: DataFrame, m: Int): Seq[Family] = {
+    import rows.sparkSession.implicits._
+    val bySub = rows.as[(Int, Int, Int, Int, Double)].collect().toSeq
+      .groupBy(_._1)
+    (0 until m).map(sub => bySub.getOrElse(sub, Nil).groupBy(_._2).toSeq
+      .sortBy(_._1).map { case (g, xs) =>
+        (g, xs.groupBy(_._3).toSeq.sortBy(_._1).map { case (cid, ys) =>
+          (cid, ys.sortBy(_._4).map(_._5)) }) })
+  }
+
+  /** Ungrouped seeds: the rows of `e` with vec_id < k as cids 0..k−1
+    * (fewer where `e` skips ids, as the base relation does). */
+  private def seeds(s: SparkSession, e: DataFrame, k: Int): Book = {
     import s.implicits._
-    val k = if (k0 > 0) k0 else nlistOf(e.count())
-    val init = e.filter(col("vec_id") < k)
-      .select(col("vec_id").cast("int"), col("v"))
+    e.filter(col("vec_id") < k).select(col("vec_id").cast("int"), col("v"))
       .as[(Int, Seq[Double])].collect().toSeq.sortBy(_._1)
-    (1 to KmIters).foldLeft(init) { (c, _) =>
-      assignCells(e, c)
-        .select(col("cid"), posexplode(col("v")).as(Seq("dim", "x")))
-        .groupBy("cid", "dim")
+  }
+
+  /** Full-width seed families cut into their [[PqM]] subspace families. */
+  private def split(fam: Family): Seq[Family] = (0 until PqM).map { sub =>
+    fam.map { case (g, b) =>
+      (g, b.map { case (cid, v) => (cid, v.slice(sub * PqW, (sub + 1) * PqW)) }) } }
+
+  /** The one Lloyd trainer: [[KmIters]] rounds over m codebook families
+    * at once, from the caller's seeds `init` (family sub's books are
+    * as wide as slice sub of `v`). Each round is ONE pass of `e`
+    * (vec_id, v, …) with the m [[codeCols]] — a row quantizes against
+    * its own group `gid` — ONE (sub, gid, cid, pos) decimal-mean
+    * aggregation and ONE model-sized collect; the corpus never
+    * shuffles. The coarse quantizer is m = 1 at full width, a shared
+    * book the singleton group 0 (`gid = lit(0)`), a per-cell family
+    * keyed by `col("cid")`. A cid that loses every member drops out.
+    * Means are decimal-exact sums (order-independent) cast to double
+    * once and divided in double, distances sequential folds with cid
+    * tie-breaks, so the oracle's SQL Lloyd chains walk bit-identical
+    * trajectories. */
+  private def lloyd(s: SparkSession, e: DataFrame, gid: Column,
+      init: Seq[Family]): Seq[Family] = {
+    val width = init.head.head._2.head._2.length
+    val subCol = (col("pos") / width).cast("int")
+    (1 to KmIters).foldLeft(init) { (fams, _) =>
+      modelFrom(e.select(gid.as("gid") +: col("v") +: codeCols(s, fams, gid): _*)
+        .select(col("gid"), posexplode(col("v")).as(Seq("pos", "x")),
+          element_at(array(fams.indices.map(i => col(s"code$i")): _*),
+            subCol + 1).as("cid"))
+        .groupBy(subCol.as("sub"), col("gid"), col("cid"), col("pos"))
         .agg((sum(col("x").cast("decimal(25,15)")).cast("double") /
-          count(lit(1))).as("m"))
-        .as[(Int, Int, Double)].collect().toSeq
-        .groupBy(_._1).map { case (cid, xs) =>
-          (cid, xs.sortBy(_._2).map(_._3).toSeq) }.toSeq.sortBy(_._1)
+          count(lit(1))).as("m")), fams.length)
     }
+  }
+
+  /** The coarse quantizer over `e` (vec_id, v): [[lloyd]] at m = 1 from
+    * the vec_id < k seeds. k defaults to [[nlistOf]] the training
+    * relation's own count (one count job, cheap against a cached input
+    * and paid once per memoized index build); pass k explicitly for
+    * the fixed-k analytics-clustering faces. */
+  private def kmeansCentroids(s: SparkSession, e: DataFrame,
+                              k0: Int = 0): Book = {
+    val k = if (k0 > 0) k0 else nlistOf(e.count())
+    lloyd(s, e, lit(0), Seq(Seq((0, seeds(s, e, k))))).head.head._2
   }
 
   /** The full-corpus coarse quantizer, trained ONCE per (session,
@@ -528,7 +589,7 @@ ORDER BY query_id, rank"""
     * shared by the upsert census, the upserted index build, and the
     * re-cluster gain's frozen arm — same one-model-many-faces
     * discipline as [[corpusCentroids]]. */
-  private def baseCentroids(s: SparkSession, d: String)
+  private[graft] def baseCentroids(s: SparkSession, d: String)
       : Seq[(Int, Seq[Double])] =
     CachePool.memoized(("baseCentroids", d)) {
       val base = CachePool.cached(embDouble(s, d)
@@ -1280,11 +1341,13 @@ FROM (
   private[graft] def ptrModelAt(s: SparkSession, ptrTable: String)
       : (Seq[(Int, Seq[Double])], String, String) = {
     val p = graft.sources.ModelStore.read(s, ptrTable).collect()(0)
-    (centsFromPtrRow(s, p), p.getString(1), p.getString(2))
+    (centsFrom(s, p.getString(3)), p.getString(1), p.getString(2))
   }
 
-  /** Load the coarse quantizer named by an ALREADY-READ pointer row —
-    * the single-read discipline (ADVICE r16): a tier resolver that
+  /** Load the coarse quantizer stored in `table` ([[centDf]]'s
+    * (cid, dim, x) rows). Pointer resolvers pass the centroid-table
+    * name of an ALREADY-READ pointer row — the single-read discipline
+    * (ADVICE r16): a tier resolver that
     * collects the pointer for its own columns and then calls
     * [[ptrModelAt]] reads the pointer TWICE, and a maintenance
     * publish landing between the two reads hands back the new
@@ -1294,14 +1357,9 @@ FROM (
     * centroid-table name here; the generation-named centroid table
     * itself is immutable once published, so this second catalog read
     * cannot mix generations. */
-  private def centsFromPtrRow(s: SparkSession,
-      p: org.apache.spark.sql.Row): Seq[(Int, Seq[Double])] = {
-    import s.implicits._
-    graft.sources.ModelStore.read(s, p.getString(3))
-      .as[(Int, Int, Double)].collect().toSeq
-      .groupBy(_._1).map { case (cid, xs) =>
-        (cid, xs.sortBy(_._2).map(_._3).toSeq) }.toSeq.sortBy(_._1)
-  }
+  private def centsFrom(s: SparkSession, table: String): Book =
+    modelFrom(graft.sources.ModelStore.read(s, table).select(lit(0),
+      lit(0), col("cid"), col("dim"), col("x")), 1).head.head._2
 
   private[graft] def serveFromPtr(s: SparkSession, d: String): DataFrame =
     serveVia(s, d, reclusterPtr(d))
@@ -1392,25 +1450,17 @@ FROM (
 
   /** Reassemble [[booksDf]]'s relation back into the m driver-side
     * codebooks — the serving job's catalog read. */
-  private[graft] def booksFrom(s: SparkSession, table: String)
-      : Seq[Seq[(Int, Seq[Double])]] = {
-    import s.implicits._
-    val bookRows = graft.sources.ModelStore.read(s, table)
-      .as[(Int, Int, Int, Double)].collect().toSeq
-    (0 until PqM).map { sub =>
-      bookRows.filter(_._1 == sub).groupBy(_._2).map { case (cid, xs) =>
-        (cid, xs.sortBy(_._3).map(_._4).toSeq) }.toSeq.sortBy(_._1) }
-  }
+  private[graft] def booksFrom(s: SparkSession, table: String): Seq[Book] =
+    modelFrom(graft.sources.ModelStore.read(s, table).select(col("sub"),
+      lit(0), col("cid"), col("dim"), col("x")), PqM).map(_.head._2)
 
   /** (vec_id, cid, code0..m−1) — the stored IVF-PQ row: coarse cell
     * from `cents`, subspace codes from `books`, all argmin projections
     * riding one scan. */
   private def encodePq(e: DataFrame, cents: Seq[(Int, Seq[Double])],
-      books: Seq[Seq[(Int, Seq[Double])]]): DataFrame = {
-    val s = e.sparkSession
+      books: Seq[Seq[(Int, Seq[Double])]]): DataFrame =
     assignCells(e, cents).select(col("vec_id") +: col("cid") +:
-      books.zipWithIndex.map { case (c, sub) => pqCodeCol(s, c, sub) }: _*)
-  }
+      codeCols(e.sparkSession, singleton(books), lit(0)): _*)
 
   /** Day-2 arrivals for the lifecycle: deterministic re-keyed
     * duplicates (vec_id % 7 == 3, re-keyed past the corpus to
@@ -1455,7 +1505,7 @@ FROM (
       def stage(g: Int, cents: Seq[(Int, Seq[Double])],
                 books: Seq[Seq[(Int, Seq[Double])]],
                 rbooks: Seq[Seq[(Int, Seq[Double])]],
-                cgroups: Seq[Seq[(Int, Seq[(Int, Seq[Double])])]],
+                cgroups: Seq[Family],
                 base: DataFrame, delta: DataFrame): Unit = {
         val (b, dl, c) = cycleNames(d, g)
         val (pqb, pqd, bk) = cyclePqNames(d, g)
@@ -1789,26 +1839,16 @@ ORDER BY query_id, rank"""
   private[graft] def foldDot(xs: Seq[Double], ys: Seq[Double]): Double =
     xs.zip(ys).foldLeft(0.0) { case (a, (x, y)) => a + x * y }
 
-  /** The per-subspace argmin code column for one subspace, over the
-    * broadcast codebook (the [[cellMin]] expression applied to the
-    * subvector slice; a PQ codebook is constant-size — PqK×PqW — but
-    * the uniform encoding keeps every argmin one plan node) — shared
-    * by the Lloyd assignment and the final encode. */
-  private def pqCodeCol(s: SparkSession, cents: Seq[(Int, Seq[Double])],
-      sub: Int): Column =
-    graft.functions.CentroidModels.nearest(s, cents, subv(col("v"), sub))
-      .getField("cid").as(s"code$sub")
-
-  /** All [[PqM]] codebooks, Lloyd-iterated TOGETHER: each iteration is
-    * ONE corpus pass that assigns all m subspaces (m argmin projection
-    * columns) and ONE (sub, cid, pos) aggregation for every mean —
-    * versus m separate 2-job loops (measured 6.1 s → the batched form
-    * at sf0.1; the sequential driver round-trips, not the flops, were
-    * the cost). The per-(sub, cid, dim) decimal sums see exactly the
-    * same addends as the per-subspace loops, and decimal addition is
-    * order-independent, so the centroid trajectory — and therefore the
-    * oracle — is bit-identical to the per-subspace formulation. */
-  private def pqCodebooks(s: SparkSession, d: String)
+  /** All [[PqM]] codebooks, Lloyd-iterated TOGETHER by [[lloyd]] as
+    * singleton families: each round is ONE corpus pass that assigns all
+    * m subspaces and ONE aggregation for every mean — versus m separate
+    * 2-job loops (measured 6.1 s → the batched form at sf0.1; the
+    * sequential driver round-trips, not the flops, were the cost). The
+    * per-(sub, cid, pos) decimal sums see exactly the same addends as
+    * the per-subspace loops, and decimal addition is order-independent,
+    * so the trajectory — and therefore the oracle — is bit-identical to
+    * the per-subspace formulation. */
+  private[graft] def pqCodebooks(s: SparkSession, d: String)
       : Seq[Seq[(Int, Seq[Double])]] =
     CachePool.memoized(("pqCodebooks", d)) {
       val e = embDouble(s, d).select(col("vec_id"), col("v")).cache()
@@ -1816,32 +1856,8 @@ ORDER BY query_id, rank"""
       e.unpersist()
       books
     }
-  private def pqTrain(s: SparkSession, e: DataFrame): Seq[Seq[(Int, Seq[Double])]] = {
-    import s.implicits._
-    val initRows = e.filter(col("vec_id") < PqK)
-      .select(col("vec_id").cast("int"), col("v")).as[(Int, Seq[Double])]
-      .collect().toSeq.sortBy(_._1)
-    val init: Seq[Seq[(Int, Seq[Double])]] = (0 until PqM).map { sub =>
-      initRows.map { case (cid, v) =>
-        (cid, v.slice(sub * PqW, (sub + 1) * PqW)) } }
-    (1 to KmIters).foldLeft(init) { (books, _) =>
-      val subCol = (col("pos") / PqW).cast("int")
-      val rows = e
-        .select(col("v") +:
-          books.zipWithIndex.map { case (c, sub) => pqCodeCol(s, c, sub) }: _*)
-        .select(posexplode(col("v")).as(Seq("pos", "x")),
-          element_at(array((0 until PqM).map(i => col(s"code$i")): _*),
-            subCol + 1).as("cid"))
-        .groupBy(subCol.as("sub"), col("cid"), col("pos"))
-        .agg((sum(col("x").cast("decimal(25,15)")).cast("double") /
-          count(lit(1))).as("m"))
-        .as[(Int, Int, Int, Double)].collect().toSeq
-      (0 until PqM).map { sub =>
-        rows.filter(_._1 == sub).groupBy(_._2).map { case (cid, xs) =>
-          (cid, xs.sortBy(_._3).map(_._4).toSeq) }.toSeq.sortBy(_._1)
-      }
-    }
-  }
+  private def pqTrain(s: SparkSession, e: DataFrame): Seq[Book] =
+    lloyd(s, e, lit(0), split(Seq((0, seeds(s, e, PqK))))).map(_.head._2)
 
   /** Served through [[adcProbed]] like every IVF-PQ tier, with no
     * coarse quantizer: every query probes the one cell 0 that holds the
@@ -1852,9 +1868,8 @@ ORDER BY query_id, rank"""
     val probes = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
         lit(0).as("probe_cid"))
-    pqServe(s, probes, AdcTier.shared(books),
-      e.select(col("vec_id") +: lit(0).as("cid") +:
-        books.zipWithIndex.map { case (c, sub) => pqCodeCol(s, c, sub) }: _*))
+    pqServe(s, probes, AdcTier.shared(books), e.select(col("vec_id") +:
+      lit(0).as("cid") +: codeCols(s, singleton(books), lit(0)): _*))
   }
 
   private val topkPqSql = {
@@ -1904,87 +1919,15 @@ ORDER BY query_id, rank"""
   }
 
   // ------------------------------------------------------------- IVF-PQ
-  /** The composed billion-scale index: IVF coarse cells bound WHICH
-    * rows are scanned (nprobe/nlist of the corpus, the same derived
-    * nlist = ⌈√N⌉ geometry as [[topkKmeans]]) and PQ/ADC bounds WHAT each scanned
-    * row costs (m table lookups instead of an O(dim) dot) — the two
-    * savings multiply, which is exactly the FAISS IVF-PQ layout.
-    * Declared simplification vs production IVF-PQ: codes quantize the
-    * raw vectors with one shared codebook rather than per-cell
-    * residuals (residual PQ needs nlist codebooks; the plan shape —
-    * probe equi-join, then lookup-only ranking — is identical).
-    * Per-(query, probe) ADC tables ride the broadcast probe join
-    * ([[adcProbed]]), so candidate ranking stays a codegen'd
-    * projection; the corpus is touched once for encode and once for
-    * the probed cells. */
-  /** Coarse centroids AND all m PQ codebooks, Lloyd-iterated in ONE
-    * fused pass per iteration: a single corpus scan assigns the coarse
-    * cell plus the m subspace codes (m+1 argmin projection columns),
-    * and every mean — coarse (keyed which=m) and subspace (which=sub)
-    * — comes out of one (which, cid, pos) aggregation. Versus training
-    * the two models separately this halves the sequential driver
-    * rounds (3 jobs vs 6): locally the per-pass cost dominates and the
-    * wall time is ~flat (3.2-3.6 s at sf0.1), but on a real cluster
-    * each eliminated round saves a full job-scheduling latency — the
-    * term that grows with cluster size. Each (which, cid, pos) group's
-    * decimal sum sees exactly the addends the separate loops fed it,
-    * so BOTH trajectories — and the oracle — are bit-identical. */
-  private def ivfPqModels(s: SparkSession, d: String)
-      : (Seq[(Int, Seq[Double])], Seq[Seq[(Int, Seq[Double])]]) =
-    CachePool.memoized(("ivfPqModels", d)) { ivfPqTrain(s,
-      embDouble(s, d).select(col("vec_id"), col("v"))) }
-  private def ivfPqTrain(s: SparkSession, e0: DataFrame)
-      : (Seq[(Int, Seq[Double])], Seq[Seq[(Int, Seq[Double])]]) = {
-    import s.implicits._
-    val e = e0.cache()
-    val nl = nlistOf(e.count())
-    val init = e.filter(col("vec_id") < math.max(nl, PqK))
-      .select(col("vec_id").cast("int"), col("v")).as[(Int, Seq[Double])]
-      .collect().toSeq.sortBy(_._1)
-    val subCol = (col("pos") / PqW).cast("int")
-    def regroup(rows: Seq[(Int, Int, Int, Double)], which: Int) =
-      rows.filter(_._1 == which).groupBy(_._2).map { case (cid, xs) =>
-        (cid, xs.sortBy(_._3).map(_._4).toSeq) }.toSeq.sortBy(_._1)
-    val out = (1 to KmIters).foldLeft((
-      init.take(nl),
-      (0 until PqM).map { sub => init.take(PqK).map { case (cid, v) =>
-        (cid, v.slice(sub * PqW, (sub + 1) * PqW)) } }: Seq[Seq[(Int, Seq[Double])]]
-    )) { case ((coarse, books), _) =>
-      val rows = e
-        .select(col("v") +: cellCol(s, coarse).as("ccid") +:
-          books.zipWithIndex.map { case (c, sub) => pqCodeCol(s, c, sub) }: _*)
-        .select(posexplode(col("v")).as(Seq("pos", "x")) +: col("ccid") +:
-          (0 until PqM).map(i => col(s"code$i")): _*)
-        .select(col("pos"), col("x"), col("ccid"),
-          element_at(array((0 until PqM).map(i => col(s"code$i")): _*),
-            subCol + 1).as("scid"))
-        .select(explode(array(
-          struct(lit(PqM).as("which"), col("ccid").as("cid"),
-            col("pos"), col("x")),
-          struct(subCol.as("which"), col("scid").as("cid"),
-            col("pos"), col("x")))).as("r"))
-        .select(col("r.which"), col("r.cid"), col("r.pos"), col("r.x"))
-        .groupBy("which", "cid", "pos")
-        .agg((sum(col("x").cast("decimal(25,15)")).cast("double") /
-          count(lit(1))).as("m"))
-        .as[(Int, Int, Int, Double)].collect().toSeq
-      (regroup(rows, PqM), (0 until PqM).map(regroup(rows, _)))
-    }
-    e.unpersist()
-    out
-  }
-
   /** How one IVF-PQ tier forms its ADC tables: `qb` is the query-side
     * vector each probed (query, probe_cid) row folds over, and `groups`
     * (one family per subspace) keyed by `gid` holds the codebooks. A
     * shared book is the singleton group 0; per-cell families key on
     * the probed cell. */
   private[graft] final case class AdcTier(qb: Column,
-      groups: Seq[Seq[(Int, Seq[(Int, Seq[Double])])]], gid: Column)
+      groups: Seq[Family], gid: Column)
 
   private[graft] object AdcTier {
-    private def singleton(books: Seq[Seq[(Int, Seq[Double])]]) =
-      books.map(b => Seq((0, b)))
     /** q − c_probe: the probed cell's centroid from the broadcast
       * quantizer (`graft_cell_vec`), subtracted by `graft_sub`. */
     private def residualQuery(s: SparkSession,
@@ -2001,7 +1944,7 @@ ORDER BY query_id, rank"""
       AdcTier(residualQuery(s, cents), singleton(books), lit(0))
     /** Residual PQ with the probed cell's own books. */
     def perCell(s: SparkSession, cents: Seq[(Int, Seq[Double])],
-        groups: Seq[Seq[(Int, Seq[(Int, Seq[Double])])]]): AdcTier =
+        groups: Seq[Family]): AdcTier =
       AdcTier(residualQuery(s, cents), groups, col("probe_cid"))
   }
 
@@ -2062,9 +2005,24 @@ ORDER BY query_id, rank"""
       .reduce(_.unionByName(_))
   }
 
+  /** The composed billion-scale index: IVF coarse cells bound WHICH
+    * rows are scanned (nprobe/nlist of the corpus, the same derived
+    * nlist = ⌈√N⌉ geometry as [[topkKmeans]]) and PQ/ADC bounds WHAT each scanned
+    * row costs (m table lookups instead of an O(dim) dot) — the two
+    * savings multiply, which is exactly the FAISS IVF-PQ layout.
+    * Declared simplification vs production IVF-PQ: codes quantize the
+    * raw vectors with one shared codebook rather than per-cell
+    * residuals (residual PQ needs nlist codebooks; the plan shape —
+    * probe equi-join, then lookup-only ranking — is identical).
+    * Per-(query, probe) ADC tables ride the broadcast probe join
+    * ([[adcProbed]]), so candidate ranking stays a codegen'd
+    * projection; the corpus is touched once for encode and once for
+    * the probed cells. The coarse quantizer and the codebooks are the
+    * [[corpusCentroids]] and [[pqCodebooks]] memos every other tier
+    * shares. */
   private val topkIvfPq: Q = (s, d) => {
     val e = embDouble(s, d).select(col("vec_id"), col("v"))
-    val (cents, books) = ivfPqModels(s, d)
+    val (cents, books) = (corpusCentroids(s, d), pqCodebooks(s, d))
     pqServe(s, probeList(s, e, cents), AdcTier.shared(books),
       encodePq(e, cents, books))
   }
@@ -2087,7 +2045,7 @@ ORDER BY query_id, rank"""
       // rewrite the code table the trainer already published
       if (!s.catalog.tableExists(table)) {
         val e = embDouble(s, d).select(col("vec_id"), col("v"))
-        val (cents, books) = ivfPqModels(s, d)
+        val (cents, books) = (corpusCentroids(s, d), pqCodebooks(s, d))
         graft.sources.BucketedStore.write(
           encodePq(e, cents, books), table, "cid", cents.length)
       }
@@ -2120,7 +2078,7 @@ ORDER BY query_id, rank"""
       // after a model drop (ModelStore's atomic-swap discipline).
       if (!(s.catalog.tableExists(coarseT) &&
           s.catalog.tableExists(booksT))) {
-        val (cents, books) = ivfPqModels(s, d)
+        val (cents, books) = (corpusCentroids(s, d), pqCodebooks(s, d))
         graft.sources.ModelStore.write(centDf(s, cents), coarseT)
         graft.sources.ModelStore.write(booksDf(s, books), booksT)
       }
@@ -2133,23 +2091,18 @@ ORDER BY query_id, rank"""
     * from these equal the trainer's). */
   private[graft] def storedPqModels(s: SparkSession, d: String)
       : (Seq[(Int, Seq[Double])], Seq[Seq[(Int, Seq[Double])]]) = {
-    import s.implicits._
     val (coarseT, booksT) = pqModelTables(s, d)
-    val cents = graft.sources.ModelStore.read(s, coarseT)
-      .as[(Int, Int, Double)].collect().toSeq
-      .groupBy(_._1).map { case (cid, xs) =>
-        (cid, xs.sortBy(_._2).map(_._3).toSeq) }.toSeq.sortBy(_._1)
-    (cents, booksFrom(s, booksT))
+    (centsFrom(s, coarseT), booksFrom(s, booksT))
   }
 
   /** Round-trip readout of the persisted PQ models — subspace
     * codebooks as which ∈ 0..[[PqM]]−1, the coarse quantizer as
-    * which = [[PqM]] (the joint trainer's own tagging convention). The
+    * which = [[PqM]] (one past the last subspace). The
     * oracle re-derives every value by replaying the per-subspace and
     * coarse Lloyd chains in SQL, so a hash match proves
     * train → parquet → catalog read loses nothing. Values round to 6
     * (the [[centroidStore]] cross-engine DECIMAL→DOUBLE ulp caveat);
-    * bit-exact table-vs-memo is pinned in Round17Spec instead. */
+    * bit-exact table-vs-memo is pinned in AnnPqSpec instead. */
   private val pqModelStore: Q = (s, d) => {
     val (coarseT, booksT) = pqModelTables(s, d)
     val coarse = graft.sources.ModelStore.read(s, coarseT)
@@ -2226,8 +2179,8 @@ ORDER BY which, cid, dim"""
     * init (first-nlist seed), identical Lloyd rounds, identical
     * exact-decimal mean updates — so the stored codes' cells are the
     * pointer generation's cells; the verbatim `ann_topk_ivfpq` oracle
-    * is the proof (a pointer left at a pre-fold generation, or any
-    * drift between the two trainers, hash-mismatches). With
+    * is the proof (a pointer left at a pre-fold generation
+    * hash-mismatches). With
     * [[pqModelTables]]' ensure-trained read side, every input here is
     * a catalog read. */
   private val topkIvfPqPtr: Q = (s, d) => {
@@ -2331,7 +2284,7 @@ ORDER BY query_id, rank"""
       : (Seq[(Int, Seq[Double])], Seq[Seq[(Int, Seq[Double])]],
          String, String) = {
     val ptr = graft.sources.ModelStore.read(s, ptrTable).collect()(0)
-    (centsFromPtrRow(s, ptr), booksFrom(s, ptr.getString(6)),
+    (centsFrom(s, ptr.getString(3)), booksFrom(s, ptr.getString(6)),
       ptr.getString(4), ptr.getString(5))
   }
 
@@ -2354,7 +2307,7 @@ ORDER BY query_id, rank"""
       : (Seq[(Int, Seq[Double])], Seq[Seq[(Int, Seq[Double])]],
          String, String) = {
     val ptr = graft.sources.ModelStore.read(s, ptrTable).collect()(0)
-    (centsFromPtrRow(s, ptr), booksFrom(s, ptr.getString(9)),
+    (centsFrom(s, ptr.getString(3)), booksFrom(s, ptr.getString(9)),
       ptr.getString(7), ptr.getString(8))
   }
 
@@ -2366,9 +2319,9 @@ ORDER BY query_id, rank"""
     * [[graft.streaming.StreamingEvents.annServePqrcPtrStreamAt]]). */
   private[graft] def ptrPqrcModelAt(s: SparkSession, ptrTable: String)
       : (Seq[(Int, Seq[Double])],
-         Seq[Seq[(Int, Seq[(Int, Seq[Double])])]], String, String) = {
+         Seq[Family], String, String) = {
     val ptr = graft.sources.ModelStore.read(s, ptrTable).collect()(0)
-    (centsFromPtrRow(s, ptr), cellBooksFrom(s, ptr.getString(12)),
+    (centsFrom(s, ptr.getString(3)), cellBooksFrom(s, ptr.getString(12)),
       ptr.getString(10), ptr.getString(11))
   }
 
@@ -2445,7 +2398,7 @@ ORDER BY query_id, rank"""
   /** The corpus-wide residual codebooks (shared family — the per-cell
     * variant is [[pqrCellBooks]]), trained once per (session, dataset)
     * on the residual relation against the corpus quantizer. */
-  private def pqrBooks(s: SparkSession, d: String)
+  private[graft] def pqrBooks(s: SparkSession, d: String)
       : Seq[Seq[(Int, Seq[Double])]] =
     CachePool.memoized(("pqResidualBooks", d)) {
       val resid = CachePool.cached(
@@ -2458,11 +2411,9 @@ ORDER BY query_id, rank"""
     * cell from `cents`, subspace codes of the RESIDUAL r = v − c_cid
     * against `books`. The residual analog of [[encodePq]]. */
   private def encodePqr(e: DataFrame, cents: Seq[(Int, Seq[Double])],
-      books: Seq[Seq[(Int, Seq[Double])]]): DataFrame = {
-    val s = e.sparkSession
+      books: Seq[Seq[(Int, Seq[Double])]]): DataFrame =
     residualOf(e, cents).select(col("vec_id") +: col("cid") +:
-      books.zipWithIndex.map { case (c, sub) => pqCodeCol(s, c, sub) }: _*)
-  }
+      codeCols(e.sparkSession, singleton(books), lit(0)): _*)
 
   private val topkIvfPqResidual: Q = (s, d) => {
     val e = embDouble(s, d).select(col("vec_id"), col("v"))
@@ -2499,10 +2450,9 @@ ORDER BY query_id, rank"""
 
   /** Serving from the STORED residual codes and catalog models: the
     * coarse quantizer loads from its [[pqModelTables]] table (the
-    * joint trainer walks the identical Lloyd trajectory as the
-    * residual face's [[corpusCentroids]] memo — same init, same
-    * decimal means — so the stored coarse model IS the residual
-    * tier's quantizer), the residual codebooks from [[pqrTables]],
+    * [[corpusCentroids]] memo written to the catalog, so the stored
+    * coarse model IS the residual tier's quantizer), the residual
+    * codebooks from [[pqrTables]],
     * and candidates from the persisted code table's probed buckets.
     * Same oracle text as `ann_topk_ivfpq_residual`: the hash match
     * proves the persisted residual layout serves the in-plan
@@ -2534,22 +2484,12 @@ ORDER BY query_id, rank"""
     * the model is nlist·PqM·PqK·PqW doubles = O(√N·dim·PqK) — it
     * GROWS with the corpus (~0.5 GB broadcast at 10⁹ vectors), which
     * is exactly why FAISS defaults to the shared family; both tiers
-    * are registered and [[pqrcRecallEval]] prices the delta. */
-  private def pqrCellCodeCol(s: SparkSession,
-      groups: Seq[(Int, Seq[(Int, Seq[Double])])], sub: Int): Column =
-    graft.functions.GroupedCentroidModels.nearestInGroup(
-        s, groups, subv(col("v"), sub), col("cid"))
-      .getField("cid").as(s"code$sub")
-
-  /** All m per-cell codebook FAMILIES, Lloyd-iterated together over
-    * the residual relation — the grouped analog of [[pqTrain]]: each
-    * iteration is one pass (m grouped-argmin projection columns) and
-    * one (cid, sub, code, pos) decimal-mean aggregation, so Spark and
-    * the oracle walk bit-identical per-cell trajectories.
+    * are registered and [[pqrcRecallEval]] prices the delta.
     *
-    * Driver round-trip, priced (VERDICT r15 #6): each iteration
-    * collects the aggregated mean relation — the MODEL, never data —
-    * because the next iteration's assignment is the broadcast
+    * Training is [[lloyd]] keyed by `col("cid")`, seeded per cell.
+    * Driver round-trip, priced (VERDICT r15 #6): each round collects
+    * the aggregated mean relation — the MODEL, never data — because
+    * the next round's assignment is the broadcast
     * [[graft.functions.NearestInGroup]] expression, whose family must
     * be driver-built before analysis. Measured at sf0.1: 46,080
     * (cell, sub, code, pos) rows ≈ 1.1 MB raw per iteration (init
@@ -2565,46 +2505,23 @@ ORDER BY query_id, rank"""
     * model still fits the driver. Past that point the right move is
     * sharding the training itself (per-cell-range jobs), not
     * rearranging this loop. */
-  private def pqrCellTrain(s: SparkSession, rsd: DataFrame)
-      : Seq[Seq[(Int, Seq[(Int, Seq[Double])])]] = {
+  private def pqrCellTrain(s: SparkSession, rsd: DataFrame): Seq[Family] = {
     import s.implicits._
     val w = Window.partitionBy("cid").orderBy("vec_id")
-    val initRows = rsd.withColumn("rn", row_number().over(w))
+    val init = rsd.withColumn("rn", row_number().over(w))
       .filter(col("rn") <= PqK)
       .select(col("cid"), (col("rn") - 1).cast("int").as("code"), col("v"))
       .as[(Int, Int, Seq[Double])].collect().toSeq
-    val init: Seq[Seq[(Int, Seq[(Int, Seq[Double])])]] = (0 until PqM).map { sub =>
-      initRows.groupBy(_._1).map { case (cid, xs) =>
-        (cid, xs.sortBy(_._2).map { case (_, code, v) =>
-          (code, v.slice(sub * PqW, (sub + 1) * PqW)) })
-      }.toSeq.sortBy(_._1)
-    }
-    (1 to KmIters).foldLeft(init) { (groups, _) =>
-      val subCol = (col("pos") / PqW).cast("int")
-      val rows = rsd
-        .select(col("cid") +: col("v") +:
-          groups.zipWithIndex.map { case (g, sub) => pqrCellCodeCol(s, g, sub) }: _*)
-        .select(col("cid"), posexplode(col("v")).as(Seq("pos", "x")),
-          element_at(array((0 until PqM).map(i => col(s"code$i")): _*),
-            subCol + 1).as("code"))
-        .groupBy(col("cid"), subCol.as("sub"), col("code"), col("pos"))
-        .agg((sum(col("x").cast("decimal(25,15)")).cast("double") /
-          count(lit(1))).as("m"))
-        .as[(Int, Int, Int, Int, Double)].collect().toSeq
-      (0 until PqM).map { sub =>
-        rows.filter(_._2 == sub).groupBy(_._1).map { case (cid, xs) =>
-          (cid, xs.groupBy(_._3).map { case (code, ys) =>
-            (code, ys.sortBy(_._4).map(_._5).toSeq) }.toSeq.sortBy(_._1))
-        }.toSeq.sortBy(_._1)
-      }
-    }
+      .groupBy(_._1).toSeq.sortBy(_._1).map { case (cell, xs) =>
+        (cell, xs.sortBy(_._2).map { case (_, code, v) => (code, v) }) }
+    lloyd(s, rsd, col("cid"), split(init))
   }
 
   /** The per-cell codebook families, trained once per (session,
     * dataset) on the residual relation against the corpus quantizer
     * — the per-cell sibling of [[pqrBooks]]. */
-  private def pqrCellBooks(s: SparkSession, d: String)
-      : Seq[Seq[(Int, Seq[(Int, Seq[Double])])]] =
+  private[graft] def pqrCellBooks(s: SparkSession, d: String)
+      : Seq[Family] =
     CachePool.memoized(("pqrCellBooks", d)) {
       val rsd = CachePool.cached(
         residualOf(embDouble(s, d).select(col("vec_id"), col("v")),
@@ -2621,11 +2538,9 @@ ORDER BY query_id, rank"""
     * (the upsert path) inherit that loud-fail and remediate by
     * reclustering. */
   private def encodePqrCell(e: DataFrame, cents: Seq[(Int, Seq[Double])],
-      groups: Seq[Seq[(Int, Seq[(Int, Seq[Double])])]]): DataFrame = {
-    val s = e.sparkSession
+      groups: Seq[Family]): DataFrame =
     residualOf(e, cents).select(col("vec_id") +: col("cid") +:
-      groups.zipWithIndex.map { case (g, sub) => pqrCellCodeCol(s, g, sub) }: _*)
-  }
+      codeCols(e.sparkSession, groups, col("cid")): _*)
 
   private val topkIvfPqrCell: Q = (s, d) => {
     val e = embDouble(s, d).select(col("vec_id"), col("v"))
@@ -2648,7 +2563,7 @@ ORDER BY query_id, rank"""
     * model relation — [[booksDf]] with the owning cell as an extra
     * key column. */
   private def cellBooksDf(s: SparkSession,
-      groups: Seq[Seq[(Int, Seq[(Int, Seq[Double])])]]): DataFrame = {
+      groups: Seq[Family]): DataFrame = {
     import s.implicits._
     groups.zipWithIndex.flatMap { case (cells, sub) =>
       cells.flatMap { case (cell, book) =>
@@ -2660,18 +2575,10 @@ ORDER BY query_id, rank"""
 
   /** Reassemble [[cellBooksDf]]'s relation back into the per-cell
     * families — the serving job's catalog read (parquet doubles
-    * round-trip bit-exactly; Round19Spec pins table == memo). */
+    * round-trip bit-exactly; AnnPqSpec pins table == memo). */
   private[graft] def cellBooksFrom(s: SparkSession, table: String)
-      : Seq[Seq[(Int, Seq[(Int, Seq[Double])])]] = {
-    import s.implicits._
-    val rows = graft.sources.ModelStore.read(s, table)
-      .as[(Int, Int, Int, Int, Double)].collect().toSeq
-    (0 until PqM).map { sub =>
-      rows.filter(_._1 == sub).groupBy(_._2).map { case (cell, xs) =>
-        (cell, xs.groupBy(_._3).map { case (code, ys) =>
-          (code, ys.sortBy(_._4).map(_._5).toSeq) }.toSeq.sortBy(_._1))
-      }.toSeq.sortBy(_._1) }
-  }
+      : Seq[Family] =
+    modelFrom(graft.sources.ModelStore.read(s, table), PqM)
 
   /** The per-cell tier PERSISTED: families as a ModelStore table,
     * per-cell codes bucketed by cid — ensure-trained like
@@ -2697,7 +2604,7 @@ ORDER BY query_id, rank"""
 
   /** Serving from the STORED per-cell codes and catalog models — the
     * per-cell sibling of [[topkIvfPqrStored]]: coarse quantizer from
-    * [[pqModelTables]] (identical Lloyd trajectory), families from
+    * [[pqModelTables]] (the stored [[corpusCentroids]]), families from
     * [[pqrcTables]], candidates from the persisted code table's
     * probed buckets only. Same oracle text as
     * `ann_topk_ivfpq_residual_cell`: the hash match proves the

@@ -77,8 +77,7 @@ object SummaryRewrite {
         min(col(m)).as(s"graft_min_$m"), max(col(m)).as(s"graft_max_$m"))
     } :+ count(lit(1)).as("graft_cnt")
     val ds = new java.io.File(sfDir).getName.replaceAll("[^A-Za-z0-9._-]", "_")
-    val path =
-      s"/tmp/graft-scratch/${spark.sparkContext.applicationId}/mv-$base-$ds"
+    val path = s"${graft.GraftSession.scratch(spark)}/mv-$base-$ds"
     if (!new java.io.File(path).exists())
       src.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
         .write.mode("overwrite").parquet(path)

@@ -89,9 +89,10 @@ SELECT d.tier, count(*) AS n_events,
 FROM fact f JOIN dim d USING (user_id)
 GROUP BY d.tier ORDER BY d.tier"""
 
-  /** Scratch path scoped by (Spark application, dataset): concurrent
-    * runs on one host cannot race each other's overwrite-vs-read (each
-    * app writes under its own applicationId), and within an app each
+  /** Scratch path scoped by (Spark application, dataset) under
+    * [[graft.GraftSession.scratch]]: concurrent runs on one host cannot
+    * race each other's overwrite-vs-read (each app writes under its own
+    * applicationId, removed at JVM exit), and within an app each
     * (query, dataset) pair materializes ONCE — repeat constructions
     * (bench sweeps, PlanHygieneSpec's whole-surface sweep) reuse the
     * first write instead of re-running the side effect. */
@@ -99,8 +100,7 @@ GROUP BY d.tier ORDER BY d.tier"""
       write: String => Unit): String = {
     val ds = new org.apache.hadoop.fs.Path(d).getName
       .replaceAll("[^A-Za-z0-9._-]", "_")
-    val path =
-      s"/tmp/graft-scratch/${s.sparkContext.applicationId}/$name-$ds"
+    val path = s"${graft.GraftSession.scratch(s)}/$name-$ds"
     // Hadoop FileSystem resolved from the path (the Compactor idiom):
     // the existence probe works on local disk, HDFS, or an object store
     // alike — scratch is not inherently host-local at cluster scale.

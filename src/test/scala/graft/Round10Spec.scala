@@ -97,8 +97,7 @@ class Round10Spec extends SparkSpec {
     // the historical read must equal the pre-CDC base snapshot exactly
     InfraQueries.queries("infra_time_travel")(spark, Sf).collect()
     val ds = new org.apache.hadoop.fs.Path(Sf).getName
-    val root = s"/tmp/graft-scratch/${spark.sparkContext.applicationId}" +
-      s"/timetravel-$ds"
+    val root = s"${GraftSession.scratch(spark)}/timetravel-$ds"
     val v1 = InfraQueries.snapshotAt(spark, root, 1L)
       .agg(count(lit(1)), sum("n_chars")).head()
     val base = Tables.documents(spark, Sf)

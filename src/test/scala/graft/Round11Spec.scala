@@ -347,8 +347,7 @@ class Round11Spec extends SparkSpec {
     // but here we also check against the store on disk)
     rows.foreach(r => assert(r.getBoolean(3), "compaction did not compact"))
     val ds = new org.apache.hadoop.fs.Path(Sf).getName
-    val root = s"/tmp/graft-scratch/${spark.sparkContext.applicationId}" +
-      s"/compact-events-$ds"
+    val root = s"${GraftSession.scratch(spark)}/compact-events-$ds"
     val files = new java.io.File(s"$root/data")
       .listFiles().count(_.getName.endsWith(".parquet"))
     assert(files < 64, s"store still has $files files")

@@ -351,15 +351,6 @@ class Round18Spec extends SparkSpec {
     assert(got == Seq(0.75, 1.0))
   }
 
-  test("residual IVF-PQ: every query answers from its probed cells with 5 ranked neighbors") {
-    val out = SparkEntry.queries("ann_topk_ivfpq_residual")(spark, Sf)
-      .collect()
-    assert(out.length == 50)
-    assert(out.map(_.getLong(0)).distinct.length == 10)
-    // ADC distances are finite (no candidate ever hit an empty slot)
-    assert(out.forall(r => !r.getDouble(3).isNaN && !r.getDouble(3).isInfinite))
-  }
-
   test("cycle code tables: a probe opens only its cells' buckets of the live generation") {
     // the 100 TB property of the generation-scoped PQ layout: the code
     // tables are bucketed by cid, so stored-codes serving reads the

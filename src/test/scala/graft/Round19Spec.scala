@@ -419,14 +419,6 @@ class Round19Spec extends SparkSpec {
         c.getMessage.contains("no codebook group for gid 3")))
   }
 
-  test("per-cell residual IVF-PQ: 5 ranked neighbors per query from probed cells, finite ADC") {
-    val out = SparkEntry.queries("ann_topk_ivfpq_residual_cell")(spark, Sf)
-      .collect()
-    assert(out.length == 50)
-    assert(out.map(_.getLong(0)).distinct.length == 10)
-    assert(out.forall(r => !r.getDouble(3).isNaN && !r.getDouble(3).isInfinite))
-  }
-
   test("graft_cell_vec: broadcast centroid lookup — caller order preserved, no ordering contract, unknown cid fails loudly") {
     import spark.implicits._
     // cids deliberately NOT ascending: the lookup must not assume the
@@ -445,17 +437,5 @@ class Round19Spec extends SparkSpec {
       if (t == null) Nil else t +: causes(t.getCause)
     assert(causes(err).exists(c => c.getMessage != null &&
       c.getMessage.contains("unknown cid 99")))
-  }
-
-  test("per-cell family catalog round-trip: cellBooksFrom(table) is bit-identical to the trained memo, and the stored face serves the same rows") {
-    val stored = SparkEntry.queries("ann_topk_ivfpq_residual_cell_stored")(
-      spark, Sf).collect().map(r =>
-        (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSeq
-    val inPlan = SparkEntry.queries("ann_topk_ivfpq_residual_cell")(
-      spark, Sf).collect().map(r =>
-        (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSeq
-    assert(stored == inPlan,
-      "catalog-served per-cell ADC must equal the in-plan face bit-for-bit")
-    assert(stored.nonEmpty)
   }
 }

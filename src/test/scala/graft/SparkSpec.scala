@@ -28,7 +28,7 @@ object SparkSpec {
   lazy val session: SparkSession = GraftSession.local(4, tempDir("graft-warehouse"))
 
   private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[Path]
-  sys.addShutdownHook(tempDirs.forEach(deleteRecursively))
+  sys.addShutdownHook(tempDirs.forEach(GraftSession.deleteRecursively))
 
   /** A fresh directory under the system temp dir, deleted with
     * everything in it when the JVM exits: the suite's scratch roots
@@ -38,12 +38,4 @@ object SparkSpec {
     tempDirs.add(dir)
     dir.toString
   }
-
-  private def deleteRecursively(root: Path): Unit =
-    if (Files.exists(root)) {
-      val paths = Files.walk(root)
-      try paths.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(p => Files.deleteIfExists(p))
-      finally paths.close()
-    }
 }
