@@ -828,26 +828,20 @@ object CentroidModels {
   /** The argmin (d, cid) struct of `v` over `cents` — the broadcast
     * replacement for `least()` over k literal structs. */
   def nearest(s: SparkSession, cents: Seq[(Int, Seq[Double])],
-      v: Column): Column = {
-    VectorExpressions.register(s)
+      v: Column): Column =
     call_function("graft_cell_nearest", v, lit(idFor(s, cents)))
-  }
 
   /** The nprobe nearest cids of `v` over `cents`, in (d, cid) order —
     * the broadcast replacement for `slice(array_sort(...), 1, np)`. */
   def probes(s: SparkSession, cents: Seq[(Int, Seq[Double])],
-      v: Column, nprobe: Int): Column = {
-    VectorExpressions.register(s)
+      v: Column, nprobe: Int): Column =
     call_function("graft_probe_cells", v, lit(idFor(s, cents)), lit(nprobe))
-  }
 
   /** The centroid VECTOR of `cid` — the broadcast replacement for a
     * literal cid→array map (O(nlist·dim) plan nodes vs one). */
   def cellVec(s: SparkSession, cents: Seq[(Int, Seq[Double])],
-      cid: Column): Column = {
-    VectorExpressions.register(s)
+      cid: Column): Column =
     call_function("graft_cell_vec", cid, lit(idFor(s, cents)))
-  }
 }
 
 /** Registry for [[GroupedCentroidModel]] families — the per-cell
@@ -879,18 +873,14 @@ object GroupedCentroidModels {
     * (gid → cid-ascending codebook) family; one broadcast total. */
   def nearestInGroup(s: SparkSession,
       groups: Seq[(Int, Seq[(Int, Seq[Double])])],
-      v: Column, gid: Column): Column = {
-    VectorExpressions.register(s)
+      v: Column, gid: Column): Column =
     call_function("graft_group_nearest", v, gid, lit(idFor(s, groups)))
-  }
 
   /** The nslots-slot ADC table of `v` against group `gid`'s own
     * codebook — the ADC serving projection of every PQ tier. */
   def adcTable(s: SparkSession,
       groups: Seq[(Int, Seq[(Int, Seq[Double])])],
-      v: Column, gid: Column, nslots: Int): Column = {
-    VectorExpressions.register(s)
+      v: Column, gid: Column, nslots: Int): Column =
     call_function("graft_group_adc", v, gid, lit(idFor(s, groups)),
       lit(nslots))
-  }
 }

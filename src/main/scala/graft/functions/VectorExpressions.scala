@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -381,105 +381,14 @@ case class VectorDiff(left: Expression, right: Expression)
   override def prettyName: String = "graft_sub"
 }
 
-object VectorExpressions {
-  /** Idempotently register graft_dot in the session's function registry
-    * so `expr("graft_dot(a, b)")` resolves. Belt-and-braces for
-    * sessions built without [[GraftExtensions]]; a no-op overwrite
-    * otherwise. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_dot"),
-      (children: Seq[Expression]) => DotProduct(children(0), children(1)): Expression,
-      "internal")
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_intersect"),
-      (children: Seq[Expression]) =>
-        SortedIntersectCount(children(0), children(1)): Expression,
-      "internal")
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_count_in"),
-      (children: Seq[Expression]) => CountInSet(children(0), children(1)): Expression,
-      "internal")
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_sum_len"),
-      (children: Seq[Expression]) => SumStringLength(children(0)): Expression,
-      "internal")
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_sub"),
-      (children: Seq[Expression]) => VectorDiff(children(0), children(1)): Expression,
-      "internal")
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_cosine"),
-      (children: Seq[Expression]) =>
-        CosineSimilarity(children(0), children(1)): Expression,
-      "internal")
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_top_freq"),
-      (children: Seq[Expression]) => TopTokenFreq(children(0)): Expression,
-      "internal")
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_dup_bigrams"),
-      (children: Seq[Expression]) => DupBigramCount(children(0)): Expression,
-      "internal")
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_gram_h60"),
-      (children: Seq[Expression]) =>
-        GramHash60(children(0), children(1)): Expression,
-      "internal")
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_win_min"),
-      (children: Seq[Expression]) =>
-        WindowMin(children(0), children(1)): Expression,
-      "internal")
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_bfs_hops"),
-      (children: Seq[Expression]) =>
-        BfsHops(children(0), children(1), children(2), children(3)): Expression,
-      "internal")
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_cell_nearest"),
-      (children: Seq[Expression]) => {
-        val id = CentroidModels.litId(children(1))
-        NearestCentroid(children(0), id, CentroidModels.bcFor(id)): Expression
-      }, "internal")
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_probe_cells"),
-      (children: Seq[Expression]) => {
-        val id = CentroidModels.litId(children(1))
-        ProbeCells(children(0), id, CentroidModels.litInt(children(2)),
-          CentroidModels.bcFor(id)): Expression
-      }, "internal")
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_group_nearest"),
-      (children: Seq[Expression]) => {
-        val id = CentroidModels.litId(children(2))
-        NearestInGroup(children(0), children(1), id,
-          GroupedCentroidModels.bcFor(id)): Expression
-      }, "internal")
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_cell_vec"),
-      (children: Seq[Expression]) => {
-        val id = CentroidModels.litId(children(1))
-        CellVector(children(0), id, CentroidModels.bcFor(id)): Expression
-      }, "internal")
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_group_adc"),
-      (children: Seq[Expression]) => {
-        val id = CentroidModels.litId(children(2))
-        GroupAdcTable(children(0), children(1), id,
-          CentroidModels.litInt(children(3)),
-          GroupedCentroidModels.bcFor(id)): Expression
-      }, "internal")
-  }
-}
-
 /** Build-time injection of the graft function library — the idiomatic
   * deployment path for a Spark-native library: users add
   * `spark.sql.extensions=graft.functions.GraftExtensions` to their
   * session/cluster conf and `graft_dot`/`graft_intersect` resolve in
   * every session (SQL, DataFrame `expr`, thrift) with no per-session
-  * registration call. The engine's own Bench/Verify/test sessions run
-  * through this path. */
+  * registration call. This is the only place the `graft_*` builders are
+  * listed: every session the engine builds ([[graft.GraftSession]])
+  * sets it, and a session built without it fails to resolve them. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => new graft.plans.SummaryRewriteRule)

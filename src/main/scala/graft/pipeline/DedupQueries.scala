@@ -1,6 +1,5 @@
 package graft.pipeline
 
-import graft.functions.VectorExpressions
 import graft.oracle.OraclePipeline._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -175,7 +174,6 @@ FROM dup GROUP BY md5(text) ORDER BY keeper_doc_id"""
     * re-builds (and re-analyses) the corpus → shingles → candidates →
     * pairs chain. */
   private[graft] def minhashPairs(s: SparkSession, d: String): DataFrame = {
-    VectorExpressions.register(s)
     CachePool.cached(("minhashPairs", d, s.sessionState.conf.numShufflePartitions)) {
       val sh = shingleRows(DupCorpus.corpus(s, d))
       jaccardVerify(minhashCandidates(s, d), shingleSketches(sh), 0.4)
@@ -197,7 +195,6 @@ FROM dup GROUP BY md5(text) ORDER BY keeper_doc_id"""
     * history — reads co-located buckets. Same math as [[minhash]]; the
     * oracle SQL is shared verbatim. */
   private val minhashBucketed: Q = (s, d) => {
-    VectorExpressions.register(s)
     val sh = shingleRows(DupCorpus.corpus(s, d))
     // build-once index (round 18): at 100 TB the banded store is
     // written at ingest, not per dedup pass — memoized per dataset
@@ -265,7 +262,6 @@ WHERE CAST(i.ni AS DOUBLE) / (na.n + nb.n - i.ni) >= 0.4"""
     * all pairs and filters to those touching a new doc — identical sets
     * because band collision is symmetric and the split is disjoint. */
   private val minhashIncremental: Q = (s, d) => {
-    VectorExpressions.register(s)
     val sh = shingleRows(DupCorpus.corpus(s, d))
     val bands = bandRows(sh)
     val isNew = pmod(col("doc_id"), lit(5)) === 0
@@ -430,7 +426,6 @@ ORDER BY doc_a, doc_b"""
     * once per session (memoized); the read-back is the bucketed
     * table, i.e. the layout every later probe rides. */
   private val historyCompact: Q = (s, d) => {
-    VectorExpressions.register(s)
     CachePool.memoized(("mhCompactFace", d)) {
       val (dB, dSk, pT) = ingestTables(d, "_lc")
       Seq(dB, dSk, pT, pairsBaseTable(d, "_lc"))
@@ -459,7 +454,6 @@ ORDER BY doc_id, band_idx"""
   private[graft] def historyStoresExecute(s: SparkSession, d: String,
       ns: String = ""): Unit =
     CachePool.memoized(("mhHistory", d, ns)) {
-      VectorExpressions.register(s)
       val (bandsT, skT) = historyStores(d, ns)
       val sh = shingleRows(DupCorpus.corpus(s, d)
         .filter(pmod(col("doc_id"), lit(5)) =!= 0))
@@ -824,7 +818,6 @@ FROM r$PrIters ORDER BY doc_id"""
     * [[minhash]] (same scale posture); only the denominator and the
     * 0.7 threshold differ. */
   private val containment: Q = (s, d) => {
-    VectorExpressions.register(s)
     val sk = shingleSketches(shingleRows(DupCorpus.corpus(s, d)))
     val c = col("ni").cast("double") / least(col("na"), col("nb"))
     minhashCandidates(s, d)
@@ -1285,7 +1278,6 @@ ORDER BY doc_a, doc_b"""
       .distinct()
   }
   private val ngramJaccard: Q = (s, d) => {
-    VectorExpressions.register(s)
     val sh = shingleRows(DupCorpus.corpus(s, d))
     jaccardVerify(ngramCandidates(s, d), shingleSketches(sh), 0.5)
       .orderBy("doc_a", "doc_b")
@@ -1452,7 +1444,6 @@ ORDER BY b.doc_id"""
     * [[minhashPairs]] (round 18): the registered face and the LSH
     * recall eval both consume it, and the relation is pair-sized. */
   private[graft] def prefixPairs(s: SparkSession, d: String): DataFrame = {
-    VectorExpressions.register(s)
     val sh = shingleRows(DupCorpus.corpus(s, d))
     CachePool.cached(
       jaccardVerify(prefixCandidates(s, d), shingleSketches(sh), 0.5))
@@ -1669,8 +1660,8 @@ FROM agg"""
   /** The composed first-failing-quality-gate predicate over (text,
     * n_chars) — shared by the batch funnel and the streaming ingest
     * face ([[graft.streaming.StreamingEvents]]'s curation), so the
-    * live filter and the nightly report cannot drift. Requires
-    * [[VectorExpressions.register]] on the session. */
+    * live filter and the nightly report cannot drift. Resolves its
+    * `graft_*` calls through [[graft.functions.GraftExtensions]]. */
   private[graft] def qualityFailExpr: Column = {
     val toksC = split(lower(col("text")), " ")
     val nTok = size(toksC).cast("long")
@@ -1685,7 +1676,6 @@ FROM agg"""
       nDist * 10 < nTok * 4
   }
   private val curation: Q = (s, d) => {
-    VectorExpressions.register(s)
     import s.implicits._
     val qualityFail = qualityFailExpr
     val corpus = DupCorpus.corpus(s, d)

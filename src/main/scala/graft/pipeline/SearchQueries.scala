@@ -483,7 +483,6 @@ ORDER BY doc_a, doc_b"""
     * flap cross-engine. */
   val RrfK = 60
   private val hybridRrf: Q = (s, d) => {
-    graft.functions.VectorExpressions.register(s)
     val lexR = bm25(s, d).withColumn("lex_rank", row_number().over(
       Window.orderBy(col("bm25").desc, col("doc_id"))))
     val e = SimilarityQueries.embDouble(s, d).select(col("vec_id"), col("v"))
@@ -698,7 +697,6 @@ ORDER BY rrf DESC, doc_id LIMIT 10"""
   }
 
   private val hybridRrfBatch: Q = (s, d) => {
-    graft.functions.VectorExpressions.register(s)
     val e = SimilarityQueries.embDouble(s, d).select(col("vec_id"), col("v"))
     val q = batchQueryVecs(s, d)
     val wVec = Window.partitionBy("query_id")
@@ -721,7 +719,6 @@ ORDER BY rrf DESC, doc_id LIMIT 10"""
     * reads nprobe/nlist of them. Exactness tradeoff is measured by
     * `search_batch_ivf_recall`. */
   private val hybridRrfBatchIvf: Q = (s, d) => {
-    graft.functions.VectorExpressions.register(s)
     rrfFuse(lexArmBatch(s, d),
       SimilarityQueries.ivfProbeRanks(s, d, batchQueryVecs(s, d), 20))
   }
@@ -739,7 +736,6 @@ ORDER BY rrf DESC, doc_id LIMIT 10"""
     * corpus-trained quantizer). */
   private val hybridRrfStored: Q = (s, d) => {
     import s.implicits._
-    graft.functions.VectorExpressions.register(s)
     searchIndexExecute(s, d)
     SimilarityQueries.reclusterExecute(s, d)
     val qt = broadcast(QueryTerms.flatMap { case (q, ts) => ts.map((q, _)) }

@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import graft.Tables
-import graft.functions.VectorExpressions
 import graft.oracle.OraclePipeline.h60Sql
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -42,7 +41,6 @@ object SimilarityQueries {
     * shuffle partition count (the `Tables` guard's target): a steady
     * call returns the pooled handle without building a plan. */
   private[graft] def embDouble(s: SparkSession, d: String): DataFrame = {
-    VectorExpressions.register(s)
     CachePool.cached(("embDouble", d, s.sessionState.conf.numShufflePartitions)) {
       Tables.embeddings(s, d).select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("v"))
@@ -2388,7 +2386,6 @@ ORDER BY query_id, rank"""
       cents: Seq[(Int, Seq[Double])]): DataFrame = {
     val s = e.sparkSession
     import s.implicits._
-    graft.functions.VectorExpressions.register(s)
     val centDF = cents.toDF("cid", "cv")
     assignCells(e, cents).join(broadcast(centDF), "cid")
       .select(col("vec_id"), col("cid"),

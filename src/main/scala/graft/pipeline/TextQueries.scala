@@ -49,7 +49,6 @@ object TextQueries {
     * stopword list, argmax with (score desc, lang asc) tie-break;
     * all-zero votes → 'und'. */
   private val langid: Q = (s, d) => {
-    graft.functions.VectorExpressions.register(s)
     val docs = Tables.documents(s, d)
     val scored = docs.select(col("doc_id"), col("lang").as("actual_lang"),
       explode(array(Stopwords.map { case (l, sw) =>
@@ -88,7 +87,6 @@ ORDER BY doc_id"""
   /** Per-document quality signals: token counts, average token length,
     * stopword ratio (en), type-token ratio, and a composite score. */
   private val quality: Q = (s, d) => {
-    graft.functions.VectorExpressions.register(s)
     val en = Stopwords.toMap.apply("en")
     val nTok = size(toks).cast("long")
     // codegen'd one-pass total token length (the aggregate/transform
@@ -171,7 +169,6 @@ ORDER BY d.doc_id"""
     * = 7 tokens) are excluded by contract, exactly as the relational
     * build's groupBy never saw them. */
   private val fingerprint: Q = (s, d) => {
-    graft.functions.VectorExpressions.register(s)
     val wins = call_function("graft_win_min",
       call_function("graft_gram_h60", toks, lit(4)), lit(4))
     Tables.documents(s, d)
@@ -312,7 +309,6 @@ ORDER BY lang"""
     * is the point: prep at 100 TB is these operators chained, not a new
     * kind of operator. */
   private val cleanCorpus: Q = (s, d) => {
-    graft.functions.VectorExpressions.register(s)
     val en = Stopwords.toMap.apply("en")
     val nTok = size(toks).cast("long")
     val swRatio = swHits(en).cast("double") / nTok
@@ -707,7 +703,6 @@ FROM docs GROUP BY split, lang ORDER BY split, lang"""
     * registered query binds it to `documents` with a doc_id-slice eval
     * set; specs bind it to planted fixtures. */
   def contamination(docs: DataFrame, isEval: Column): DataFrame = {
-    graft.functions.VectorExpressions.register(docs.sparkSession)
     val evalGrams = grams8(docs.filter(isEval))
       .select(col("doc_id").as("eval_id"), col("gh")).distinct()
     grams8(docs.filter(!isEval))
@@ -1230,7 +1225,6 @@ FROM docs GROUP BY lang ORDER BY lang"""
     * (`top_freq·8 ≤ n_tokens`, `dup_bigrams·16 ≤ n_bigrams`), so no
     * cross-engine double rounding can flap it. */
   private val repetitionFilter: Q = (s, d) => {
-    graft.functions.VectorExpressions.register(s)
     val nTok = size(toks).cast("long")
     val topFreq = call_function("graft_top_freq", toks).cast("long")
     val dupBig = call_function("graft_dup_bigrams", toks).cast("long")
@@ -1882,7 +1876,6 @@ GROUP BY t.doc_id ORDER BY t.doc_id"""
     * unpartitioned window is over that 4-row literal relation, never
     * over data. */
   private val filterFunnel: Q = (s, d) => {
-    graft.functions.VectorExpressions.register(s)
     import s.implicits._
     val nTok = size(toks).cast("long")
     val maxVote = greatest(Stopwords.map { case (_, sw) =>

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.pipeline.{EventQueries, SimilarityQueries}
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
@@ -20,24 +20,115 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
   */
 object StreamingEvents {
 
-  /** Watermark release discipline shared by every buffer-then-replay
-    * face below: a row already beyond the watermark AT ARRIVAL
-    * (event time < watermark in its first micro-batch, i.e. more than
-    * `delay` behind the stream's high-water mark) is DROPPED — the
-    * standard Structured Streaming stateful-operator contract for
-    * beyond-delay lateness. Folding such a row post-hoc would replay
-    * it out of (ts, id) order against state that has already folded
-    * LATER timestamps (a velocity window would count accepted future
-    * peers as trailing history), silently breaking the documented
-    * batch parity. Within-delay rows buffer in `pending` until the
-    * watermark passes their event time, then release in order; the
-    * parity pin therefore holds exactly for within-delay lateness,
-    * matching the batch result on the accepted subset. */
-  private def release[E](prevPending: List[E], incoming: List[E],
-      wm: Long)(ts: E => Long): (List[E], List[E]) = {
-    val fresh = incoming.filter(ts(_) >= wm)
-    (prevPending ++ fresh).partition(ts(_) < wm)
-  }
+  /** State of a [[replay]] face: the events still waiting for the
+    * watermark, and the face's carry over the events already folded. */
+  case class Replayed[E, C](pending: List[E], carry: C)
+
+  /** Buffer, then replay in order: the one stateful skeleton behind
+    * every face that folds a key's events in event-time order, the
+    * custom-state case SURVEY §2.10 reserves for
+    * `flatMapGroupsWithState`. The face selects its rows (with `ts`
+    * as a top-level column under its own `withWatermark`) and passes
+    * how to key them, how to read one as an event `E`, the event's
+    * time, its replay `order`, the initial carry and its `fold`. Per
+    * key and micro-batch the skeleton releases the buffered events
+    * the watermark has passed, sorts them by `order`, folds them
+    * (`fold(key, carry, ready)` returns the new carry and the rows to
+    * emit), keeps the rest buffered and sets an event-time timeout at
+    * the earliest of them, so a key whose traffic stops still drains.
+    *
+    * Watermark contract. Spark filters late rows IN FRONT of the
+    * operator with `ts <= watermark` (`WatermarkSupport`'s
+    * `LessThanOrEqual` predicate, applied by
+    * `FlatMapGroupsWithStateExec` under `EventTimeTimeout`), evaluated
+    * against the PREVIOUS micro-batch's watermark, while
+    * `getCurrentWatermarkMs()` is the current one. A row that passed
+    * Spark's filter but is already behind the current watermark is
+    * dropped here too: folding it would replay it after events with
+    * later timestamps (a velocity window would count accepted future
+    * peers as trailing history) and break the batch parity. Net: a
+    * row more than `delay` behind the stream's high-water mark when it
+    * arrives is dropped, and so is one exactly at a watermark the
+    * previous batch already held; the output equals the batch operator
+    * over the accepted rows. Buffered events release once `ts < watermark`;
+    * one stamped exactly at the watermark waits for the next advance,
+    * which costs a timeout round and never a result (any later row at
+    * that timestamp is dropped by Spark's `<=`). State per key is the
+    * in-delay buffer (delay × the key's rate) plus the carry:
+    * O(active keys) once the buffers drain.
+    *
+    * STATE-SCHEMA BREAK: every replay face used to keep its own
+    * `XxState(pending, …)` case class; they now all keep [[Replayed]],
+    * which changes the flatMapGroupsWithState state encoder schema of
+    * the running-total, clamped-balance, velocity, as-of,
+    * state-history, lifecycle, markov and funnel streams. A stream
+    * restarted from a checkpoint written before that change cannot
+    * restore its state; start it from a fresh checkpoint directory. */
+  private def replay[I, E, C, R](rows: Dataset[I])(key: I => Long,
+      event: I => E)(ts: E => Long, order: Ordering[E], init: C)(
+      fold: (Long, C, List[E]) => (C, Seq[R]))(implicit kEnc: Encoder[Long],
+      sEnc: Encoder[Replayed[E, C]], rEnc: Encoder[R]): Dataset[R] =
+    rows.groupByKey(key).flatMapGroupsWithState[Replayed[E, C], R](
+        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+      (k, it, state) =>
+        val prev = state.getOption.getOrElse(Replayed(Nil, init))
+        val wm = state.getCurrentWatermarkMs()
+        val (ready, pending) = (prev.pending ++
+          it.map(event).filter(ts(_) >= wm)).partition(ts(_) < wm)
+        val (carry, out) = fold(k, prev.carry, ready.sorted(order))
+        state.update(Replayed(pending, carry))
+        if (pending.nonEmpty) state.setTimeoutTimestamp(pending.map(ts).min)
+        out.iterator
+    }
+
+  /** State of a [[closeAtTimeout]] face: the key's latest event time
+    * and its accumulator. */
+  case class Open[A](tsMs: Long, acc: A)
+
+  /** Accumulate, then emit once at close: the one stateful skeleton
+    * behind the serving faces whose answer to a query is folded from
+    * candidates that may arrive over several micro-batches. Per key and
+    * micro-batch `fold(acc, batch)` folds the batch's rows (it must
+    * consume the iterator); the key closes at an event-time timeout of
+    * its latest event time + `delayMs`, never at or before the current
+    * watermark (the `watermark + 1` guard of [[curationStream]]), and
+    * on close `emit(key, acc)` yields its rows once and the state is
+    * removed. State is O(open keys × accumulator).
+    *
+    * STATE-SCHEMA BREAK: the ANN, ADC and hybrid faces used to keep
+    * `AnnState`, `PqState` and `HybState`; they now keep [[Open]],
+    * which changes their flatMapGroupsWithState state encoder schema
+    * (as the earlier `HybState.lex` change from a `Map` to the bounded
+    * top-[[LexKeep]] list did). A stream restarted from a checkpoint
+    * written before that change cannot restore its state; start it
+    * from a fresh checkpoint directory (the stored indexes, models and
+    * pointers are unaffected). */
+  private def closeAtTimeout[I, A, R](rows: Dataset[I], delayMs: Long)(
+      key: I => Long, ts: I => Long, init: A)(fold: (A, Iterator[I]) => A)(
+      emit: (Long, A) => Seq[R])(implicit kEnc: Encoder[Long],
+      sEnc: Encoder[Open[A]], rEnc: Encoder[R]): Dataset[R] =
+    rows.groupByKey(key).flatMapGroupsWithState[Open[A], R](
+        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+      (k, it, state) =>
+        if (state.hasTimedOut) {
+          val out = emit(k, state.get.acc)
+          state.remove()
+          out.iterator
+        } else {
+          val prev = state.getOption.getOrElse(Open(0L, init))
+          var hi = prev.tsMs
+          val acc = fold(prev.acc, it.map { r => hi = math.max(hi, ts(r)); r })
+          state.update(Open(hi, acc))
+          state.setTimeoutTimestamp(math.max(
+            hi + delayMs, state.getCurrentWatermarkMs() + 1))
+          Iterator.empty
+        }
+    }
+
+  /** Spark's `round(x, scale)` on a double (HALF_UP). */
+  private def roundHalfUp(x: Double, scale: Int): Double =
+    java.math.BigDecimal.valueOf(x)
+      .setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue()
 
   /** Event-time tumbling 1-hour aggregate over a streaming `events`
     * relation (needs `ts: timestamp`, `event_type`, `value` columns).
@@ -95,7 +186,6 @@ object StreamingEvents {
     * n_chars columns. */
   def curationStream(docs: DataFrame, delayMs: Long = 7200000L): Dataset[CurRow] = {
     val spark = docs.sparkSession
-    graft.functions.VectorExpressions.register(spark)
     import spark.implicits._
     docs.withWatermark("ts", s"$delayMs milliseconds")
       .select(col("doc_id"), col("ts"), md5(col("text")).as("k"),
@@ -242,7 +332,6 @@ object StreamingEvents {
   }
 
   case class AnnHit(query_id: Long, doc_id: Long, rank: Int, sim: Double)
-  case class AnnState(tsMs: Long, top: List[(Long, Double)])
 
   /** Streaming ANN serving — the ONLINE face of the IVF retrieval
     * tier: query vectors arrive as a stream, probe the PERSISTED
@@ -255,11 +344,10 @@ object StreamingEvents {
     * ‖c‖²−2·q·c expansion and cid tie-break as the
     * batch probe, so the probed set is identical); candidates come
     * from ONE stream-static equi-join against the cell table (the
-    * bucket-pruned scan at rest — stateless); only the top-k
+    * bucket-pruned scan at rest — stateless); only the [[topK]]
     * accumulator is stateful: ≤ k (doc, sim) pairs per open query,
-    * emitted once at `query ts + delay` (watermark+1 guard — the
-    * curation discipline) and removed. State is O(open queries × k),
-    * never candidates. Parity vs the batch
+    * emitted once when the query closes ([[closeAtTimeout]]) and
+    * removed. Parity vs the batch
     * [[graft.pipeline.SimilarityQueries.ivfProbeRanks]] is pinned in
     * StreamingSpec. Needs query_id / ts / qv columns. */
   def annServeStream(queries: DataFrame,
@@ -330,41 +418,39 @@ object StreamingEvents {
       cents: Seq[(Int, Seq[Double])], cells: DataFrame,
       k: Int, delayMs: Long): Dataset[AnnHit] = {
     import s.implicits._
-    graft.functions.VectorExpressions.register(s)
     val nprobe = graft.pipeline.SimilarityQueries.KmProbe
     val probed = queries.withWatermark("ts", s"$delayMs milliseconds")
       .select(col("query_id"), col("ts"), col("qv"),
         explode(graft.functions.CentroidModels.probes(
           s, cents, col("qv"), nprobe)).as("probe_cid"))
-    probed.join(cells,
+    topK(probed.join(cells,
         col("probe_cid") === col("cid") && col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("ts"), col("vec_id").as("doc_id"),
-        call_function("graft_cosine", col("qv"), col("v")).as("sim"))
-      .as[(Long, java.sql.Timestamp, Long, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[AnnState, AnnHit](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (qid, it, state) =>
-          if (state.hasTimedOut) {
-            val out = state.get.top.sortBy { case (doc, sim) => (-sim, doc) }
-              .zipWithIndex.map { case ((doc, sim), i) =>
-                AnnHit(qid, doc, i + 1, sim) }
-            state.remove()
-            out.iterator
-          } else {
-            val prev = state.getOption.getOrElse(AnnState(0L, Nil))
-            var (ts, top) = (prev.tsMs, prev.top)
-            it.foreach { case (_, t, doc, sim) =>
-              ts = math.max(ts, t.getTime)
-              top = ((doc, sim) :: top)
-                .sortBy { case (dc, sm) => (-sm, dc) }.take(k)
-            }
-            state.update(AnnState(ts, top))
-            state.setTimeoutTimestamp(math.max(
-              ts + delayMs, state.getCurrentWatermarkMs() + 1))
-            Iterator.empty
-          }
-      }
+        call_function("graft_cosine", col("qv"), col("v")).as("sim")),
+      k, delayMs)(byCosine)(AnnHit)
+  }
+
+  /** Best cosine first, smaller doc on ties: the batch faces' order. */
+  private val byCosine: ((Long, Double)) => (Double, Long) = {
+    case (doc, sim) => (-sim, doc) }
+
+  /** Per-query top-k over scored candidates `(query_id, ts, doc_id,
+    * score)`: the [[closeAtTimeout]] fold shared by the cosine and the
+    * ADC faces. `rank` orders (doc, score) pairs best first with the
+    * batch faces' tie-break; `hit` builds an output row from (query,
+    * doc, rank, score). State is ≤ k (doc, score) pairs per open
+    * query, never candidates. */
+  private def topK[R](scored: DataFrame, k: Int, delayMs: Long)(
+      rank: ((Long, Double)) => (Double, Long))(
+      hit: (Long, Long, Int, Double) => R)(implicit rEnc: Encoder[R]): Dataset[R] = {
+    val s = scored.sparkSession
+    import s.implicits._
+    closeAtTimeout(scored.as[(Long, java.sql.Timestamp, Long, Double)], delayMs)(
+        _._1, _._2.getTime, List.empty[(Long, Double)])(
+      (top, it) => it.foldLeft(top) { case (t, (_, _, doc, v)) =>
+        ((doc, v) :: t).sortBy(rank).take(k) })(
+      (qid, top) => top.sortBy(rank).zipWithIndex.map { case ((doc, v), i) =>
+        hit(qid, doc, i + 1, v) })
   }
 
   /** Streaming INGEST near-dup filtering — the online face of
@@ -397,7 +483,6 @@ object StreamingEvents {
       s: org.apache.spark.sql.SparkSession, d: String,
       delayMs: Long = 7200000L): DataFrame = {
     import graft.pipeline.{DedupQueries, DupCorpus}
-    graft.functions.VectorExpressions.register(s)
     val (bandsT, skT) = DedupQueries.historyStores(d)
     val histBands = graft.sources.BucketedStore.read(s, bandsT)
       .select(col("band_idx"), col("k1"), col("k2"),
@@ -454,7 +539,6 @@ object StreamingEvents {
   }
 
   case class PqHit(query_id: Long, neighbor_id: Long, rank: Int, adc: Double)
-  case class PqState(tsMs: Long, top: List[(Long, Double)])
 
   /** Streaming ADC serving — the stored-codes tier's online face
     * (VERDICT r13 #4): query vectors arrive as a stream and are
@@ -472,11 +556,11 @@ object StreamingEvents {
     * BEFORE the join by [[graft.pipeline.SimilarityQueries.adcProbed]],
     * the same serving path the batch faces run. Each candidate then
     * costs m `element_at` lookups — never an O(dim) dot — which is the
-    * ADC property carried into the stream. Only
-    * the per-query top-k accumulator is stateful: ≤ k (doc, adc)
-    * pairs per open query, emitted once with batch tie-breaks
-    * (adc asc, neighbor asc) and `round(adc, 6)` at event-time close.
-    * Parity vs the batch stored-codes face is pinned in Round18Spec.
+    * ADC property carried into the stream. Only the per-query
+    * [[topK]] accumulator is stateful: ≤ k (doc, adc) pairs per open
+    * query, emitted once with batch tie-breaks (adc asc, neighbor asc)
+    * and `round(adc, 6)` at event-time close.
+    * Parity vs the batch stored-codes face is pinned in AnnPqSpec.
     * Needs query_id / ts / qv columns. */
   def annServePqStream(queries: DataFrame,
       s: org.apache.spark.sql.SparkSession, d: String,
@@ -495,7 +579,7 @@ object StreamingEvents {
     * base ∪ delta code tables. A reaped generation is unreachable
     * because the pointer no longer names it; a maintenance publish is
     * picked up by the next restart. Parity vs the batch cycle face is
-    * pinned in Round18Spec. */
+    * pinned in AnnPqSpec. */
   def annServePqPtrStreamAt(queries: DataFrame,
       s: org.apache.spark.sql.SparkSession, ptrTable: String,
       k: Int = 5, delayMs: Long = 7200000L): Dataset[PqHit] = {
@@ -555,7 +639,7 @@ object StreamingEvents {
     * codebook resolved from the one-broadcast family, so the plan is
     * O(1) in nlist even though every cell carries distinct books.
     * Candidates still cost m `element_at` lookups. Parity vs the
-    * batch stored face is pinned in Round19Spec. */
+    * batch stored face is pinned in AnnPqSpec. */
   def annServePqrCellStream(queries: DataFrame,
       s: org.apache.spark.sql.SparkSession, d: String,
       k: Int = 5, delayMs: Long = 7200000L): Dataset[PqHit] = {
@@ -597,36 +681,11 @@ object StreamingEvents {
         explode(graft.functions.CentroidModels.probes(
           s, cents, col("qv"), SimilarityQueries.KmProbe)).as("probe_cid"))
     val (probed, adc) = SimilarityQueries.adcProbed(s, exploded, tier, "ts")
-    probed.join(codes,
+    topK(probed.join(codes,
         col("probe_cid") === col("cid") && col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("ts"), col("vec_id").as("doc_id"),
-        adc.as("adc"))
-      .as[(Long, java.sql.Timestamp, Long, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[PqState, PqHit](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (qid, it, state) =>
-          if (state.hasTimedOut) {
-            val out = state.get.top.sortBy { case (doc, a) => (a, doc) }
-              .zipWithIndex.map { case ((doc, a), i) =>
-                PqHit(qid, doc, i + 1, java.math.BigDecimal.valueOf(a)
-                  .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()) }
-            state.remove()
-            out.iterator
-          } else {
-            val prev = state.getOption.getOrElse(PqState(0L, Nil))
-            var (ts, top) = (prev.tsMs, prev.top)
-            it.foreach { case (_, t, doc, a) =>
-              ts = math.max(ts, t.getTime)
-              top = ((doc, a) :: top)
-                .sortBy { case (dc, ac) => (ac, dc) }.take(k)
-            }
-            state.update(PqState(ts, top))
-            state.setTimeoutTimestamp(math.max(
-              ts + delayMs, state.getCurrentWatermarkMs() + 1))
-            Iterator.empty
-          }
-      }
+        adc.as("adc")), k, delayMs) { case (doc, a) => (a, doc) } {
+      (qid, doc, rank, a) => PqHit(qid, doc, rank, roundHalfUp(a, 6)) }
   }
 
   /** Append `df` to a managed parquet table, creating it on first use.
@@ -693,7 +752,6 @@ object StreamingEvents {
       ns: String = "", compactAtDeltaDocs: Long = IngestCompactAtDocs)(
       batch: DataFrame, batchId: Long): Unit = {
     import graft.pipeline.DedupQueries
-    graft.functions.VectorExpressions.register(s)
     val (bandsT, skT) = DedupQueries.historyStores(d, ns)
     val (dBandsT, dSkT, pairsT) = DedupQueries.ingestTables(d, ns)
     val rows = batch.select(col("doc_id"), col("text"))
@@ -851,8 +909,6 @@ object StreamingEvents {
     vec_rank: Option[Int], rrf: Double)
   case class HybIn(query_id: Long, ts: java.sql.Timestamp,
     doc_id: Long, tag: Int, lexc: BigDecimal, sim: Double)
-  case class HybState(tsMs: Long, lex: List[(Long, BigDecimal)],
-    vecTop: List[(Long, Double)])
 
   /** The lexical arm keeps its top-[[LexKeep]] docs only — the fused
     * output needs each arm's top-20, so any state past that is waste. */
@@ -904,7 +960,8 @@ object StreamingEvents {
     * is what makes micro-batch arrival order invisible) and
     * exact-cosine candidates from the pointer-named cells — tagged
     * and unioned into ONE stateful top-k/fusion operator keyed by
-    * query. State per open query is BOUNDED on both arms: ≤[[LexKeep]]
+    * query, the [[closeAtTimeout]] skeleton. State per open query is
+    * BOUNDED on both arms: ≤[[LexKeep]]
     * (doc, exact-decimal score) lexical pairs ([[foldLexTop]] — the
     * per-batch fold is complete because a query's posting
     * contributions all derive from its own arriving row, so pruning to
@@ -914,22 +971,14 @@ object StreamingEvents {
     * ranked (top-20 each, batch tie-breaks), RRF-fused (absent arm →
     * rank NULL, contribution 0), rounded like the batch `round(…, 6)`,
     * and the top-10 emitted once. Parity vs the batch face and the
-    * state bound are pinned in StreamingSpec/Round18Spec.
+    * state bound are pinned in StreamingSpec.
     * Requires the index + a published pointer (callers run
-    * `searchIndexExecute` and a maintenance cycle first).
-    *
-    * STATE-SCHEMA BREAK (ADVICE r14): [[HybState]].lex changed from
-    * `Map[Long, BigDecimal]` to the bounded `List[(Long, BigDecimal)]`
-    * when the top-[[LexKeep]] fold landed, which changes the
-    * flatMapGroupsWithState state encoder schema — a stream restarted
-    * from a checkpoint written BEFORE that change cannot restore its
-    * state; start such a deployment from a fresh checkpoint directory
-    * (the stored indexes and pointer are unaffected). */
+    * `searchIndexExecute` and a maintenance cycle first). The state
+    * schema changed with the skeleton: see [[closeAtTimeout]]. */
   def hybridServeStream(queries: DataFrame,
       s: org.apache.spark.sql.SparkSession, d: String,
       delayMs: Long = 7200000L): Dataset[HybHit] = {
     import s.implicits._
-    graft.functions.VectorExpressions.register(s)
     val rrfK = graft.pipeline.SearchQueries.RrfK
     val wm = queries.withWatermark("ts", s"$delayMs milliseconds")
     val (cents, tb, td) = graft.pipeline.SimilarityQueries.ptrModel(s, d)
@@ -949,47 +998,31 @@ object StreamingEvents {
           explode(col("terms")).as("token")))
       .select(col("query_id"), col("ts"), col("doc_id"),
         lit(0).as("tag"), col("c").as("lexc"), lit(0.0).as("sim"))
-    lexIn.unionByName(vecIn).as[HybIn]
-      .groupByKey(_.query_id)
-      .flatMapGroupsWithState[HybState, HybHit](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (qid, it, state) =>
-          if (state.hasTimedOut) {
-            val st = state.get
-            // st.lex is already the sorted top-LexKeep (foldLexTop's
-            // invariant); ranks are its positions
-            val lexR = st.lex.zipWithIndex
-              .map { case ((doc, _), i) => doc -> (i + 1) }.toMap
-            val vecR = st.vecTop.sortBy { case (doc, sm) => (-sm, doc) }
-              .zipWithIndex.map { case ((doc, _), i) => doc -> (i + 1) }.toMap
-            val out = (lexR.keySet ++ vecR.keySet).toList.map { doc =>
-              val (lr, vr) = (lexR.get(doc), vecR.get(doc))
-              val raw = lr.map(r => 1.0 / (rrfK + r)).getOrElse(0.0) +
-                vr.map(r => 1.0 / (rrfK + r)).getOrElse(0.0)
-              HybHit(qid, doc, lr, vr, java.math.BigDecimal.valueOf(raw)
-                .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue())
-            }.sortBy(h => (-h.rrf, h.doc_id)).take(10)
-            state.remove()
-            out.iterator
-          } else {
-            val prev = state.getOption.getOrElse(HybState(0L, Nil, Nil))
-            var ts = prev.tsMs
-            var top = prev.vecTop
-            val lexBatch = List.newBuilder[(Long, BigDecimal)]
-            it.foreach { r =>
-              ts = math.max(ts, r.ts.getTime)
-              if (r.tag == 0) lexBatch += ((r.doc_id, r.lexc))
-              else
-                top = ((r.doc_id, r.sim) :: top)
-                  .sortBy { case (dc, sm) => (-sm, dc) }.take(20)
-            }
-            state.update(HybState(ts,
-              foldLexTop(prev.lex, lexBatch.result()), top))
-            state.setTimeoutTimestamp(math.max(
-              ts + delayMs, state.getCurrentWatermarkMs() + 1))
-            Iterator.empty
-          }
-      }
+    closeAtTimeout(lexIn.unionByName(vecIn).as[HybIn], delayMs)(
+        _.query_id, _.ts.getTime,
+        (List.empty[(Long, BigDecimal)], List.empty[(Long, Double)])) {
+      case ((lex, vecTop), it) =>
+        val lexBatch = List.newBuilder[(Long, BigDecimal)]
+        var top = vecTop
+        it.foreach { r =>
+          if (r.tag == 0) lexBatch += ((r.doc_id, r.lexc))
+          else top = ((r.doc_id, r.sim) :: top).sortBy(byCosine).take(20)
+        }
+        (foldLexTop(lex, lexBatch.result()), top)
+    } { case (qid, (lex, vecTop)) =>
+      // lex is already the sorted top-LexKeep (foldLexTop's
+      // invariant); ranks are its positions
+      val lexR = lex.zipWithIndex
+        .map { case ((doc, _), i) => doc -> (i + 1) }.toMap
+      val vecR = vecTop.sortBy(byCosine)
+        .zipWithIndex.map { case ((doc, _), i) => doc -> (i + 1) }.toMap
+      (lexR.keySet ++ vecR.keySet).toList.map { doc =>
+        val (lr, vr) = (lexR.get(doc), vecR.get(doc))
+        val raw = lr.map(r => 1.0 / (rrfK + r)).getOrElse(0.0) +
+          vr.map(r => 1.0 / (rrfK + r)).getOrElse(0.0)
+        HybHit(qid, doc, lr, vr, roundHalfUp(raw, 6))
+      }.sortBy(h => (-h.rrf, h.doc_id)).take(10)
+    }
   }
 
   /** Streaming interval (time-band) join — the unbounded face of
@@ -1187,176 +1220,131 @@ object StreamingEvents {
     graft.queries.InfraQueries.summaryPartials(lineitems)
 
   case class RtEv(tsMs: Long, eventId: Long, value: Double)
-  case class RtState(pending: List[RtEv], sumUnscaled: Long, seq: Int)
   case class RtRow(user_id: Long, event_id: Long, ts_ms: Long,
     running_value: Double, event_seq: Int)
 
   /** Streaming per-user running total — the unbounded face of
     * `events_running_total`. The batch form's cumulative window needs
     * the whole partition sorted; the stream replays each user's events
-    * in (ts, event_id) order once the watermark releases them (same
-    * buffer-then-replay skeleton as [[asofStream]]) and carries the
-    * accumulator across micro-batches. The accumulator is the EXACT
-    * decimal(18,6) sum held as its unscaled long — bit-identical to the
-    * batch window's decimal arithmetic (a double accumulator would
-    * drift: batch sums in decimal precisely to keep results
-    * order-independent), overflowing only past 10^12 in summed value,
-    * where the batch decimal overflows too. State per user after the
-    * buffer drains: one long + one int — O(active users) forever. */
+    * in (ts, event_id) order once the watermark releases them (the
+    * [[replay]] skeleton) and carries the accumulator across
+    * micro-batches. The accumulator is the EXACT decimal(18,6) sum
+    * held as its unscaled long — bit-identical to the batch window's
+    * decimal arithmetic (a double accumulator would drift: batch sums
+    * in decimal precisely to keep results order-independent),
+    * overflowing only past 10^12 in summed value, where the batch
+    * decimal overflows too. Carry per user: one long + one int. */
   def runningTotalStream(events: DataFrame, delay: String = "2 hours"): Dataset[RtRow] = {
     val spark = events.sparkSession
     import spark.implicits._
     import java.math.{BigDecimal => JBD, BigInteger, RoundingMode}
-    events.withWatermark("ts", delay)
-      .select(col("user_id"), col("ts"), col("event_id"), col("value"))
-      .as[(Long, java.sql.Timestamp, Long, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[RtState, RtRow](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user, it, state) =>
-          val prev = state.getOption.getOrElse(RtState(Nil, 0L, 0))
-          val incoming = it.map(e => RtEv(e._2.getTime, e._3, e._4)).toList
-          val wm = state.getCurrentWatermarkMs()
-          // strictly-before: Spark only DROPS rows strictly older than
-          // the watermark, so an event timestamped exactly at wm may
-          // still arrive in a later micro-batch — it stays pending
-          // until the watermark passes it (the timeout below re-fires
-          // this group when that happens)
-          val (ready, pending) = release(prev.pending, incoming, wm)(_.tsMs)
-          var sum = prev.sumUnscaled
-          var seq = prev.seq
-          val out = List.newBuilder[RtRow]
-          ready.sortBy(e => (e.tsMs, e.eventId)).foreach { e =>
-            // value -> decimal(18,6) exactly as Spark's cast (HALF_UP)
-            sum = math.addExact(sum, JBD.valueOf(e.value)
-              .setScale(6, RoundingMode.HALF_UP).unscaledValue().longValueExact())
-            seq += 1
-            val run = new JBD(BigInteger.valueOf(sum), 6).doubleValue()
-            // display rounding exactly as Spark's round(double, 4)
-            out += RtRow(user, e.eventId, e.tsMs,
-              JBD.valueOf(run).setScale(4, RoundingMode.HALF_UP).doubleValue(), seq)
-          }
-          state.update(RtState(pending, sum, seq))
-          if (pending.nonEmpty) state.setTimeoutTimestamp(pending.map(_.tsMs).min)
-          out.result().iterator
-      }
+    replay(events.withWatermark("ts", delay)
+        .select(col("user_id"), col("ts"), col("event_id"), col("value"))
+        .as[(Long, java.sql.Timestamp, Long, Double)])(
+      _._1, e => RtEv(e._2.getTime, e._3, e._4))(
+      _.tsMs, Ordering.by(e => (e.tsMs, e.eventId)), (0L, 0)) {
+      case (user, (sum0, seq0), ready) =>
+        var (sum, seq) = (sum0, seq0)
+        val out = ready.map { e =>
+          // value -> decimal(18,6) exactly as Spark's cast (HALF_UP)
+          sum = math.addExact(sum, JBD.valueOf(e.value)
+            .setScale(6, RoundingMode.HALF_UP).unscaledValue().longValueExact())
+          seq += 1
+          val run = new JBD(BigInteger.valueOf(sum), 6).doubleValue()
+          RtRow(user, e.eventId, e.tsMs, roundHalfUp(run, 4), seq)
+        }
+        ((sum, seq), out)
+    }
   }
 
   case class CbEv(tsMs: Long, eventId: Long, etype: String, value: Double)
-  case class CbState(pending: List[CbEv], balUnscaled9: Long,
-    nFloor: Long, nCap: Long, seq: Long)
   case class CbRow(user_id: Long, event_id: Long, ts_ms: Long,
     balance: Double, n_floor: Long, n_cap: Long, event_seq: Long)
 
   /** Streaming clamped balance — the unbounded face of
     * `events_clamped_balance`, and the op whose natural home IS the
     * stream (a token bucket / credit limit is enforced live, not in
-    * nightly batch). Same buffer-then-replay skeleton as
-    * [[runningTotalStream]]: the watermark releases each user's events
-    * in (ts, event_id) order and the non-associative clamp fold runs
-    * exactly as the batch mapGroups body. The balance is carried as
-    * its EXACT unscaled scale-9 long (the 1/8 debit is ×125 on the
-    * scale-6 unscaled value — integer-exact, and the clamp bounds the
-    * accumulator at 5·10¹¹ so it can never overflow); emitted rows
-    * show the post-event balance, so the LAST row per user equals the
-    * batch query's final state (parity-pinned). State per user after
-    * the buffer drains: three longs — O(active users) forever. */
+    * nightly batch). A [[replay]] face: the watermark releases each
+    * user's events in (ts, event_id) order and the non-associative
+    * clamp fold runs exactly as the batch mapGroups body. The balance
+    * is carried as its EXACT unscaled scale-9 long (the 1/8 debit is
+    * ×125 on the scale-6 unscaled value — integer-exact, and the clamp
+    * bounds the accumulator at 5·10¹¹ so it can never overflow);
+    * emitted rows show the post-event balance, so the LAST row per
+    * user equals the batch query's final state (parity-pinned). Carry
+    * per user: four longs. */
   def clampedBalanceStream(events: DataFrame,
       delay: String = "2 hours"): Dataset[CbRow] = {
     val spark = events.sparkSession
     import spark.implicits._
     import java.math.{BigDecimal => JBD, RoundingMode}
     val CapUnscaled = 500L * 1000000000L
-    events.withWatermark("ts", delay)
-      .select(col("user_id"), col("ts"), col("event_id"),
-        col("event_type"), col("value"))
-      .as[(Long, java.sql.Timestamp, Long, String, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[CbState, CbRow](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user, it, state) =>
-          val prev = state.getOption.getOrElse(CbState(Nil, 0L, 0L, 0L, 0L))
-          val incoming = it.map(e => CbEv(e._2.getTime, e._3, e._4, e._5)).toList
-          val wm = state.getCurrentWatermarkMs()
-          val (ready, pending) =
-            release(prev.pending, incoming, wm)(_.tsMs)
-          var bal = prev.balUnscaled9
-          var (nF, nC, seq) = (prev.nFloor, prev.nCap, prev.seq)
-          val out = List.newBuilder[CbRow]
-          ready.sortBy(e => (e.tsMs, e.eventId)).foreach { e =>
-            // value → decimal(18,6) exactly as Spark's cast, then to
-            // unscaled scale-9: ×1000 credit, ×125 (= 0.125) debit
-            val u6 = JBD.valueOf(e.value)
-              .setScale(6, RoundingMode.HALF_UP).unscaledValue().longValueExact()
-            val delta = if (e.etype == "purchase") u6 * 1000L else -u6 * 125L
-            bal += delta
-            if (bal < 0L) { bal = 0L; nF += 1 }
-            else if (bal > CapUnscaled) { bal = CapUnscaled; nC += 1 }
-            seq += 1
-            out += CbRow(user, e.eventId, e.tsMs,
-              new JBD(java.math.BigInteger.valueOf(bal), 9).doubleValue(),
-              nF, nC, seq)
-          }
-          state.update(CbState(pending, bal, nF, nC, seq))
-          if (pending.nonEmpty) state.setTimeoutTimestamp(pending.map(_.tsMs).min)
-          out.result().iterator
-      }
+    replay(events.withWatermark("ts", delay)
+        .select(col("user_id"), col("ts"), col("event_id"),
+          col("event_type"), col("value"))
+        .as[(Long, java.sql.Timestamp, Long, String, Double)])(
+      _._1, e => CbEv(e._2.getTime, e._3, e._4, e._5))(
+      _.tsMs, Ordering.by(e => (e.tsMs, e.eventId)), (0L, 0L, 0L, 0L)) {
+      case (user, (bal0, nF0, nC0, seq0), ready) =>
+        var (bal, nF, nC, seq) = (bal0, nF0, nC0, seq0)
+        val out = ready.map { e =>
+          // value → decimal(18,6) exactly as Spark's cast, then to
+          // unscaled scale-9: ×1000 credit, ×125 (= 0.125) debit
+          val u6 = JBD.valueOf(e.value)
+            .setScale(6, RoundingMode.HALF_UP).unscaledValue().longValueExact()
+          val delta = if (e.etype == "purchase") u6 * 1000L else -u6 * 125L
+          bal += delta
+          if (bal < 0L) { bal = 0L; nF += 1 }
+          else if (bal > CapUnscaled) { bal = CapUnscaled; nC += 1 }
+          seq += 1
+          CbRow(user, e.eventId, e.tsMs,
+            new JBD(java.math.BigInteger.valueOf(bal), 9).doubleValue(),
+            nF, nC, seq)
+        }
+        ((bal, nF, nC, seq), out)
+    }
   }
 
   case class VfEv(tsMs: Long, eventId: Long)
-  case class VfState(pending: List[VfEv], recent: List[Long])
   case class VfFlag(user_id: Long, event_id: Long, ts_ms: Long, n_hour: Long)
 
   /** Streaming velocity rule — the face `events_velocity_flags`
     * actually deploys as: fraud velocity is worthless nightly, the
-    * alert has to fire AS the third event lands. Watermark-ordered
-    * replay (the [[clampedBalanceStream]] skeleton); state per user is
-    * the accepted timestamps within the trailing hour — pruned every
-    * step, so it is bounded by the per-user hourly rate, not history.
-    * Tie semantics match the batch RANGE frame exactly: events
-    * sharing a timestamp are processed as one group and each counts
-    * the WHOLE group (RANGE includes peers), so the streamed flags
-    * are set-identical to the batch window's (parity-pinned). Emits
-    * one row per event whose trailing-hour count reaches K=3. */
+    * alert has to fire AS the third event lands. A [[replay]] face;
+    * the carry per user is the accepted timestamps within the trailing
+    * hour — pruned every step, so it is bounded by the per-user hourly
+    * rate, not history. Tie semantics match the batch RANGE frame
+    * exactly: events sharing a timestamp are processed as one group
+    * and each counts the WHOLE group (RANGE includes peers), so the
+    * streamed flags are set-identical to the batch window's
+    * (parity-pinned). Emits one row per event whose trailing-hour
+    * count reaches K=3. */
   def velocityFlagsStream(events: DataFrame,
       delay: String = "2 hours"): Dataset[VfFlag] = {
     val spark = events.sparkSession
     import spark.implicits._
     val K = 3
-    events.withWatermark("ts", delay)
-      .select(col("user_id"), col("ts"), col("event_id"))
-      .as[(Long, java.sql.Timestamp, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[VfState, VfFlag](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user, it, state) =>
-          val prev = state.getOption.getOrElse(VfState(Nil, Nil))
-          val incoming = it.map(e => VfEv(e._2.getTime, e._3)).toList
-          val wm = state.getCurrentWatermarkMs()
-          val (ready, pending) =
-            release(prev.pending, incoming, wm)(_.tsMs)
-          var recent = prev.recent
-          val out = List.newBuilder[VfFlag]
-          // process equal-timestamp events as one peer group: the
-          // batch RANGE frame counts the whole group for each member
-          ready.sortBy(e => (e.tsMs, e.eventId))
-            .groupBy(_.tsMs).toSeq.sortBy(_._1)
-            .foreach { case (t, group) =>
-              recent = recent.filter(_ >= t - 3600000L)
-              val n = recent.size + group.size
-              if (n >= K)
-                group.foreach(e => out += VfFlag(user, e.eventId, t, n))
-              recent = recent ++ group.map(_.tsMs)
-            }
-          state.update(VfState(pending, recent))
-          if (pending.nonEmpty) state.setTimeoutTimestamp(pending.map(_.tsMs).min)
-          out.result().iterator
-      }
+    replay(events.withWatermark("ts", delay)
+        .select(col("user_id"), col("ts"), col("event_id"))
+        .as[(Long, java.sql.Timestamp, Long)])(
+      _._1, e => VfEv(e._2.getTime, e._3))(
+      _.tsMs, Ordering.by(e => (e.tsMs, e.eventId)), List.empty[Long]) {
+      (user, recent0, ready) =>
+        var recent = recent0
+        // process equal-timestamp events as one peer group: the
+        // batch RANGE frame counts the whole group for each member
+        val out = ready.groupBy(_.tsMs).toSeq.sortBy(_._1).flatMap {
+          case (t, group) =>
+            recent = recent.filter(_ >= t - 3600000L)
+            val n = recent.size + group.size
+            recent = recent ++ group.map(_.tsMs)
+            if (n >= K) group.map(e => VfFlag(user, e.eventId, t, n)) else Nil
+        }
+        (recent, out)
+    }
   }
 
   case class AsofEv(tsMs: Long, tag: Int, eventId: Long, value: Double)
-  case class AsofState(pending: List[AsofEv], clickId: Long, clickMs: Long,
-    clickValue: Double, hasClick: Boolean)
   case class AsofMatch(purchase_id: Long, user_id: Long, purchase_ms: Long,
     click_id: Long, click_ms: Long, click_value: Double)
 
@@ -1364,21 +1352,12 @@ object StreamingEvents {
     * [[EventQueries]]'s `events_asof_join`): each purchase matched to
     * the same user's latest click at-or-before it, over an out-of-order
     * event stream. The batch form's carry-forward window needs the
-    * whole partition sorted, which a stream never has — so this is the
-    * custom-state case SURVEY §2.10 reserves for
-    * `flatMapGroupsWithState`:
-    *
-    *  - events buffer per user until the watermark passes their event
-    *    time (every click that could precede them has then arrived);
-    *  - ready events replay in (ts, click-before-purchase, id) order
-    *    against the carried last-click, emitting matches append-only;
-    *  - state is the in-flight buffer (bounded by the watermark delay ×
-    *    per-user rate) plus ONE remembered click — O(1) per user after
-    *    the buffer drains, so a forever-running stream holds state
-    *    proportional to active users, not history.
-    *
-    * An event-time timeout on the earliest pending event guarantees
-    * buffered events emit even if the user's traffic stops.
+    * whole partition sorted, which a stream never has — so this is a
+    * [[replay]] face: events buffer per user until the watermark
+    * passes their event time (every click that could precede them has
+    * then arrived), then replay in (ts, click-before-purchase, id)
+    * order against the carried last click, emitting matches
+    * append-only. The carry is ONE remembered click.
     *
     * Note the watermark is effectively derived from the click/purchase
     * sub-stream: Catalyst pushes the type filter below the watermark
@@ -1389,37 +1368,23 @@ object StreamingEvents {
   def asofStream(events: DataFrame, delay: String = "2 hours"): Dataset[AsofMatch] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.withWatermark("ts", delay)
-      .filter(col("event_type").isin("click", "purchase"))
-      .select(col("user_id"), col("ts"),
-        when(col("event_type") === "click", 0).otherwise(1).as("tag"),
-        col("event_id"), col("value"))
-      .as[(Long, java.sql.Timestamp, Int, Long, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[AsofState, AsofMatch](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user, it, state) =>
-          val prev = state.getOption.getOrElse(
-            AsofState(Nil, 0L, 0L, 0.0, hasClick = false))
-          val incoming = it.map(e => AsofEv(e._2.getTime, e._3, e._4, e._5)).toList
-          val wm = state.getCurrentWatermarkMs()
-          // strictly-before: Spark only DROPS rows strictly older than
-          // the watermark, so an event timestamped exactly at wm may
-          // still arrive in a later micro-batch — it stays pending
-          // until the watermark passes it (the timeout below re-fires
-          // this group when that happens)
-          val (ready, pending) = release(prev.pending, incoming, wm)(_.tsMs)
-          var (cid, cms, cv, has) =
-            (prev.clickId, prev.clickMs, prev.clickValue, prev.hasClick)
-          val out = List.newBuilder[AsofMatch]
-          ready.sortBy(e => (e.tsMs, e.tag, e.eventId)).foreach { e =>
-            if (e.tag == 0) { cid = e.eventId; cms = e.tsMs; cv = e.value; has = true }
-            else if (has) out += AsofMatch(e.eventId, user, e.tsMs, cid, cms, cv)
-          }
-          state.update(AsofState(pending, cid, cms, cv, has))
-          if (pending.nonEmpty) state.setTimeoutTimestamp(pending.map(_.tsMs).min)
-          out.result().iterator
-      }
+    replay(events.withWatermark("ts", delay)
+        .filter(col("event_type").isin("click", "purchase"))
+        .select(col("user_id"), col("ts"),
+          when(col("event_type") === "click", 0).otherwise(1).as("tag"),
+          col("event_id"), col("value"))
+        .as[(Long, java.sql.Timestamp, Int, Long, Double)])(
+      _._1, e => AsofEv(e._2.getTime, e._3, e._4, e._5))(
+      _.tsMs, Ordering.by(e => (e.tsMs, e.tag, e.eventId)),
+      Option.empty[AsofEv]) { (user, click0, ready) =>
+        var click = click0
+        val out = ready.flatMap { e =>
+          if (e.tag == 0) { click = Some(e); None }
+          else click.map(c =>
+            AsofMatch(e.eventId, user, e.tsMs, c.eventId, c.tsMs, c.value))
+        }
+        (click, out)
+    }
   }
 
   /** Streaming count-min sketch — the unbounded face of
@@ -1499,8 +1464,6 @@ object StreamingEvents {
   }
 
   case class ShEv(tsMs: Long, eventId: Long, etype: String)
-  case class ShState(pending: List[ShEv], curType: String, fromMs: Long,
-                     n: Long, has: Boolean)
   case class ShClosed(user_id: Long, event_type: String,
                       valid_from_ms: Long, valid_to_ms: Long, n_events: Long)
 
@@ -1509,91 +1472,69 @@ object StreamingEvents {
     * (type, start, count — exactly the is_current row a dimension
     * store keeps hot) and each state CHANGE appends the closed
     * interval [valid_from, valid_to) downstream, which is precisely
-    * how warehouse SCD2 history accretes. Watermark-release discipline
-    * as in [[runningTotalStream]] (strict-< release, (ts, event_id)
-    * order); state per user is the in-delay buffer plus one run
-    * descriptor. The open run never emits in append mode — it is
-    * state, not history — so the streamed output is the batch query's
-    * rows with non-null valid_to_ms, which StreamingSpec pins. */
+    * how warehouse SCD2 history accretes. A [[replay]] face in
+    * (ts, event_id) order; the carry is one run descriptor. The open
+    * run never emits in append mode — it is state, not history — so
+    * the streamed output is the batch query's rows with non-null
+    * valid_to_ms, which StreamingSpec pins. */
   def stateHistoryStream(events: DataFrame, delay: String = "2 hours"): Dataset[ShClosed] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.withWatermark("ts", delay)
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      .as[(Long, java.sql.Timestamp, Long, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[ShState, ShClosed](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user, it, state) =>
-          val prev = state.getOption.getOrElse(ShState(Nil, "", 0L, 0L, false))
-          val incoming = it.map(e => ShEv(e._2.getTime, e._3, e._4)).toList
-          val wm = state.getCurrentWatermarkMs()
-          val (ready, pending) =
-            release(prev.pending, incoming, wm)(_.tsMs)
-          var (cur, from, n, has) =
-            (prev.curType, prev.fromMs, prev.n, prev.has)
-          val out = List.newBuilder[ShClosed]
-          ready.sortBy(e => (e.tsMs, e.eventId)).foreach { e =>
-            if (!has) { cur = e.etype; from = e.tsMs; n = 1; has = true }
-            else if (e.etype == cur) n += 1
-            else {
-              out += ShClosed(user, cur, from, e.tsMs, n)
-              cur = e.etype; from = e.tsMs; n = 1
-            }
+    replay(events.withWatermark("ts", delay)
+        .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
+        .as[(Long, java.sql.Timestamp, Long, String)])(
+      _._1, e => ShEv(e._2.getTime, e._3, e._4))(
+      _.tsMs, Ordering.by(e => (e.tsMs, e.eventId)),
+      Option.empty[(String, Long, Long)]) { (user, run0, ready) =>
+        var run = run0
+        val out = ready.flatMap { e =>
+          run match {
+            case Some((cur, from, n)) if e.etype == cur =>
+              run = Some((cur, from, n + 1)); None
+            case closed =>
+              run = Some((e.etype, e.tsMs, 1L))
+              closed.map { case (cur, from, n) =>
+                ShClosed(user, cur, from, e.tsMs, n) }
           }
-          state.update(ShState(pending, cur, from, n, has))
-          if (pending.nonEmpty) state.setTimeoutTimestamp(pending.map(_.tsMs).min)
-          out.result().iterator
-      }
+        }
+        (run, out)
+    }
   }
 
-  case class LcState(pending: List[Long], lastDay: Long, hasLast: Boolean)
   case class LcClass(user_id: Long, day_num: Long, cls: String)
 
   /** Streaming growth-accounting classification — the unbounded face
     * of `events_user_lifecycle`'s per-(user, day) classed relation:
     * per user, remember the LAST released active day and classify each
     * newly released day as new / retained / resurrected; the batch
-    * ledger is then a plain downstream count per (day, class). Same
-    * watermark-release discipline as [[markovStream]] (buffer until
-    * the watermark strictly passes, release in order); state per user
-    * is the pending buffer plus ONE remembered day — the lifetime
-    * scope is inherent to the metric (a user's first-ever day defines
-    * `new`), exactly like [[attributionStream]]'s lifetime argmin. */
+    * ledger is then a plain downstream count per (day, class). A
+    * [[replay]] face over bare event times; the carry is ONE
+    * remembered day — the lifetime scope is inherent to the metric (a
+    * user's first-ever day defines `new`), exactly like
+    * [[attributionStream]]'s lifetime argmin. */
   def lifecycleStream(events: DataFrame, delay: String = "2 hours"): Dataset[LcClass] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.withWatermark("ts", delay)
-      .select(col("user_id"), col("ts"))
-      .as[(Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[LcState, LcClass](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user, it, state) =>
-          val prev = state.getOption.getOrElse(LcState(Nil, 0L, false))
-          val incoming = it.map(_._2.getTime).toList
-          val wm = state.getCurrentWatermarkMs()
-          val (ready, pending) =
-            release(prev.pending, incoming, wm)(identity)
-          var last = prev.lastDay
-          var has = prev.hasLast
-          val out = List.newBuilder[LcClass]
-          ready.map(_ / 86400000L).distinct.sorted.foreach { d =>
-            if (!has) { out += LcClass(user, d, "new"); last = d; has = true }
-            else if (d > last) {
-              out += LcClass(user, d,
-                if (d == last + 1) "retained" else "resurrected")
-              last = d
-            } // d <= last: the day already released in an earlier batch
+    replay(events.withWatermark("ts", delay)
+        .select(col("user_id"), col("ts"))
+        .as[(Long, java.sql.Timestamp)])(_._1, _._2.getTime)(
+      identity, Ordering.Long, Option.empty[Long]) { (user, last0, ready) =>
+        var last = last0
+        val out = ready.map(_ / 86400000L).distinct.flatMap { d =>
+          val cls = last match {
+            case None => Some("new")
+            case Some(l) if d > l =>
+              Some(if (d == l + 1) "retained" else "resurrected")
+            case _ => None // d <= last: the day was released in an earlier batch
           }
-          state.update(LcState(pending, last, has))
-          if (pending.nonEmpty) state.setTimeoutTimestamp(pending.min)
-          out.result().iterator
-      }
+          if (cls.isDefined) last = Some(d)
+          cls.map(LcClass(user, d, _))
+        }
+        (last, out)
+    }
   }
 
   case class MkEv(tsMs: Long, eventId: Long, etype: String)
-  case class MkState(pending: List[MkEv], lastType: String, hasLast: Boolean)
   case class MkTransition(user_id: Long, event_id: Long,
                           from_type: String, to_type: String)
 
@@ -1601,43 +1542,24 @@ object StreamingEvents {
     * `events_markov`: per user, remember the last released event's type
     * and emit a (from_type, to_type) pair for each newly released
     * event; the batch query's transition matrix is then a plain
-    * downstream count over these pairs. Ordering needs the same
-    * watermark-release discipline as [[runningTotalStream]]: events
-    * buffer until the watermark passes them STRICTLY (an event stamped
-    * exactly at the watermark can still arrive in a later micro-batch),
-    * then release in (ts, event_id) order. State per user is the
-    * in-delay pending buffer plus ONE remembered type — O(users ×
-    * delay-window), independent of stream length. */
+    * downstream count over these pairs. A [[replay]] face in
+    * (ts, event_id) order; the carry is ONE remembered type. */
   def markovStream(events: DataFrame, delay: String = "2 hours"): Dataset[MkTransition] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.withWatermark("ts", delay)
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      .as[(Long, java.sql.Timestamp, Long, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[MkState, MkTransition](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user, it, state) =>
-          val prev = state.getOption.getOrElse(MkState(Nil, "", false))
-          val incoming = it.map(e => MkEv(e._2.getTime, e._3, e._4)).toList
-          val wm = state.getCurrentWatermarkMs()
-          val (ready, pending) =
-            release(prev.pending, incoming, wm)(_.tsMs)
-          var last = prev.lastType
-          var has = prev.hasLast
-          val out = List.newBuilder[MkTransition]
-          ready.sortBy(e => (e.tsMs, e.eventId)).foreach { e =>
-            if (has) out += MkTransition(user, e.eventId, last, e.etype)
-            last = e.etype; has = true
-          }
-          state.update(MkState(pending, last, has))
-          if (pending.nonEmpty) state.setTimeoutTimestamp(pending.map(_.tsMs).min)
-          out.result().iterator
-      }
+    replay(events.withWatermark("ts", delay)
+        .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
+        .as[(Long, java.sql.Timestamp, Long, String)])(
+      _._1, e => MkEv(e._2.getTime, e._3, e._4))(
+      _.tsMs, Ordering.by(e => (e.tsMs, e.eventId)), Option.empty[String]) {
+      (user, last, ready) =>
+        val lasts = ready.scanLeft(last)((_, e) => Some(e.etype))
+        (lasts.last, ready.zip(lasts).flatMap { case (e, from) =>
+          from.map(MkTransition(user, e.eventId, _, e.etype)) })
+    }
   }
 
   case class FnEv(tsMs: Long, eventId: Long, etype: String)
-  case class FnState(pending: List[FnEv], sgn: Long, clk: Long, pur: Long)
   case class FnStage(user_id: Long, stage: String, stage_ms: Long)
 
   /** Streaming conversion funnel — the unbounded face of
@@ -1649,47 +1571,38 @@ object StreamingEvents {
     * batch query's (signup_ms, click_ms, purchase_ms) row per
     * converted user (parity-pinned in StreamingSpec).
     *
-    * Watermark-release discipline as everywhere ([[release]]); within
-    * a released batch, equal-timestamp events replay in stage-priority
-    * order (signup < click < purchase), which reproduces the batch
-    * face's RANGE-frame peer semantics — a click at the SAME
-    * millisecond as the signup qualifies, a purchase at the same
-    * millisecond as its qualifying click converts. State per user
-    * after the buffer drains: three longs (the reached-stage
-    * timestamps, -1 = not reached) — O(active users) forever. */
+    * A [[replay]] face; within a released batch, equal-timestamp
+    * events replay in stage-priority order (signup < click <
+    * purchase), which reproduces the batch face's RANGE-frame peer
+    * semantics — a click at the SAME millisecond as the signup
+    * qualifies, a purchase at the same millisecond as its qualifying
+    * click converts. The carry is three longs (the reached-stage
+    * timestamps, -1 = not reached). */
   def funnelStream(events: DataFrame, delay: String = "2 hours"): Dataset[FnStage] = {
     val spark = events.sparkSession
     import spark.implicits._
     val prio = Map("signup" -> 0, "click" -> 1, "purchase" -> 2)
-    events.withWatermark("ts", delay)
-      .filter(col("event_type").isin("signup", "click", "purchase"))
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      .as[(Long, java.sql.Timestamp, Long, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[FnState, FnStage](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user, it, state) =>
-          val prev = state.getOption.getOrElse(FnState(Nil, -1L, -1L, -1L))
-          val incoming = it.map(e => FnEv(e._2.getTime, e._3, e._4)).toList
-          val wm = state.getCurrentWatermarkMs()
-          val (ready, pending) = release(prev.pending, incoming, wm)(_.tsMs)
-          var (sgn, clk, pur) = (prev.sgn, prev.clk, prev.pur)
-          val out = List.newBuilder[FnStage]
-          ready.sortBy(e => (e.tsMs, prio(e.etype), e.eventId)).foreach { e =>
-            e.etype match {
-              case "signup" if sgn < 0 =>
-                sgn = e.tsMs; out += FnStage(user, "signup", sgn)
-              case "click" if sgn >= 0 && clk < 0 && e.tsMs >= sgn =>
-                clk = e.tsMs; out += FnStage(user, "click", clk)
-              case "purchase" if clk >= 0 && pur < 0 && e.tsMs >= clk =>
-                pur = e.tsMs; out += FnStage(user, "purchase", pur)
-              case _ => // already reached, or stage prerequisites unmet
-            }
+    replay(events.withWatermark("ts", delay)
+        .filter(col("event_type").isin("signup", "click", "purchase"))
+        .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
+        .as[(Long, java.sql.Timestamp, Long, String)])(
+      _._1, e => FnEv(e._2.getTime, e._3, e._4))(
+      _.tsMs, Ordering.by(e => (e.tsMs, prio(e.etype), e.eventId)),
+      (-1L, -1L, -1L)) { case (user, (sgn0, clk0, pur0), ready) =>
+        var (sgn, clk, pur) = (sgn0, clk0, pur0)
+        val out = ready.flatMap { e =>
+          e.etype match {
+            case "signup" if sgn < 0 =>
+              sgn = e.tsMs; Some(FnStage(user, "signup", sgn))
+            case "click" if sgn >= 0 && clk < 0 && e.tsMs >= sgn =>
+              clk = e.tsMs; Some(FnStage(user, "click", clk))
+            case "purchase" if clk >= 0 && pur < 0 && e.tsMs >= clk =>
+              pur = e.tsMs; Some(FnStage(user, "purchase", pur))
+            case _ => None // already reached, or stage prerequisites unmet
           }
-          state.update(FnState(pending, sgn, clk, pur))
-          if (pending.nonEmpty) state.setTimeoutTimestamp(pending.map(_.tsMs).min)
-          out.result().iterator
-      }
+        }
+        ((sgn, clk, pur), out)
+    }
   }
 
   /** Streaming day-active store — the store half of the retention

@@ -13,6 +13,37 @@ class AnnPqSpec extends SparkSpec {
   private def row(r: org.apache.spark.sql.Row) =
     (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))
 
+  /** The query vectors `which` selects, streamed through `serve` on a
+    * MemoryStream in micro-batches of `perBatch` (event times 1000,
+    * 2000, … ms), then closed by one query three hours after the last
+    * batch: every row the stream emitted. */
+  private def streamed(name: String, which: org.apache.spark.sql.Column,
+      perBatch: Int)(serve: org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.Dataset[_]): Set[(Long, Long, Int, Double)] = {
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val qvs = Tables.embeddings(spark, Sf).filter(which)
+      .select(col("vec_id"), col("embedding").cast("array<double>"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1))
+    val mem = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, Long, Seq[Double])]
+    val typed = mem.toDF().toDF("ts_ms", "query_id", "qv")
+      .select(timestamp_millis(col("ts_ms")).as("ts"),
+        col("query_id"), col("qv"))
+    val q = serve(typed).writeStream.format("memory").queryName(name)
+      .outputMode("append").start()
+    try {
+      val batches = qvs.grouped(perBatch).toSeq
+      batches.zipWithIndex.foreach { case (b, i) =>
+        mem.addData(b.map { case (id, v) => (1000L * (i + 1), id, v) }: _*)
+        q.processAllAvailable()
+      }
+      mem.addData((1000L * batches.size + 3600000L * 3, 999L, qvs.head._2))
+      q.processAllAvailable()
+      spark.table(name).collect().map(row).toSet
+    } finally q.stop()
+  }
+
   /** The ADC top-5 computed with no Spark expression on the scoring
     * path: per query, per probed cell, the per-subspace tables
     * ‖qs‖² − 2·qs·c + ‖c‖² as [[SimilarityQueries.foldDot]] folds over
@@ -164,36 +195,94 @@ class AnnPqSpec extends SparkSpec {
       "day-2 per-cell codes must have landed in the pointer-named delta")
   }
 
-  test("streaming PER-CELL residual ADC through the CYCLED pointer: serves generation 3's per-cell codes after the reap") {
-    import spark.implicits._
+  test("streaming ADC serving: parity with the batch stored-codes IVF-PQ face") {
+    // the stored-codes tier's online face — catalog models + persisted
+    // code table, query vectors as a stream, ADC tables projected per
+    // query row; two micro-batches, so candidate accumulation must
+    // merge across them. Every (query, neighbor, rank, adc) must equal
+    // ann_topk_ivfpq_stored's.
     import graft.streaming.StreamingEvents
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val want = SparkEntry.queries("ann_topk_ivfpq_stored")(spark, Sf)
+      .collect().map(row).toSet
+    val got = streamed("ann_serve_pq", col("vec_id") < 10, 5)(
+      StreamingEvents.annServePqStream(_, spark, Sf, k = 5, delayMs = 3600000L))
+    assert(got == want,
+      s"streamed ${got.size} vs batch ${want.size}; " +
+        s"+${(got diff want).take(3)} -${(want diff got).take(3)}")
+    assert(got.nonEmpty)
+  }
+
+  test("streaming ADC through the CYCLED pointer: serves generation 3's codes after the reap") {
+    // a PQ serving job booting after two maintenance cycles must
+    // resolve the pointer to g3 and answer from ITS code tables and
+    // codebooks — equal to the batch cycle face on every (query,
+    // neighbor, rank, adc).
+    import graft.streaming.StreamingEvents
+    val want = SparkEntry.queries("ann_ivfpq_recluster_cycle")(spark, Sf)
+      .filter(col("query_id").isin(2L, 3L, 7L))
+      .collect().map(row).toSet
+    val got = streamed("ann_serve_pq_cyc", col("vec_id").isin(2L, 3L, 7L), 3)(
+      StreamingEvents.annServePqPtrStreamAt(_, spark,
+        SimilarityQueries.cyclePtr(Sf), k = 5, delayMs = 3600000L))
+    assert(got == want, s"streamed $got vs batch $want")
+    assert(got.nonEmpty)
+  }
+
+  test("streaming residual ADC: parity with the batch stored-residual face across split micro-batches") {
+    // the residual tier's serving plumbing: the per-(query,
+    // probed-cell) ADC is computed as a COLUMN (centroid lookup +
+    // graft_sub before the per-subspace fold); every (query, neighbor,
+    // rank, adc) must be bit-equal to ann_topk_ivfpq_residual_stored's.
+    import graft.streaming.StreamingEvents
+    val want = SparkEntry.queries("ann_topk_ivfpq_residual_stored")(spark, Sf)
+      .collect().map(row).toSet
+    val got = streamed("ann_serve_pqr", col("vec_id") < 10, 5)(
+      StreamingEvents.annServePqrStream(_, spark, Sf, k = 5, delayMs = 3600000L))
+    assert(got == want,
+      s"streamed ${got.size} vs batch ${want.size}; " +
+        s"+${(got diff want).take(3)} -${(want diff got).take(3)}")
+    assert(got.nonEmpty)
+  }
+
+  test("streaming residual ADC through the CYCLED pointer: serves generation 3's residual codes after the reap") {
+    import graft.streaming.StreamingEvents
+    val want = SparkEntry.queries("ann_ivfpqr_recluster_cycle")(spark, Sf)
+      .filter(col("query_id").isin(2L, 3L, 7L))
+      .collect().map(row).toSet
+    val got = streamed("ann_serve_pqr_cyc", col("vec_id").isin(2L, 3L, 7L), 3)(
+      StreamingEvents.annServePqrPtrStreamAt(_, spark,
+        SimilarityQueries.cyclePtr(Sf), k = 5, delayMs = 3600000L))
+    assert(got == want, s"streamed $got vs batch $want")
+    assert(got.nonEmpty)
+  }
+
+  test("streaming PER-CELL residual ADC: parity with the batch stored per-cell face across split micro-batches") {
+    // the per-cell tier's online face: the probed cell's OWN codebook
+    // resolved from the one-broadcast family by graft_group_adc — a
+    // plan O(1) in nlist — must reproduce the batch stored face
+    // bit-for-bit, in any batching
+    import graft.streaming.StreamingEvents
+    val want = SparkEntry.queries("ann_topk_ivfpq_residual_cell_stored")(
+      spark, Sf).collect().map(row).toSet
+    val got = streamed("ann_serve_pqrc", col("vec_id") < 10, 5)(
+      StreamingEvents.annServePqrCellStream(_, spark, Sf,
+        k = 5, delayMs = 3600000L))
+    assert(got == want,
+      s"streamed ${got.size} vs batch ${want.size}; " +
+        s"+${(got diff want).take(3)} -${(want diff got).take(3)}")
+    assert(got.nonEmpty)
+  }
+
+  test("streaming PER-CELL residual ADC through the CYCLED pointer: serves generation 3's per-cell codes after the reap") {
+    import graft.streaming.StreamingEvents
     val want = SparkEntry.queries("ann_ivfpqrc_recluster_cycle")(spark, Sf)
       .filter(col("query_id").isin(2L, 3L, 7L))
       .collect().map(row).toSet
-    val qvs = Tables.embeddings(spark, Sf)
-      .filter(col("vec_id").isin(2L, 3L, 7L))
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1))
-    val mem = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Long, Seq[Double])]
-    val typed = mem.toDF().toDF("ts_ms", "query_id", "qv")
-      .select(timestamp_millis(col("ts_ms")).as("ts"),
-        col("query_id"), col("qv"))
-    val q = StreamingEvents.annServePqrcPtrStreamAt(typed, spark,
-        SimilarityQueries.cyclePtr(Sf),
-        k = 5, delayMs = 3600000L)
-      .writeStream.format("memory").queryName("ann_serve_pqrc_cyc")
-      .outputMode("append").start()
-    try {
-      mem.addData(qvs.map { case (id, v) => (1000L, id, v) }: _*)
-      q.processAllAvailable()
-      mem.addData((1000L + 3600000L * 3, 999L, qvs.head._2))
-      q.processAllAvailable()
-      val got = spark.table("ann_serve_pqrc_cyc").collect().map(row).toSet
-      assert(got == want, s"streamed $got vs batch $want")
-      assert(got.nonEmpty)
-    } finally q.stop()
+    val got = streamed("ann_serve_pqrc_cyc", col("vec_id").isin(2L, 3L, 7L), 3)(
+      StreamingEvents.annServePqrcPtrStreamAt(_, spark,
+        SimilarityQueries.cyclePtr(Sf), k = 5, delayMs = 3600000L))
+    assert(got == want, s"streamed $got vs batch $want")
+    assert(got.nonEmpty)
   }
 
   test("one Lloyd trainer: every quantizer equals a plain-Scala Lloyd reference bit-for-bit, and the stored PQ models are the memos") {

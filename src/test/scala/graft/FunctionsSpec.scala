@@ -1,11 +1,21 @@
 package graft
 
-/** The custom-expression layer's deployment path: GraftExtensions must
-  * make graft_dot/graft_intersect resolve in a session that never calls
-  * VectorExpressions.register. `newSession()` builds a fresh
-  * FunctionRegistry from the extensions alone, so explicit register
-  * calls made elsewhere in the suite cannot mask a broken injection. */
+/** The custom-expression layer's deployment path: GraftExtensions is
+  * the only code that registers the graft_* functions, so every name it
+  * lists must resolve in a fresh `newSession()`, whose FunctionRegistry
+  * is built from the extensions alone. */
 class FunctionsSpec extends SparkSpec {
+
+  /** The function names GraftExtensions injects, in injection order. */
+  private def injectedNames(): Seq[String] = {
+    import org.apache.spark.sql.SparkSessionExtensions
+    val names = scala.collection.mutable.Buffer.empty[String]
+    new graft.functions.GraftExtensions().apply(new SparkSessionExtensions {
+      override def injectFunction(f: FunctionDescription): Unit =
+        names += f._1.funcName
+    })
+    names.toSeq
+  }
 
   test("GraftExtensions injects graft_dot/graft_intersect at session build") {
     val fresh = spark.newSession()
@@ -14,6 +24,12 @@ class FunctionsSpec extends SparkSpec {
                 graft_intersect(array(1L, 3L, 5L), array(3L, 4L, 5L)) AS i""").head()
     assert(r.getDouble(0) === 11.0)
     assert(r.getInt(1) === 2)
+    // the one registration path covers every function it lists
+    val names = injectedNames()
+    assert(names.size == 16)
+    val missing = names.filterNot(n => fresh.sessionState.functionRegistry
+      .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(n)))
+    assert(missing.isEmpty, s"not registered in a fresh session: $missing")
   }
 
   test("graft_count_in / graft_sum_len match the interpreted HOF formulations") {
@@ -210,13 +226,8 @@ class FunctionsSpec extends SparkSpec {
   // function" WARN (every session clone re-injects); this keeps a real
   // clash from hiding behind it
   test("injected function names are distinct, graft_-prefixed and not built-in") {
-    import org.apache.spark.sql.SparkSessionExtensions
     import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
-    val names = scala.collection.mutable.Buffer.empty[String]
-    new graft.functions.GraftExtensions().apply(new SparkSessionExtensions {
-      override def injectFunction(f: FunctionDescription): Unit =
-        names += f._1.funcName
-    })
+    val names = injectedNames()
     assert(names.size == 16)
     assert(names.distinct == names, names)
     assert(names.forall(_.startsWith("graft_")), names)

@@ -52,7 +52,6 @@ class Round17Spec extends SparkSpec {
     // tie-break)
     import spark.implicits._
     import org.apache.spark.sql.Column
-    graft.functions.VectorExpressions.register(spark)
     val dim = 16
     val vecs = (0 until 200).map { i =>
       (i.toLong, Seq.tabulate(dim)(j => math.sin(i * 31.0 + j * 7.0) * 3.0)) }

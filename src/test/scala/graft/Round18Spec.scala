@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 
 /** Round-18 pins: the four ADVICE r13 fixes (centroid-registry LRU,
   * all-NaN d parity, streaming-dedup self-pair guard) plus this
-  * round's lifecycle additions (generation-scoped PQ codes, bounded
-  * hybrid lexical state, online dedup-history growth, streaming ADC). */
+  * round's lifecycle additions (generation-scoped PQ codes, online
+  * dedup-history growth). */
 class Round18Spec extends SparkSpec {
 
   test("centroid registry: LRU eviction — a resolution-refreshed id survives 64+ newer registrations") {
@@ -83,39 +83,6 @@ class Round18Spec extends SparkSpec {
       assert(pairs.forall { case (a, b) => a != b },
         s"self-pairs emitted: ${pairs.filter(p => p._1 == p._2).toSeq}")
     } finally q.stop()
-  }
-
-  test("hybrid stream state bound: the lexical accumulator stays at LexKeep under 100x postings") {
-    // VERDICT r13 top item: HybState.lex grew O(distinct docs matching
-    // any query term). The bounded fold must (a) never hold more than
-    // LexKeep entries no matter how long the posting stream is, and
-    // (b) keep EXACTLY the arm's true top-20 — same scores, same
-    // (score desc, doc asc) order — as the unbounded accumulator.
-    import graft.streaming.StreamingEvents.{foldLexTop, LexKeep}
-    val n = LexKeep * 100 // a stop-word-heavy query: 2000 matching docs
-    // deterministic pseudo-random decimal contributions, several per doc
-    def contribs(seed: Int) = (0 until n * 3).map { i =>
-      val doc = (i * 31 + seed) % n
-      (doc.toLong, BigDecimal(((i * 7919 + seed * 104729) % 10000) + 1) / 1000)
-    }
-    // stream them through the fold in many small "micro-batches", with
-    // each doc's contributions kept within one batch (the contract:
-    // a query's postings co-arrive with its row)
-    val perDoc = contribs(42).groupBy(_._1).map { case (d, xs) =>
-      (d, xs.map(_._2).sum) }.toList
-    val batches = perDoc.grouped(37).toList
-    val kept = batches.foldLeft(List.empty[(Long, BigDecimal)]) {
-      (st, b) =>
-        val next = foldLexTop(st, b)
-        assert(next.size <= LexKeep, s"state grew to ${next.size}")
-        next
-    }
-    assert(kept.size == LexKeep)
-    // exactness: equals the unbounded accumulator's top-20
-    val want = perDoc.sortWith { case ((d1, s1), (d2, s2)) =>
-      val c = s1.compare(s2); if (c != 0) c > 0 else d1 < d2 }
-      .take(LexKeep)
-    assert(kept == want, s"bounded fold diverged:\n$kept\nvs\n$want")
   }
 
   test("streaming ingest dedup grows the history: cross-micro-batch pairs emerge; parity with the batch incremental face") {
@@ -200,50 +167,6 @@ class Round18Spec extends SparkSpec {
     assert(codes.filter(col("vec_id") >= n).count() == n2 - n)
   }
 
-  test("streaming ADC serving: parity with the batch stored-codes IVF-PQ face") {
-    // VERDICT r13 #4: the stored-codes tier's online face — catalog
-    // models + persisted code table, query vectors as a stream, ADC
-    // tables projected per query row. Every (query, neighbor, rank,
-    // adc) must equal ann_topk_ivfpq_stored's.
-    import spark.implicits._
-    import graft.streaming.StreamingEvents
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    // batch face first: trains/persists models + code table, and is
-    // the parity target
-    def row(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))
-    val want = SparkEntry.queries("ann_topk_ivfpq_stored")(spark, Sf)
-      .collect().map(row).toSet
-    val qvs = Tables.embeddings(spark, Sf)
-      .filter(col("vec_id") < 10)
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1))
-    val mem = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Long, Seq[Double])]
-    val typed = mem.toDF().toDF("ts_ms", "query_id", "qv")
-      .select(timestamp_millis(col("ts_ms")).as("ts"),
-        col("query_id"), col("qv"))
-    val q = StreamingEvents.annServePqStream(typed, spark, Sf,
-        k = 5, delayMs = 3600000L)
-      .writeStream.format("memory").queryName("ann_serve_pq")
-      .outputMode("append").start()
-    try {
-      // two micro-batches: candidate accumulation must merge across them
-      val (q1, q2) = qvs.splitAt(5)
-      mem.addData(q1.map { case (id, v) => (1000L, id, v) }: _*)
-      q.processAllAvailable()
-      mem.addData(q2.map { case (id, v) => (2000L, id, v) }: _*)
-      q.processAllAvailable()
-      mem.addData((2000L + 3600000L * 3, 999L, qvs.head._2))
-      q.processAllAvailable()
-      val got = spark.table("ann_serve_pq").collect().map(row).toSet
-      assert(got == want,
-        s"streamed ${got.size} vs batch ${want.size}; " +
-          s"+${(got diff want).take(3)} -${(want diff got).take(3)}")
-      assert(got.nonEmpty)
-    } finally q.stop()
-  }
-
   test("ingest-history compaction: delta folds into the bucketed base, truncates, and stays probe-able") {
     // the maintenance half of the growing-history story: the
     // append-shaped delta is periodically rewritten INTO the bucketed
@@ -286,51 +209,12 @@ class Round18Spec extends SparkSpec {
     DedupQueries.historyStoresExecute(spark, Sf)
   }
 
-  test("streaming ADC through the CYCLED pointer: serves generation 3's codes after the reap") {
-    // tasks #2 + #4 composed: a PQ serving job booting after two
-    // maintenance cycles must resolve the pointer to g3 and answer
-    // from ITS code tables and codebooks — equal to the batch cycle
-    // face on every (query, neighbor, rank, adc).
-    import spark.implicits._
-    import graft.streaming.StreamingEvents
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    def row(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))
-    val want = SparkEntry.queries("ann_ivfpq_recluster_cycle")(spark, Sf)
-      .filter(col("query_id").isin(2L, 3L, 7L))
-      .collect().map(row).toSet
-    val qvs = Tables.embeddings(spark, Sf)
-      .filter(col("vec_id").isin(2L, 3L, 7L))
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1))
-    val mem = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Long, Seq[Double])]
-    val typed = mem.toDF().toDF("ts_ms", "query_id", "qv")
-      .select(timestamp_millis(col("ts_ms")).as("ts"),
-        col("query_id"), col("qv"))
-    val q = StreamingEvents.annServePqPtrStreamAt(typed, spark,
-        graft.pipeline.SimilarityQueries.cyclePtr(Sf),
-        k = 5, delayMs = 3600000L)
-      .writeStream.format("memory").queryName("ann_serve_pq_cyc")
-      .outputMode("append").start()
-    try {
-      mem.addData(qvs.map { case (id, v) => (1000L, id, v) }: _*)
-      q.processAllAvailable()
-      mem.addData((1000L + 3600000L * 3, 999L, qvs.head._2))
-      q.processAllAvailable()
-      val got = spark.table("ann_serve_pq_cyc").collect().map(row).toSet
-      assert(got == want, s"streamed $got vs batch $want")
-      assert(got.nonEmpty)
-    } finally q.stop()
-  }
-
   test("graft_sub: elementwise residual, codegen and interpreted agree, length follows the left") {
     import spark.implicits._
     val df = Seq(
       (1L, Seq(1.0, 2.5, -3.0), Seq(0.5, 2.5, 1.0)),
       (2L, Seq(4.0, 0.0, 1.0), Seq(1.0)) // short right: tail passes through
     ).toDF("id", "a", "b")
-    graft.functions.VectorExpressions.register(spark)
     val out = df.select(col("id"),
         call_function("graft_sub", col("a"), col("b")).as("r"))
       .orderBy("id").collect()

@@ -256,123 +256,6 @@ class Round19Spec extends SparkSpec {
     assert(codes.filter(col("vec_id") >= n).count() == n2 - n)
   }
 
-  test("streaming residual ADC: parity with the batch stored-residual face across split micro-batches") {
-    // VERDICT r14 #1 (missing): the residual tier — the recall winner
-    // — gets real serving plumbing. The per-(query, probed-cell) ADC
-    // is computed as a COLUMN (centroid lookup + graft_sub before the
-    // per-subspace fold); every (query, neighbor, rank, adc) must be
-    // bit-equal to ann_topk_ivfpq_residual_stored's.
-    import spark.implicits._
-    import graft.streaming.StreamingEvents
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    def row(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))
-    val want = SparkEntry.queries("ann_topk_ivfpq_residual_stored")(spark, Sf)
-      .collect().map(row).toSet
-    val qvs = Tables.embeddings(spark, Sf)
-      .filter(col("vec_id") < 10)
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1))
-    val mem = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Long, Seq[Double])]
-    val typed = mem.toDF().toDF("ts_ms", "query_id", "qv")
-      .select(timestamp_millis(col("ts_ms")).as("ts"),
-        col("query_id"), col("qv"))
-    val q = StreamingEvents.annServePqrStream(typed, spark, Sf,
-        k = 5, delayMs = 3600000L)
-      .writeStream.format("memory").queryName("ann_serve_pqr")
-      .outputMode("append").start()
-    try {
-      val (q1, q2) = qvs.splitAt(5)
-      mem.addData(q1.map { case (id, v) => (1000L, id, v) }: _*)
-      q.processAllAvailable()
-      mem.addData(q2.map { case (id, v) => (2000L, id, v) }: _*)
-      q.processAllAvailable()
-      mem.addData((2000L + 3600000L * 3, 999L, qvs.head._2))
-      q.processAllAvailable()
-      val got = spark.table("ann_serve_pqr").collect().map(row).toSet
-      assert(got == want,
-        s"streamed ${got.size} vs batch ${want.size}; " +
-          s"+${(got diff want).take(3)} -${(want diff got).take(3)}")
-      assert(got.nonEmpty)
-    } finally q.stop()
-  }
-
-  test("streaming residual ADC through the CYCLED pointer: serves generation 3's residual codes after the reap") {
-    import spark.implicits._
-    import graft.streaming.StreamingEvents
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    def row(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))
-    val want = SparkEntry.queries("ann_ivfpqr_recluster_cycle")(spark, Sf)
-      .filter(col("query_id").isin(2L, 3L, 7L))
-      .collect().map(row).toSet
-    val qvs = Tables.embeddings(spark, Sf)
-      .filter(col("vec_id").isin(2L, 3L, 7L))
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1))
-    val mem = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Long, Seq[Double])]
-    val typed = mem.toDF().toDF("ts_ms", "query_id", "qv")
-      .select(timestamp_millis(col("ts_ms")).as("ts"),
-        col("query_id"), col("qv"))
-    val q = StreamingEvents.annServePqrPtrStreamAt(typed, spark,
-        graft.pipeline.SimilarityQueries.cyclePtr(Sf),
-        k = 5, delayMs = 3600000L)
-      .writeStream.format("memory").queryName("ann_serve_pqr_cyc")
-      .outputMode("append").start()
-    try {
-      mem.addData(qvs.map { case (id, v) => (1000L, id, v) }: _*)
-      q.processAllAvailable()
-      mem.addData((1000L + 3600000L * 3, 999L, qvs.head._2))
-      q.processAllAvailable()
-      val got = spark.table("ann_serve_pqr_cyc").collect().map(row).toSet
-      assert(got == want, s"streamed $got vs batch $want")
-      assert(got.nonEmpty)
-    } finally q.stop()
-  }
-
-  test("streaming PER-CELL residual ADC: parity with the batch stored per-cell face across split micro-batches") {
-    // the per-cell tier's online face: the probed cell's OWN codebook
-    // resolved from the one-broadcast family by graft_group_adc — a
-    // plan O(1) in nlist — must reproduce the batch stored face
-    // bit-for-bit, in any batching
-    import spark.implicits._
-    import graft.streaming.StreamingEvents
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    def row(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))
-    val want = SparkEntry.queries("ann_topk_ivfpq_residual_cell_stored")(
-      spark, Sf).collect().map(row).toSet
-    val qvs = Tables.embeddings(spark, Sf)
-      .filter(col("vec_id") < 10)
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1))
-    val mem = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Long, Seq[Double])]
-    val typed = mem.toDF().toDF("ts_ms", "query_id", "qv")
-      .select(timestamp_millis(col("ts_ms")).as("ts"),
-        col("query_id"), col("qv"))
-    val q = StreamingEvents.annServePqrCellStream(typed, spark, Sf,
-        k = 5, delayMs = 3600000L)
-      .writeStream.format("memory").queryName("ann_serve_pqrc")
-      .outputMode("append").start()
-    try {
-      val (q1, q2) = qvs.splitAt(5)
-      mem.addData(q1.map { case (id, v) => (1000L, id, v) }: _*)
-      q.processAllAvailable()
-      mem.addData(q2.map { case (id, v) => (2000L, id, v) }: _*)
-      q.processAllAvailable()
-      mem.addData((2000L + 3600000L * 3, 999L, qvs.head._2))
-      q.processAllAvailable()
-      val got = spark.table("ann_serve_pqrc").collect().map(row).toSet
-      assert(got == want,
-        s"streamed ${got.size} vs batch ${want.size}; " +
-          s"+${(got diff want).take(3)} -${(want diff got).take(3)}")
-      assert(got.nonEmpty)
-    } finally q.stop()
-  }
-
   test("graft_group_nearest: argmin stays inside the row's own group, ties keep the smaller code, unknown gid fails loudly") {
     import spark.implicits._
     // gid 5's two codes are EQUIDISTANT from (0.1, 0.9):

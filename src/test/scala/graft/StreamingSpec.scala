@@ -781,6 +781,89 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("hybrid stream state bound: the lexical accumulator stays at LexKeep under 100x postings") {
+    // VERDICT r13 top item: the hybrid stream's lexical state grew
+    // O(distinct docs matching any query term). The bounded fold must (a) never hold more than
+    // LexKeep entries no matter how long the posting stream is, and
+    // (b) keep EXACTLY the arm's true top-20 — same scores, same
+    // (score desc, doc asc) order — as the unbounded accumulator.
+    import graft.streaming.StreamingEvents.{foldLexTop, LexKeep}
+    val n = LexKeep * 100 // a stop-word-heavy query: 2000 matching docs
+    // deterministic pseudo-random decimal contributions, several per doc
+    def contribs(seed: Int) = (0 until n * 3).map { i =>
+      val doc = (i * 31 + seed) % n
+      (doc.toLong, BigDecimal(((i * 7919 + seed * 104729) % 10000) + 1) / 1000)
+    }
+    // stream them through the fold in many small "micro-batches", with
+    // each doc's contributions kept within one batch (the contract:
+    // a query's postings co-arrive with its row)
+    val perDoc = contribs(42).groupBy(_._1).map { case (d, xs) =>
+      (d, xs.map(_._2).sum) }.toList
+    val batches = perDoc.grouped(37).toList
+    val kept = batches.foldLeft(List.empty[(Long, BigDecimal)]) {
+      (st, b) =>
+        val next = foldLexTop(st, b)
+        assert(next.size <= LexKeep, s"state grew to ${next.size}")
+        next
+    }
+    assert(kept.size == LexKeep)
+    // exactness: equals the unbounded accumulator's top-20
+    val want = perDoc.sortWith { case ((d1, s1), (d2, s2)) =>
+      val c = s1.compare(s2); if (c != 0) c > 0 else d1 < d2 }
+      .take(LexKeep)
+    assert(kept == want, s"bounded fold diverged:\n$kept\nvs\n$want")
+  }
+
+  test("replay watermark contract: a beyond-delay row drops, in-delay rows release in order, a quiet key drains on its timeout") {
+    // one replay face (the running total) pins the watermark contract
+    // every replay face shares
+    import spark.implicits._
+    import graft.streaming.StreamingEvents
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val mem = MemoryStream[(Long, Long, Long, Double)]
+    val q = StreamingEvents.runningTotalStream(mem.toDF()
+        .toDF("ts_ms", "user_id", "event_id", "value")
+        .select(timestamp_millis(col("ts_ms")).as("ts"), col("user_id"),
+          col("event_id"), col("value")), "1 hour")
+      .toDF().writeStream.format("memory").queryName("rt_wm")
+      .outputMode("append").start()
+    val h0 = 3600L * 1000 * 24
+    val m = 60000L
+    def got = spark.table("rt_wm").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(4))).toSet
+    val user1 = Set((1L, 11L, 1), (1L, 12L, 2), (1L, 13L, 3))
+    try {
+      // user 1: event 13 first, then 11 and 12 one batch later — late,
+      // but within the 1-hour delay of the high-water mark (h0+30m)
+      mem.addData((h0 + 30 * m, 1L, 13L, 1.0))
+      q.processAllAvailable()
+      mem.addData((h0 + 10 * m, 1L, 11L, 1.0), (h0 + 20 * m, 1L, 12L, 1.0))
+      q.processAllAvailable()
+      assert(got.isEmpty, "nothing is behind the watermark yet")
+      // user 9 moves the high-water mark to h0+3h, the watermark to
+      // h0+2h (a second batch at the same time makes that watermark the
+      // previous batch's). User 1 sends nothing more, yet its buffer
+      // drains on its timeout, replayed in event-time order.
+      mem.addData((h0 + 180 * m, 9L, 91L, 1.0))
+      q.processAllAvailable()
+      mem.addData((h0 + 180 * m, 9L, 92L, 1.0))
+      q.processAllAvailable()
+      assert(got == user1)
+      // arriving more than the delay behind the high-water mark (user
+      // 1's event 14) or exactly at the previous batch's watermark
+      // (user 2's event 21, Spark's `ts <= watermark`): both dropped.
+      // Two later batches move the watermark past both, so a buffered
+      // row would have been released.
+      mem.addData((h0 + 40 * m, 1L, 14L, 1.0), (h0 + 120 * m, 2L, 21L, 1.0))
+      q.processAllAvailable()
+      mem.addData((h0 + 600 * m, 9L, 93L, 1.0))
+      q.processAllAvailable()
+      mem.addData((h0 + 600 * m, 9L, 94L, 1.0))
+      q.processAllAvailable()
+      assert(got == user1 ++ Set((9L, 91L, 1), (9L, 92L, 2)))
+    } finally q.stop()
+  }
+
   test("streaming SCD2: closed intervals match the batch history's closed rows") {
     import spark.implicits._
     import graft.streaming.StreamingEvents
@@ -1700,7 +1783,6 @@ class StreamingSpec extends SparkSpec {
       assert(got(12L) == "quality", "the short doc fails the gate first")
       // the stage predicate is the BATCH funnel's own expression — a
       // quality-failing doc must also fail it in the batch face's terms
-      graft.functions.VectorExpressions.register(spark)
       val batchQf = typed(Seq((h0, 12L, "tiny")).toDF())
         .select(graft.pipeline.DedupQueries.qualityFailExpr).head().getBoolean(0)
       assert(batchQf, "batch predicate disagrees with streamed label")
