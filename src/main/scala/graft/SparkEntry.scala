@@ -13,8 +13,8 @@ object SparkEntry {
   /** One entry per implemented operator from SURVEY.md §2 (etl_*) plus
     * the north-star LLM-pipeline operator families (dedup_*, ann_*,
     * text_*, events_*, ...). Each face first tells the cache pool which
-    * dataset it serves, so a dataset switch releases the previous
-    * dataset's cached relations ([[graft.pipeline.CachePool.serving]]).
+    * dataset it serves, so a dataset switch frees the previous
+    * dataset's relation entries ([[graft.pipeline.CachePool.serving]]).
     * Names bound to one face function share one wrapper. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = served
   private lazy val served = faces.groupBy(_._2).flatMap { case (face, named) =>

@@ -37,8 +37,7 @@ object Corpus {
     * building it.
     */
   def requests(spark: SparkSession, sfDir: String): DataFrame =
-    graft.pipeline.CachePool.cached(
-      ("requests", sfDir, spark.sessionState.conf.numShufflePartitions))(build(spark, sfDir))
+    graft.pipeline.CachePool.cached(spark, sfDir, "requests")(build(spark, sfDir))
 
   private def build(spark: SparkSession, sfDir: String): DataFrame = {
     // raw scan: the repartition(doc_id) below is this corpus's
@@ -104,10 +103,9 @@ object Corpus {
       // plans analyze/optimize against a small InMemoryRelation instead
       // of re-canonicalizing the whole concat tree per reference (that
       // driver-side tree work, not execution, dominated the bench).
-      // CacheManager dedupes by canonical plan across queries; the
-      // repartition pins full parallelism for the cached copy.
-      // Lifecycle: pooled under ("requests", sfDir, partitions) like
-      // the dedup corpora, released at suite/corpus boundaries.
+      // The repartition pins full parallelism for the cached copy.
+      // Lifecycle: pooled as "requests" like the dedup corpora,
+      // released at a dataset switch.
       .repartition(spark.sessionState.conf.numShufflePartitions, col("doc_id"))
   }
 }

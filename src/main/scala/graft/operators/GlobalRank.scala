@@ -79,7 +79,7 @@ object GlobalRank {
       else df.sparkSession.sessionState.conf.numShufflePartitions
     val order = groupCols.map(col) ++ sortCols
     // Two lazy caches with DIFFERENT lifecycles (no construction-time
-    // job — the events_rfm invariant; see CachePool.cachedPair):
+    // job — the events_rfm invariant; see CachePool.cachedOver):
     //
     //  1. the INPUT, as a short-lived SCAFFOLD — `repartitionByRange`'s
     //     RangePartitioner runs a SAMPLING pass over the child before
@@ -89,7 +89,7 @@ object GlobalRank {
     //     finding). It is redundant the moment the keyed cache
     //     materializes, so CachePool reaps it then instead of pinning
     //     BOTH corpus-scale relations until release (ADVICE r10);
-    //  2. the KEYED relation (ids included), pool-registered — the id
+    //  2. the KEYED relation (ids included), pooled — the id
     //     assignment MUST materialize exactly once: RangePartitioner's
     //     sample seed derives from the shuffle RDD's id, so two
     //     materializations of the same range exchange draw DIFFERENT
@@ -105,11 +105,14 @@ object GlobalRank {
     // columns) plus the two id columns, not the raw corpus; at 100 TB
     // the same role is played by materializing the scored relation
     // before ranking, with disk spill absorbing what memory cannot.
-    val keyed = graft.pipeline.CachePool.cachedPair(df)(
-      _.repartitionByRange(parts, order: _*)
-        .sortWithinPartitions(order: _*)
-        .withColumn("__mid", monotonically_increasing_id())
-        .withColumn("__pid", shiftrightunsigned(col("__mid"), 33)))
+    // The input is any relation, so the entry is keyed on the ranked
+    // plan (its dataset is in its scans) rather than on a dataset.
+    val ranged = df.repartitionByRange(parts, order: _*)
+      .sortWithinPartitions(order: _*)
+      .withColumn("__mid", monotonically_increasing_id())
+      .withColumn("__pid", shiftrightunsigned(col("__mid"), 33))
+    val keyed = graft.pipeline.CachePool.cachedOver(df.sparkSession, "", "rank",
+      ranged.queryExecution.analyzed.canonicalized)(df, ranged)
     val gcols = "__pid" +: groupCols
     val stats = keyed.groupBy(gcols.map(col): _*)
       .agg(min("__mid").as("__mn"), count(lit(1)).as("__pc"))

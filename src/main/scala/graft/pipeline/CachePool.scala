@@ -1,181 +1,136 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 
-/** Explicit lifecycle for the MB-scale relations the dedup/ANN family
-  * pins in memory (dedup corpus, shingle rows, simhash fingerprints).
+/** The session's dataset-scoped store: one map holds every relation the
+  * query faces pin and every model they train.
   *
-  * Within one query — and across queries in one bench/verify run —
-  * the caches are load-bearing: subplans referenced several times are
-  * otherwise recomputed per reference, and CacheManager dedupes the
-  * cached copies by canonical plan. But a cache pinned forever is a
-  * leak in a long-lived session: a 100 TB deployment running many
-  * corpora through the same SparkSession would accrete cached
-  * relations until eviction pressure hurts unrelated queries. Every
-  * `.cache()` on those paths therefore registers here, and the session
-  * owner calls [[release]] at the end of a verify/bench suite.
+  * Key rule. Every entry is keyed on (name, dataset, shuffle partition
+  * count, extra): the caller's name, the dataset directory, the setting
+  * the entry's plans pin (the count `Tables`, the corpora and the range
+  * ranks partition to), and the caller's own parameters (`extra`, e.g. a
+  * table namespace or a round count; `GlobalRank`, which ranks any
+  * input, passes no dataset and its ranked plan instead). A caller
+  * passes only its name and extras, so a build, a hit and a [[drop]]
+  * always use one key shape. A hit returns the stored value without
+  * building anything.
   *
-  * A dataset switch is the other boundary, and [[serving]] acts on it:
-  * `SparkEntry.queries` calls it before every face, so the first face
-  * served on a new dataset drops the previous dataset's cached
-  * relations ([[releaseCaches]]) while its trained models stay
-  * memoized (they are keyed by dataset, driver-sized, and cost seconds
-  * to retrain). A bench that warms up on sf0.001 and then sweeps
-  * sf0.01 therefore holds only the sf0.01 relations during the sweeps.
-  * No memo entry returns a pooled handle: a handle re-executed after
-  * its cache was released would rebuild and re-pin blocks no pool
-  * entry tracks, so memoized bodies keep only models, table names and
-  * `localCheckpoint`s.
+  * Entries. A relation holds blocks: a `cache()`d plan ([[cached]],
+  * [[cachedOver]]) or the `localCheckpoint`ed RDDs under a plan
+  * ([[checkpointed]]). A model ([[memoized]]) is a driver-side value:
+  * centroids, codebooks, merges, built table names, Bloom broadcasts,
+  * counters. A model must not hold a relation: a switch would keep its
+  * blocks.
   *
-  * Registration is deduped by canonicalized plan (ADVICE r10:
-  * planning-only sweeps construct the same queries repeatedly and must
-  * not grow the pool), and the two-phase rank pattern's scaffold cache
-  * has its own shorter lifecycle — see [[cachedPair]].
+  * Switch. `SparkEntry.queries` calls [[serving]] before every face; the
+  * first face served on another dataset frees every relation entry's
+  * blocks ([[releaseCaches]]) and keeps every model (keyed by dataset,
+  * driver-sized, seconds to retrain). A bench that warms up on sf0.001
+  * and then sweeps sf0.01 holds only sf0.01 blocks during the sweeps.
+  * The switch, not a face-family boundary, is the release point:
+  * releasing at every family boundary measured 185.4 s vs 167.1 s for
+  * the full suite at sf0.1/local[32] (the rebuilds cost more than the
+  * memory they free). [[release]] (end of a suite) drops everything.
   *
-  * Relations with a natural key — a (name, dataset) pair, like the
-  * memo entries below — are pooled through the keyed overload
-  * `cached(key)(build)`: the first call builds, caches and registers
-  * the relation and keeps its handle under the key; every later call
-  * returns that handle without building anything. Both [[release]]
-  * and [[releaseCaches]] drop the keyed handles together with their
-  * caches, so the first call after a release builds and caches again.
+  * A handle built before a switch must not be executed after it: a
+  * released cache recomputes outside the store, and a released
+  * `localCheckpoint` cannot recompute at all. `Bench`, `Verify` and the
+  * perfbench harness build and execute each face on one dataset.
   */
 object CachePool {
-  private val pool = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-  private val seen = scala.collection.mutable.HashSet.empty[LogicalPlan]
-  // handles of the keyed overload of [[cached]], each also in `pool`
-  private val keyed = scala.collection.mutable.HashMap.empty[Any, DataFrame]
-  // (scaffold, derived) pairs from [[cachedPair]]: the scaffold is
-  // unpersisted as soon as the derived cache is observed materialized
-  private val pairs =
-    scala.collection.mutable.ArrayBuffer.empty[(DataFrame, DataFrame)]
-
-  /** Cache `df` and register it for a later [[release]]. Re-caching a
-    * plan this pool already holds returns the fresh handle (storage is
-    * shared — CacheManager dedupes by canonical plan) without growing
-    * the pool. */
-  def cached(df: DataFrame): DataFrame = synchronized {
-    reapPairs()
-    val c = df.cache()
-    if (seen.add(c.queryExecution.analyzed.canonicalized)) pool += c
-    c
-  }
-
-  /** Keyed [[cached]]: the handle pooled under `key`, building and
-    * caching it on first touch. A hit skips `build` altogether, so a
-    * steady caller pays neither the analysis of the nested plan it
-    * would construct nor the CacheManager lookup of `df.cache()`.
-    * `key` must identify the relation `build` makes, settings its plan
-    * pins included, e.g. `("embDouble", sfDir, numShufflePartitions)`. */
-  def cached(key: Any)(build: => DataFrame): DataFrame = synchronized {
-    reapPairs()
-    keyed.getOrElseUpdate(key, cached(build))
-  }
-
-  /** The GlobalRank double-cache with the scaffold's shorter
-    * lifecycle (ADVICE r10: rankCore pinned TWO corpus-scale
-    * relations until release, though the input cache only exists to
-    * keep `repartitionByRange`'s sampling pass + shuffle write from
-    * executing the input pipeline twice during the DERIVED cache's
-    * first materialization). The input is cached WITHOUT pool
-    * registration; once the derived relation's column buffers are
-    * observed loaded — checked lazily at the next [[cached]] /
-    * [[memoized]] touch, i.e. between queries in a bench/verify
-    * sweep — the scaffold is unpersisted: every later read hits the
-    * derived cache, and even a derived-partition recompute re-reads
-    * the already-written range-shuffle output, never the scaffold.
-    * Dropping the scaffold early is thus always CORRECT (worst case:
-    * a never-materialized derived plan pays the input twice, exactly
-    * the single-cache behavior). */
-  def cachedPair(input: DataFrame)(build: DataFrame => DataFrame)
-      : DataFrame = synchronized {
-    val in = input.cache()
-    val out = cached(build(in))
-    pairs += ((in, out))
-    out
-  }
-
-  /** True once the derived cache's buffers exist (or its cache entry
-    * is gone) — the point after which the scaffold is dead weight. */
-  private def materialized(out: DataFrame): Boolean =
-    out.queryExecution.optimizedPlan.collectFirst {
-      case r: InMemoryRelation => r.cacheBuilder.isCachedColumnBuffersLoaded
+  /** A relation entry; every other stored value is a model. `scaffold`:
+    * the cached input of a [[cachedOver]] entry, held until `df`'s
+    * column buffers are loaded. */
+  private final class Relation(val df: DataFrame, var scaffold: Option[DataFrame]) {
+    def loaded: Boolean = df.queryExecution.optimizedPlan.collectFirst {
+      case m: InMemoryRelation => m.cacheBuilder.isCachedColumnBuffersLoaded
     }.getOrElse(true)
-
-  private def reapPairs(): Unit = {
-    val (done, live) = pairs.partition { case (_, out) => materialized(out) }
-    if (done.nonEmpty) {
-      done.foreach(_._1.unpersist(false))
-      pairs.clear()
-      pairs ++= live
+    def freeScaffold(): Unit = { scaffold.foreach(_.unpersist(false)); scaffold = None }
+    def free(): Unit = {
+      freeScaffold()
+      df.unpersist(false)
+      // the blocks of a localCheckpoint sit in the RDDs under its plan
+      df.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }.foreach(_.unpersist(false))
     }
   }
 
-  /** Unpersist the pooled cached relations but KEEP the memoized
-    * model state — a lifecycle for memory-constrained callers: the
-    * pool holds the corpus-scale relations whose accretion pressures
-    * unrelated queries' memory, while memo entries are trained models
-    * (centroids, merges, weights, built index-table names) that are
-    * expensive to retrain and mostly driver-sized. A memoized value
-    * that referenced a pooled cache recomputes lazily — correctness
-    * is unaffected, only the cache cost is re-paid on next touch.
-    * [[serving]] calls it at a dataset switch. Releasing at every
-    * query-family boundary instead measured 185.4 s vs 167.1 s for the
-    * full suite at sf0.1/local[32] (the rebuilds cost more than the
-    * memory they free). */
-  def releaseCaches(): Unit = synchronized {
-    pairs.foreach(_._1.unpersist(false))
-    pairs.clear()
-    pool.foreach(_.unpersist(false))
-    pool.clear()
-    seen.clear()
-    keyed.clear()
-  }
-
+  private val store = scala.collection.mutable.HashMap.empty[Any, Any]
   // the dataset the last face was served on; see [[serving]]
   private var servingDir: String = null
 
+  private def key(s: SparkSession, d: String, name: String, extra: Seq[Any]) =
+    (name, d, s.sessionState.conf.numShufflePartitions, extra)
+
+  private def entry[T](s: SparkSession, d: String, name: String, extra: Seq[Any])(
+      make: => Any): T = synchronized {
+    store.valuesIterator.foreach {
+      case r: Relation if r.scaffold.nonEmpty && r.loaded => r.freeScaffold()
+      case _ =>
+    }
+    store.getOrElseUpdate(key(s, d, name, extra), make).asInstanceOf[T]
+  }
+
+  /** The relation stored under the key, `build` cached on first touch. */
+  def cached(s: SparkSession, d: String, name: String, extra: Any*)(
+      build: => DataFrame): DataFrame =
+    entry[Relation](s, d, name, extra)(new Relation(build.cache(), None)).df
+
+  /** [[cached]] for a relation whose first materialization reads `input`
+    * twice (`repartitionByRange` samples its child, then shuffles it):
+    * `input` is cached first, as a scaffold that the first store touch
+    * after `derived`'s buffers load unpersists. Every later read hits
+    * `derived`'s cache or its range-shuffle output, never the scaffold,
+    * so dropping it early is always correct. */
+  def cachedOver(s: SparkSession, d: String, name: String, extra: Any*)(
+      input: DataFrame, derived: DataFrame): DataFrame =
+    entry[Relation](s, d, name, extra) {
+      input.cache()
+      new Relation(derived.cache(), Some(input))
+    }.df
+
+  /** The relation `build` returns on first touch: a plan over
+    * `localCheckpoint`ed RDDs, whose blocks a drop unpersists. */
+  def checkpointed(s: SparkSession, d: String, name: String, extra: Any*)(
+      build: => DataFrame): DataFrame =
+    entry[Relation](s, d, name, extra)(new Relation(build, None)).df
+
+  /** The model stored under the key, built on first touch. */
+  def memoized[T](s: SparkSession, d: String, name: String, extra: Any*)(
+      build: => T): T =
+    entry[T](s, d, name, extra)(build)
+
+  /** Forget one model: for a maintenance job that rewrote the tables the
+    * model stands for (the ingest-history compaction), where [[release]]
+    * would drop every other model too. */
+  def drop(s: SparkSession, d: String, name: String, extra: Any*): Unit =
+    synchronized { store.remove(key(s, d, name, extra)); () }
+
+  /** Free every relation entry's blocks and forget it; keep the models. */
+  def releaseCaches(): Unit = synchronized {
+    store.filterInPlace {
+      case (_, r: Relation) => r.free(); false
+      case _ => true
+    }
+  }
+
   /** The dataset-switch boundary: called with the dataset directory
-    * before each face is built. When it differs from the directory of
-    * the previous call, the previous dataset's cached relations are
-    * released ([[releaseCaches]]); memoized models stay. */
+    * before each face is built; a directory other than the previous
+    * call's runs [[releaseCaches]]. */
   def serving(sfDir: String): Unit = synchronized {
     if (servingDir != null && servingDir != sfDir) releaseCaches()
     servingDir = sfDir
   }
 
-  /** Unpersist every registered relation (non-blocking) and forget it,
-    * models included — the corpus-lifecycle boundary. */
+  /** Drop every entry, models included: the end of a suite. */
   def release(): Unit = synchronized {
     releaseCaches()
-    memo.clear()
+    store.clear()
   }
 
-  // Memoized model state (trained once per (owner, dataset), reused by
-  // every query that serves it — the stored-model analog of the
-  // bucketed indexes). Cleared with [[release]] at the same corpus
-  // lifecycle boundaries; entries hold localCheckpointed relations
-  // whose blocks the ContextCleaner frees once dereferenced.
-  private val memo = scala.collection.mutable.HashMap.empty[Any, Any]
-
-  /** Build-once lookup: returns the cached value for `key`, building
-    * and remembering it on first touch. */
-  def memoized[T](key: Any)(build: => T): T = synchronized {
-    reapPairs()
-    memo.getOrElseUpdate(key, build).asInstanceOf[T]
-  }
-
-  /** Forget ONE memo entry — the targeted lifecycle boundary for a
-    * maintenance job that rewrote the tables a build-once key stands
-    * for (e.g. the ingest-history compaction), where a full
-    * [[release]] would needlessly drop every other trained model. */
-  def memoDrop(key: Any): Unit = synchronized { memo.remove(key); () }
-
-  /** Diagnostic counts: how much pooled/memoized state the session has
-    * accreted. perfbench records them as its `pool.size`/`pool.memo`
-    * metrics; the tests read `poolSize` to check pooling. */
-  def poolSize: Int = synchronized { pool.size }
-  def memoSize: Int = synchronized { memo.size }
+  /** Relation and model entry counts; perfbench records them as
+    * `pool.size` and `pool.memo`. */
+  def poolSize: Int = synchronized { store.valuesIterator.count(_.isInstanceOf[Relation]) }
+  def memoSize: Int = synchronized { store.size - poolSize }
 }

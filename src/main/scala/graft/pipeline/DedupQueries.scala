@@ -75,12 +75,12 @@ object DedupQueries {
     * partitioned, which satisfies the window's and the dedup agg's
     * required distribution, so the whole pipeline runs exchange-free
     * and the cache inherits doc_id partitioning for the downstream
-    * per-doc aggregations. CacheManager dedupes by canonical plan, so
-    * minhash and ngram_jaccard share one cached copy per sfDir. The
+    * per-doc aggregations. One pooled entry per dataset, so minhash,
+    * ngram_jaccard and every other consumer share one cached copy. The
     * shingle text is dropped after the dedup, so the cache holds two
     * longs per row: every consumer reads only (doc_id, h). */
-  private[graft] def shingleRows(corpus: DataFrame): DataFrame =
-    CachePool.cached(shingleRowsOf(corpus))
+  private[graft] def shingleRows(s: SparkSession, d: String): DataFrame =
+    CachePool.cached(s, d, "shingleRows")(shingleRowsOf(DupCorpus.corpus(s, d)))
 
   /** The uncached body — for per-micro-batch callers (the ingest
     * sink), where registering every batch's plan in the session cache
@@ -152,7 +152,7 @@ FROM dup GROUP BY md5(text) ORDER BY keeper_doc_id"""
     * invocation — two consumers, one dup-graph-sized relation (2.4 k
     * rows at sf0.1), same lifecycle as the pairs it feeds. */
   private[graft] def minhashCandidates(s: SparkSession, d: String): DataFrame =
-    CachePool.cached(bandPairs(bandRows(shingleRows(DupCorpus.corpus(s, d)))))
+    CachePool.cached(s, d, "minhashCandidates")(bandPairs(bandRows(shingleRows(s, d))))
 
   /** The verified minhash pair relation before output ordering — the
     * DUP GRAPH every downstream face consumes: the registered face and
@@ -165,20 +165,15 @@ FROM dup GROUP BY md5(text) ORDER BY keeper_doc_id"""
     * verify per invocation — the candidate join was the single most
     * recomputed subplan in the bench (guide §2.4: two operations keyed
     * the same way should share one exchange; here they share the whole
-    * pipeline). CacheManager dedupes by canonical plan, so every
-    * consumer — including ones composing this via [[jaccardVerify]] —
-    * reads one in-memory copy; lifecycle ends at the corpus boundary
-    * ([[CachePool.release]]), exactly like the shingle cache. Keyed
-    * by dataset and shuffle partition count, like the corpus it reads:
-    * a steady call returns the pooled handle and never
-    * re-builds (and re-analyses) the corpus → shingles → candidates →
-    * pairs chain. */
-  private[graft] def minhashPairs(s: SparkSession, d: String): DataFrame = {
-    CachePool.cached(("minhashPairs", d, s.sessionState.conf.numShufflePartitions)) {
-      val sh = shingleRows(DupCorpus.corpus(s, d))
-      jaccardVerify(minhashCandidates(s, d), shingleSketches(sh), 0.4)
+    * pipeline). Every consumer — including ones composing this via
+    * [[jaccardVerify]] — reads one in-memory copy; it is released at a
+    * dataset switch, like the shingle cache. A steady call returns the
+    * pooled handle and never re-builds (and re-analyses) the corpus →
+    * shingles → candidates → pairs chain. */
+  private[graft] def minhashPairs(s: SparkSession, d: String): DataFrame =
+    CachePool.cached(s, d, "minhashPairs") {
+      jaccardVerify(minhashCandidates(s, d), shingleSketches(shingleRows(s, d)), 0.4)
     }
-  }
   private val minhash: Q = (s, d) =>
     minhashPairs(s, d).orderBy("doc_a", "doc_b")
 
@@ -195,14 +190,14 @@ FROM dup GROUP BY md5(text) ORDER BY keeper_doc_id"""
     * history — reads co-located buckets. Same math as [[minhash]]; the
     * oracle SQL is shared verbatim. */
   private val minhashBucketed: Q = (s, d) => {
-    val sh = shingleRows(DupCorpus.corpus(s, d))
+    val sh = shingleRows(s, d)
     // build-once index (round 18): at 100 TB the banded store is
     // written at ingest, not per dedup pass — memoized per dataset
     // exactly like the ANN cell stores and the search postings index
     // (rep-1 pays the write; every serve is the bucket-pruned read);
     // dataset-hashed table name per the historyStores convention
     val bandsT = s"graft_minhash_bands_${d.hashCode & 0x7fffffff}"
-    CachePool.memoized(("minhashBandStore", d)) {
+    CachePool.memoized(s, d, "minhashBandStore") {
       graft.sources.BucketedStore.write(bandRows(sh), bandsT,
         Seq("band_idx", "k1", "k2"), 8)
     }
@@ -262,14 +257,14 @@ WHERE CAST(i.ni AS DOUBLE) / (na.n + nb.n - i.ni) >= 0.4"""
     * all pairs and filters to those touching a new doc — identical sets
     * because band collision is symmetric and the split is disjoint. */
   private val minhashIncremental: Q = (s, d) => {
-    val sh = shingleRows(DupCorpus.corpus(s, d))
+    val sh = shingleRows(s, d)
     val bands = bandRows(sh)
     val isNew = pmod(col("doc_id"), lit(5)) === 0
     // build-once history index (round 18) — same memoized-write
     // discipline as [[minhashBucketed]]: the ingest shape this face
     // models indexes history ONCE and probes it per batch
     val histT = s"graft_minhash_history_${d.hashCode & 0x7fffffff}"
-    CachePool.memoized(("minhashHistoryStore", d)) {
+    CachePool.memoized(s, d, "minhashHistoryStore") {
       graft.sources.BucketedStore.write(bands.filter(!isNew),
         histT, Seq("band_idx", "k1", "k2"), 8)
     }
@@ -399,7 +394,7 @@ ORDER BY doc_a, doc_b"""
         Seq("doc_a", "doc_b"), 8)
       s.sql(s"DROP TABLE IF EXISTS `$pairsT`")
     }
-    CachePool.memoDrop(("mhBaseBloom", d, ns))
+    CachePool.drop(s, d, "mhBaseBloom", ns)
     // reset the sink's running delta-size counter (VERDICT r15 #7).
     // Scope (ADVICE r16): this drop only reaches THIS JVM's memo — a
     // fold run by this process (the sink's own trigger or an
@@ -409,7 +404,7 @@ ORDER BY doc_a, doc_b"""
     // triggers one spurious compaction — idempotent and harmless (the
     // delta it folds is just small), after which the re-seeded
     // counter is accurate again.
-    CachePool.memoDrop(("mhDeltaDocs", d, ns))
+    CachePool.drop(s, d, "mhDeltaDocs", ns)
   }
 
   /** The ingest-history LIFECYCLE as one oracle-gated face, in its own
@@ -426,7 +421,7 @@ ORDER BY doc_a, doc_b"""
     * once per session (memoized); the read-back is the bucketed
     * table, i.e. the layout every later probe rides. */
   private val historyCompact: Q = (s, d) => {
-    CachePool.memoized(("mhCompactFace", d)) {
+    CachePool.memoized(s, d, "mhCompactFace") {
       val (dB, dSk, pT) = ingestTables(d, "_lc")
       Seq(dB, dSk, pT, pairsBaseTable(d, "_lc"))
         .foreach(t => s.sql(s"DROP TABLE IF EXISTS `$t`"))
@@ -453,17 +448,18 @@ ORDER BY doc_id, band_idx"""
     * re-reads history text. */
   private[graft] def historyStoresExecute(s: SparkSession, d: String,
       ns: String = ""): Unit =
-    CachePool.memoized(("mhHistory", d, ns)) {
+    CachePool.memoized(s, d, "mhHistory", ns) {
       val (bandsT, skT) = historyStores(d, ns)
-      val sh = shingleRows(DupCorpus.corpus(s, d)
-        .filter(pmod(col("doc_id"), lit(5)) =!= 0))
+      // both namespaces' histories hold the same slice: one relation
+      val sh = CachePool.cached(s, d, "historyShingles")(shingleRowsOf(
+        DupCorpus.corpus(s, d).filter(pmod(col("doc_id"), lit(5)) =!= 0)))
       graft.sources.BucketedStore.write(bandRows(sh), bandsT,
         Seq("band_idx", "k1", "k2"), 8)
       graft.sources.BucketedStore.write(shingleSketches(sh), skT,
         "doc_id", 8)
       // a (re)boot owns its dependents like the compaction does: the
       // ingest sink's base-id Bloom must rebuild over THIS base
-      CachePool.memoDrop(("mhBaseBloom", d, ns))
+      CachePool.drop(s, d, "mhBaseBloom", ns)
     }
 
   // -------------------------------------------------------------- cluster
@@ -519,23 +515,20 @@ ORDER BY doc_id, band_idx"""
       (col("doc_id") === col("label")).as("is_canonical"))
       .orderBy("doc_id")
   }
-  /** Memoized CC labels per (graph, dataset) — round 18. The label
-    * relation is a loop-produced model-like artifact (the dup graph's
-    * cluster assignment): the cluster face, the size census and the
-    * BFS seeding all consume the SAME labels, but the propagation
-    * loop's output is RDD-backed (localCheckpoint per round) so the
-    * canonical-plan dedup of CachePool/CacheManager can never share
-    * it across invocations — memoize it like the other loop-trained
-    * models (classifier pocket, BPE merges, centroids). First touch
-    * pays the propagation; the stored labels are dup-graph-sized and
-    * are dropped with the memo at the corpus lifecycle boundary. */
-  private[graft] def ccLabelsMemo(key: String, d: String)(
+  /** The CC labels of one pair graph on one dataset, stored once: the
+    * cluster face, the size census and the BFS seeding all consume the
+    * SAME labels (the dup graph's cluster assignment), and the
+    * propagation loop's output is RDD-backed (localCheckpoint per
+    * round), so no plan match could share it across invocations.
+    * First touch pays the propagation; the stored labels are
+    * dup-graph-sized, and a dataset switch frees their blocks. */
+  private[graft] def ccLabels(s: SparkSession, d: String, graph: String)(
       pairs: => DataFrame): DataFrame =
-    CachePool.memoized(("ccLabels", key, d)) {
+    CachePool.checkpointed(s, d, "ccLabels", graph) {
       connectedComponents(pairs).localCheckpoint()
     }
   private val cluster: Q = (s, d) =>
-    ccLabelsMemo("minhash", d)(minhashPairs(s, d).select("doc_a", "doc_b"))
+    ccLabels(s, d, "minhash")(minhashPairs(s, d).select("doc_a", "doc_b"))
   private val clusterSql =
     minhashCtes.replaceFirst("WITH ", "WITH RECURSIVE ") + s""", pairs AS MATERIALIZED (
 $minhashPairSelect
@@ -590,8 +583,8 @@ $clusterSql
     * not similarity-transitive).
     *
     * Spark side: ONE plan, no driver loop. Each symmetric edge is
-    * tagged with its component label (the memoized
-    * [[connectedComponents]] labels), the edges are grouped by
+    * tagged with its component label (the stored [[ccLabels]]), the
+    * edges are grouped by
     * component, and the `graft_bfs_hops` kernel walks the component's
     * src/dst lists from the canonical root inside the task; the
     * (doc_id, hops) structs are exploded back to rows. Building the
@@ -606,7 +599,7 @@ $clusterSql
     * capped at the same bound, min() per node. */
   private val bfsHops: Q = (s, d) => {
     val e = minhashPairs(s, d).select("doc_a", "doc_b")
-    val labels = ccLabelsMemo("minhash", d)(e)
+    val labels = ccLabels(s, d, "minhash")(e)
       .select(col("doc_id").as("doc_a"), col("cluster_id"))
     e.unionAll(e.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
       .join(labels, "doc_a")
@@ -684,7 +677,7 @@ GROUP BY l.doc_id, l.cluster_id ORDER BY l.doc_id"""
     // k-gram + two framed windows run once per corpus (round 18; the
     // density-2/(w+1) winnow relation is the SMALL output of that
     // pipeline, the same lifecycle argument as the pooled shingles)
-    val fps = CachePool.cached(kgr
+    val fps = CachePool.cached(s, d, "winnowFingerprints")(kgr
       .withColumn("fp", min("h").over(winFrame))
       .withColumn("m", count(lit(1)).over(whole))
       // last W-1 positions start truncated windows — not winnow picks
@@ -818,7 +811,7 @@ FROM r$PrIters ORDER BY doc_id"""
     * [[minhash]] (same scale posture); only the denominator and the
     * 0.7 threshold differ. */
   private val containment: Q = (s, d) => {
-    val sk = shingleSketches(shingleRows(DupCorpus.corpus(s, d)))
+    val sk = shingleSketches(shingleRows(s, d))
     val c = col("ni").cast("double") / least(col("na"), col("nb"))
     minhashCandidates(s, d)
       .join(sk.select(col("doc_id").as("doc_a"),
@@ -1176,8 +1169,8 @@ FROM nodes GROUP BY doc_id ORDER BY doc_id"""
       else balancedSum(cols.grouped(2).map(g => g.reduce(_ + _)).toSeq)
     val fpExpr = balancedSum((0 to 59).map(j =>
       when(col(s"s$j") * 2 > col("n"), lit(1L << j)).otherwise(0L)))
-    val fp = CachePool.cached(votes.select(col("doc_id"), col("lang"),
-      fpExpr.as("fp"), expr("n div 8").as("nb")))
+    val fp = CachePool.cached(s, d, "simhashFingerprints")(
+      votes.select(col("doc_id"), col("lang"), fpExpr.as("fp"), expr("n div 8").as("nb")))
       // one row per doc; both sides of the chunk self-join and the
       // bucket-size census read it — cache so the vote pipeline runs once
     val chunks = fp.select(col("doc_id"), col("lang"), col("fp"), col("nb"),
@@ -1257,7 +1250,7 @@ ORDER BY doc_a, doc_b"""
     * exposed for DedupSpec's candidate-volume bound. */
   private[graft] def ngramCandidates(s: SparkSession, d: String): DataFrame = {
     val corpus = DupCorpus.corpus(s, d)
-    val sh = shingleRows(corpus)
+    val sh = shingleRows(s, d)
     val pmin = sh.groupBy("doc_id").agg(
       min(DupCorpus.perm(100, col("h"))).as("p0"),
       min(DupCorpus.perm(101, col("h"))).as("p1"))
@@ -1278,7 +1271,7 @@ ORDER BY doc_a, doc_b"""
       .distinct()
   }
   private val ngramJaccard: Q = (s, d) => {
-    val sh = shingleRows(DupCorpus.corpus(s, d))
+    val sh = shingleRows(s, d)
     jaccardVerify(ngramCandidates(s, d), shingleSketches(sh), 0.5)
       .orderBy("doc_a", "doc_b")
   }
@@ -1411,7 +1404,7 @@ ORDER BY b.doc_id"""
   /** The prefix-colliding candidate pairs — exposed for DedupSpec's
     * candidate-volume bound. */
   private[graft] def prefixCandidates(s: SparkSession, d: String): DataFrame = {
-    val sh = shingleRows(DupCorpus.corpus(s, d))
+    val sh = shingleRows(s, d)
     val freq = sh.groupBy("h").agg(count(lit(1)).as("cnt"))
     val sized = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val wDoc = Window.partitionBy("doc_id").orderBy(col("cnt"), col("h"))
@@ -1429,7 +1422,7 @@ ORDER BY b.doc_id"""
     // every consuming face re-ran the whole prefix pipeline; the pooled
     // cache serves both the within-plan double read AND repeat faces —
     // PlanHygieneSpec's exchange ceiling still holds)
-    val prefC = CachePool.cached(pref)
+    val prefC = CachePool.cached(s, d, "prefixRelation")(pref)
     val b = prefC.select(col("doc_id").as("doc_b_id"),
       col("h").as("h_b"), col("n").as("n_b"))
     prefC.as("a").join(b,
@@ -1444,9 +1437,8 @@ ORDER BY b.doc_id"""
     * [[minhashPairs]] (round 18): the registered face and the LSH
     * recall eval both consume it, and the relation is pair-sized. */
   private[graft] def prefixPairs(s: SparkSession, d: String): DataFrame = {
-    val sh = shingleRows(DupCorpus.corpus(s, d))
-    CachePool.cached(
-      jaccardVerify(prefixCandidates(s, d), shingleSketches(sh), 0.5))
+    CachePool.cached(s, d, "prefixPairs")(
+      jaccardVerify(prefixCandidates(s, d), shingleSketches(shingleRows(s, d)), 0.5))
   }
   private val prefixJaccard: Q = (s, d) =>
     prefixPairs(s, d).orderBy("doc_a", "doc_b")

@@ -42,8 +42,7 @@ object DupCorpus {
     * to), every call returns the same cached DataFrame without
     * building it. */
   def corpus(spark: SparkSession, sfDir: String): DataFrame =
-    CachePool.cached(
-      ("dupCorpus", sfDir, spark.sessionState.conf.numShufflePartitions))(build(spark, sfDir))
+    CachePool.cached(spark, sfDir, "dupCorpus")(build(spark, sfDir))
 
   private def build(spark: SparkSession, sfDir: String): DataFrame = {
     // raw scan: the repartition(doc_id) below supplies parallelism
@@ -63,8 +62,7 @@ object DupCorpus {
       // within one (canonical-plan cache dedupe applies). Repartition
       // so the cached copy keeps full parallelism for the explode-heavy
       // consumers (see DedupQueries.shingleRows note). Lifecycle:
-      // pooled under ("dupCorpus", sfDir, partitions), released at
-      // suite/corpus boundaries.
+      // pooled as "dupCorpus", released at a dataset switch.
       .repartition(spark.sessionState.conf.numShufflePartitions, col("doc_id"))
   }
 

@@ -1590,7 +1590,7 @@ FROM dau JOIN mau USING (d) ORDER BY day_ms"""
     // whose plans would nest 2³ copies of the events aggregation), the
     // per-user relation is referenced twice total, and construction
     // stays action-free (the eager-anchor lesson).
-    val perUserC = CachePool.cached(perUser)
+    val perUserC = CachePool.cached(s, d, "rfmPerUser")(perUser)
     val melt = perUserC.select(col("user_id"), explode(map(
       lit("r"), col("recency_days").cast("decimal(30,6)"),
       lit("f"), (-col("frequency")).cast("decimal(30,6)"),
@@ -2607,7 +2607,7 @@ FROM conv"""
     // below (local ranks + per-pid counts) must see ONE materialization
     // of the partitioning (RangePartitioner's sample seed is rdd-id-
     // derived, so re-materialization can shift boundaries)
-    val parted = graft.pipeline.CachePool.cached(
+    val parted = graft.pipeline.CachePool.cached(s, d, "paretoRanged")(
       u.repartitionByRange(
           s.sessionState.conf.numShufflePartitions, col("x"), col("user_id"))
         .withColumn("pid", spark_partition_id()))
@@ -2842,7 +2842,7 @@ FROM f"""
     // below (local ranks + per-pid counts) must see ONE materialization
     // of the partitioning (RangePartitioner's sample seed is rdd-id-
     // derived, so re-materialization can shift boundaries)
-    val parted = graft.pipeline.CachePool.cached(
+    val parted = graft.pipeline.CachePool.cached(s, d, "peakRanged")(
       bounds
         .repartitionByRange(
           s.sessionState.conf.numShufflePartitions, col("ms"), col("delta"), col("user_id"))

@@ -235,7 +235,7 @@ FROM r ORDER BY doc_id, row_idx"""
     * readout face's output ORDER BY for an input their own windows
     * re-sort anyway). */
   private[graft] def energyFrames(s: SparkSession, d: String): DataFrame =
-    CachePool.cached(energyFramesOf(Tables.documents(s, d)))
+    CachePool.cached(s, d, "energyFrames")(energyFramesOf(Tables.documents(s, d)))
   private val audioEnergy: Q = (s, d) =>
     energyFrames(s, d).orderBy("doc_id", "frame_id")
   /** The frames CTE body over a named source relation — shared by the
@@ -402,7 +402,7 @@ FROM cuts ORDER BY doc_id, cut_id"""
     // one row of 4 ints per doc; the band explode AND both sides of the
     // candidate self-join read it — cache so the 72-sample extraction
     // runs once (the simhash fp pattern)
-    CachePool.cached(phashSignaturesOf(DupCorpus.corpus(s, d)))
+    CachePool.cached(s, d, "phashSignatures")(phashSignaturesOf(DupCorpus.corpus(s, d)))
   /** Band-collision pairs with their full Hamming distance — exposed
     * for the candidate-volume bound in MultimodalSpec. */
   private[graft] def phashCandidatesOf(sig: DataFrame): DataFrame = {
@@ -431,7 +431,7 @@ FROM cuts ORDER BY doc_id, cut_id"""
     * pair-sized (≪ corpus), so the banded self-join runs once per
     * corpus, not once per consuming face. */
   private[graft] def phashPairs(s: SparkSession, d: String): DataFrame =
-    CachePool.cached(phashCandidates(s, d).filter(col("hamming") <= 10))
+    CachePool.cached(s, d, "phashPairs")(phashCandidates(s, d).filter(col("hamming") <= 10))
   private val phashDedup: Q = (s, d) =>
     phashPairs(s, d).orderBy("doc_a", "doc_b")
   /** The phash CTE chain from a `media(doc_id, text)` relation to the
@@ -525,7 +525,7 @@ ORDER BY doc_a, doc_b"""
       band(2).as("b2"), band(3).as("b3"))
   }
   private[graft] def audioSignatures(s: SparkSession, d: String): DataFrame =
-    CachePool.cached(audioSignaturesOf(DupCorpus.corpus(s, d)))
+    CachePool.cached(s, d, "audioSignatures")(audioSignaturesOf(DupCorpus.corpus(s, d)))
   private val audioDedup: Q = (s, d) =>
     phashCandidatesOf(audioSignatures(s, d))
       .filter(col("hamming") <= 10)
@@ -610,7 +610,7 @@ WHERE hamming <= 10 ORDER BY doc_a, doc_b"""
     base.unionByName(planted)
   }
   private val crossmodalDup: Q = (s, d) => {
-    val media = CachePool.cached(crossmodalMedia(s, d))
+    val media = CachePool.cached(s, d, "crossmodalMedia")(crossmodalMedia(s, d))
     val caps = media.select("doc_id", "caption")
     // cache the SIGNATURES, not just the media (round 18): the banded
     // candidate machinery reads the signature relation three times
@@ -618,7 +618,7 @@ WHERE hamming <= 10 ORDER BY doc_a, doc_b"""
     // dHash extraction is the expensive part — uncached it ran 3× per
     // invocation over the cached media (the [[phashSignatures]]
     // discipline, applied to this face's own media set)
-    phashCandidatesOf(CachePool.cached(phashSignaturesOf(media)))
+    phashCandidatesOf(CachePool.cached(s, d, "crossmodalSignatures")(phashSignaturesOf(media)))
       .filter(col("hamming") <= 10)
       .join(caps.toDF("doc_a", "ca"), "doc_a")
       .join(caps.toDF("doc_b", "cb"), "doc_b")
@@ -655,7 +655,7 @@ ORDER BY doc_a, doc_b"""
     * doc_id. The label relation is |near-dup images| ≪ corpus; the
     * oracle walks the same graph with a recursive CTE. */
   private val phashCluster: Q = (s, d) =>
-    DedupQueries.ccLabelsMemo("phash", d)(
+    DedupQueries.ccLabels(s, d, "phash")(
       phashPairs(s, d).select("doc_a", "doc_b"))
   private val phashClusterSql =
     s"""WITH RECURSIVE pp AS (

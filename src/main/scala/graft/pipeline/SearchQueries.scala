@@ -41,7 +41,7 @@ object SearchQueries {
     * this only moves the pooling from "first stored-face build" to
     * "first lexical touch" and every face shares one copy. */
   private def tf(s: SparkSession, d: String): DataFrame =
-    CachePool.cached(
+    CachePool.cached(s, d, "tf")(
       Tables.documents(s, d)
         .select(col("doc_id"), explode(toks).as("token"))
         .groupBy("doc_id", "token").agg(count(lit(1)).as("tf")))
@@ -52,7 +52,7 @@ object SearchQueries {
     * derived once, consumed by bm25/prf/batch arms and the index
     * build. */
   private def docLens(s: SparkSession, d: String): DataFrame =
-    CachePool.cached(
+    CachePool.cached(s, d, "docLens")(
       tf(s, d).groupBy("doc_id").agg(sum("tf").as("dl")))
   private val TfSql = s"""tf AS (
   SELECT doc_id, token, count(*) AS tf
@@ -195,7 +195,7 @@ FROM agg ORDER BY bm25 DESC, doc_id LIMIT 20"""
     * df lookup is served by the inverted index's token→df column
     * rather than re-aggregating tf. */
   private[graft] def prfExpansion(s: SparkSession, d: String): Seq[String] =
-    CachePool.memoized(("prfExpansion", d)) {
+    CachePool.memoized(s, d, "prfExpansion") {
       val t = tf(s, d)
       val seed = bm25(s, d)
         .orderBy(col("bm25").desc, col("doc_id")).limit(10)
@@ -642,7 +642,7 @@ ORDER BY rrf DESC, doc_id LIMIT 10"""
     * alone — the BPE/PQ/quantizer persist-serve discipline applied to
     * the retrieval tier. */
   private[graft] def searchIndexExecute(s: SparkSession, d: String): Unit =
-    CachePool.memoized(("searchIndex", d)) {
+    CachePool.memoized(s, d, "searchIndex") {
       val (tfT, dlT, dfT, statsT) = searchIndexTables(d)
       val t = tf(s, d) // pooled at the definition (round 18)
       graft.sources.BucketedStore.write(t, tfT, "token", 8)
@@ -755,9 +755,9 @@ ORDER BY rrf DESC, doc_id LIMIT 10"""
     // each face output is ≤ N·10 rows but referenced twice below
     // (denominator + intersection) — cache the tiny results so the
     // two full retrieval pipelines run once each, not twice
-    val brute = CachePool.cached(
+    val brute = CachePool.cached(s, d, "hybridBruteTop")(
       hybridRrfBatch(s, d).select(col("query_id"), col("doc_id")))
-    val ivf = CachePool.cached(
+    val ivf = CachePool.cached(s, d, "hybridIvfTop")(
       hybridRrfBatchIvf(s, d).select(col("query_id"), col("doc_id")))
     val nb = brute.groupBy("query_id").agg(count(lit(1)).as("n_exact"))
     val hits = brute.join(ivf, Seq("query_id", "doc_id"))

@@ -37,22 +37,20 @@ object SimilarityQueries {
     * the search vector arms read — pooled: one parquet scan + cast per
     * corpus per session instead of one per face invocation (~40 faces
     * re-ran it). MB-scale (|corpus| × dim doubles), the same lifecycle
-    * as the pooled dedup shingle/pair relations. Keyed by dataset and
-    * shuffle partition count (the `Tables` guard's target): a steady
-    * call returns the pooled handle without building a plan. */
-  private[graft] def embDouble(s: SparkSession, d: String): DataFrame = {
-    CachePool.cached(("embDouble", d, s.sessionState.conf.numShufflePartitions)) {
+    * as the pooled dedup shingle/pair relations. A steady call returns
+    * the pooled handle without building a plan. */
+  private[graft] def embDouble(s: SparkSession, d: String): DataFrame =
+    CachePool.cached(s, d, "embDouble") {
       Tables.embeddings(s, d).select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("v"))
     }
-  }
 
   /** The exact brute-force truth set (query_id, neighbor_id) all seven
     * recall/eval faces measure against — pooled: |queries|·k rows,
     * previously recomputed (broadcast join + window over the corpus)
     * once per eval face. */
   private def bruteTruth(s: SparkSession, d: String): DataFrame =
-    CachePool.cached(
+    CachePool.cached(s, d, "bruteTruth")(
       topkBrute(s, d).select(col("query_id"), col("neighbor_id")))
 
   /** Brute-force cosine top-k=5 for queries vec_id < 10: the exact
@@ -572,29 +570,35 @@ ORDER BY query_id, rank"""
     * level) walks the IDENTICAL trajectory and can share one trained
     * model instead of re-running the count + 2 Lloyd passes per face
     * (measured: ~1 s per avoided retrain at sf0.1 under the derived
-    * k = ⌈√N⌉ geometry). Memoized next to [[ivfIndex]]; cleared by
-    * [[CachePool.release]] at corpus-lifecycle boundaries. */
+    * k = ⌈√N⌉ geometry). A model next to [[ivfIndex]]: it survives a
+    * dataset switch and is dropped by [[CachePool.release]].
+    *
+    * Every trainer reads its input from a pooled relation entry and
+    * caches nothing of its own: here [[embDouble]] (the projection is
+    * a column prune of its cache), for the base quantizer
+    * [[baseCorpus]], for the residual books [[pqResiduals]]. The inputs
+    * are released at a dataset switch with every other relation. */
   private[graft] def corpusCentroids(s: SparkSession, d: String)
       : Seq[(Int, Seq[Double])] =
-    CachePool.memoized(("corpusCentroids", d)) {
-      val e = embDouble(s, d).select(col("vec_id"), col("v")).cache()
-      val cents = kmeansCentroids(s, e)
-      e.unpersist()
-      cents
+    CachePool.memoized(s, d, "corpusCentroids") {
+      kmeansCentroids(s, embDouble(s, d).select(col("vec_id"), col("v")))
     }
 
-  /** The base-corpus (vec_id % 10 ≠ 9) quantizer of the upserted tier,
-    * shared by the upsert census, the upserted index build, and the
-    * re-cluster gain's frozen arm — same one-model-many-faces
-    * discipline as [[corpusCentroids]]. */
+  /** The base corpus (vec_id % 10 ≠ 9) the upserted tier and the first
+    * recluster generation train on. */
+  private def baseCorpus(s: SparkSession, d: String): DataFrame =
+    CachePool.cached(s, d, "baseCorpus") {
+      embDouble(s, d).select(col("vec_id"), col("v"))
+        .filter(pmod(col("vec_id"), lit(10L)) =!= 9L)
+    }
+
+  /** The base-corpus quantizer of the upserted tier, shared by the
+    * upsert census, the upserted index build, and the re-cluster gain's
+    * frozen arm — same one-model-many-faces discipline as
+    * [[corpusCentroids]]. */
   private[graft] def baseCentroids(s: SparkSession, d: String)
       : Seq[(Int, Seq[Double])] =
-    CachePool.memoized(("baseCentroids", d)) {
-      val base = CachePool.cached(embDouble(s, d)
-        .select(col("vec_id"), col("v"))
-        .filter(pmod(col("vec_id"), lit(10L)) =!= 9L))
-      kmeansCentroids(s, base)
-    }
+    CachePool.memoized(s, d, "baseCentroids") { kmeansCentroids(s, baseCorpus(s, d)) }
 
   /** nprobe coarse cells per query vector: (query_id, qv, probe_cid).
     * A pure projection over the broadcast centroid model
@@ -783,11 +787,11 @@ ORDER BY query_id"""
     * doc made literal: the first caller pays the k-means training and
     * the one write-time shuffle; every later probe (the bucketed
     * top-k face, the batch retrieval tier's vector arm) is a
-    * bucket-pruned scan. Cleared with [[CachePool.release]] at corpus
-    * lifecycle boundaries. */
+    * bucket-pruned scan. A model: it survives a dataset switch and is
+    * dropped by [[CachePool.release]]. */
   private[graft] def ivfIndex(s: SparkSession, d: String)
       : (Seq[(Int, Seq[Double])], String) =
-    CachePool.memoized(("ivfIndex", d)) {
+    CachePool.memoized(s, d, "ivfIndex") {
       val table = "graft_ivf_cells_" + (d.hashCode & 0x7fffffff)
       val e = embDouble(s, d).select(col("vec_id"), col("v"))
       val cents = corpusCentroids(s, d)
@@ -894,11 +898,12 @@ ORDER BY query_id"""
     * readout) triggers a re-cluster that folds the delta in. The
     * coarse quantizer trains on the BASE corpus only (vec_id % 10 ≠ 9
     * stands in for yesterday's index vs today's arrivals), exactly
-    * the frozen-cell geometry the upsert census measures. Memoized
-    * per (session, dataset); cleared by CachePool.release. */
+    * the frozen-cell geometry the upsert census measures. A model per
+    * dataset: it survives a dataset switch and is dropped by
+    * [[CachePool.release]]. */
   private[graft] def upsertedIndex(s: SparkSession, d: String)
       : (Seq[(Int, Seq[Double])], String, String) =
-    CachePool.memoized(("upsertedIndex", d)) {
+    CachePool.memoized(s, d, "upsertedIndex") {
       val h = d.hashCode & 0x7fffffff
       val (tBase, tDelta) = (s"graft_ivfup_base_$h", s"graft_ivfup_delta_$h")
       val e = embDouble(s, d).select(col("vec_id"), col("v"))
@@ -1157,7 +1162,7 @@ ORDER BY nprobe"""
     * rebuilds the k×dim literal set from one sub-second catalog read
     * instead of retraining Lloyd. */
   private[graft] def ivfCentroidTable(s: SparkSession, d: String): String =
-    CachePool.memoized(("ivfCentroidTable", d)) {
+    CachePool.memoized(s, d, "ivfCentroidTable") {
       val table = "graft_ivf_cents_" + (d.hashCode & 0x7fffffff)
       val (cents, _) = ivfIndex(s, d)
       graft.sources.ModelStore.write(centDf(s, cents), table)
@@ -1284,7 +1289,7 @@ FROM (
   }
 
   private[graft] def reclusterExecute(s: SparkSession, d: String): Unit =
-    CachePool.memoized(("reclusterExec", d)) {
+    CachePool.memoized(s, d, "reclusterExec") {
       import s.implicits._
       val h = d.hashCode & 0x7fffffff
       // generation 1 = the live upserted tier (frozen base-trained
@@ -1491,7 +1496,7 @@ FROM (
     * pointer just before the flip still holds g2's table names until
     * its query ends); anything older has no possible reader and goes. */
   private[graft] def reclusterCycleExecute(s: SparkSession, d: String): Unit =
-    CachePool.memoized(("reclusterCycle", d)) {
+    CachePool.memoized(s, d, "reclusterCycle") {
       import s.implicits._
       val ptrT = cyclePtr(d)
       // each generation stages the CELL tier (base/delta cell tables +
@@ -1567,16 +1572,15 @@ FROM (
       // cTrain covers every cell the staged base ∪ delta occupies.
       // (In THIS face day-2 is a slice of the same corpus the live
       // generation trained on, so the upsert happens to succeed.)
-      def cTrain(rel: DataFrame, cents: Seq[(Int, Seq[Double])]) =
-        pqrCellTrain(s, CachePool.cached(residualOf(rel, cents)))
+      def cTrain(g: Int, rel: DataFrame, cents: Seq[(Int, Seq[Double])]) =
+        pqrCellTrain(s, CachePool.cached(s, d, "cycleResiduals", g)(residualOf(rel, cents)))
       val e = embDouble(s, d).select(col("vec_id"), col("v"))
       val n = e.count()
       // cycle 1, day 1: the base-trained upserted tier, pointer-addressed
-      val base1 = CachePool.cached(
-        e.filter(pmod(col("vec_id"), lit(10L)) =!= 9L))
+      val base1 = baseCorpus(s, d)
       val cents1 = baseCentroids(s, d)
       stage(1, cents1, pqTrain(s, base1), rTrain(base1, cents1),
-        cTrain(e, cents1),
+        cTrain(1, e, cents1),
         base1, e.filter(pmod(col("vec_id"), lit(10L)) === 9L))
       publish(1)
       // recluster #1: retrain on base ∪ delta = the corpus; fold in
@@ -1598,7 +1602,7 @@ FROM (
       val (gPqd, gBooksT) = (ptr.getString(5), ptr.getString(6))
       val (gPqrd, gRBooksT) = (ptr.getString(8), ptr.getString(9))
       val (gPqrcd, gCBooksT) = (ptr.getString(11), ptr.getString(12))
-      val day2 = CachePool.cached(day2Batch(s, d, n))
+      val day2 = CachePool.cached(s, d, "cycleDay2")(day2Batch(s, d, n))
       graft.sources.BucketedStore.write(
         assignCells(day2, gCents), gDelta, "cid", gCents.length)
       graft.sources.BucketedStore.write(
@@ -1611,7 +1615,7 @@ FROM (
         encodePqrCell(day2, gCents, cellBooksFrom(s, gCBooksT)), gPqrcd,
         "cid", gCents.length)
       // recluster #2: base ∪ delta read back from the SERVING tier
-      val corpus2 = CachePool.cached(
+      val corpus2 = CachePool.cached(s, d, "cycleCorpus2")(
         graft.sources.BucketedStore.read(s, gBase)
           .select(col("vec_id"), col("v"))
           .unionByName(graft.sources.BucketedStore.read(s, gDelta)
@@ -1619,7 +1623,7 @@ FROM (
       val n2 = corpus2.count()
       val cents3 = kmeansCentroids(s, corpus2)
       stage(3, cents3, pqTrain(s, corpus2), rTrain(corpus2, cents3),
-        cTrain(corpus2, cents3), corpus2, corpus2.limit(0))
+        cTrain(3, corpus2, cents3), corpus2, corpus2.limit(0))
       require(graft.sources.BucketedStore.read(s, cycleNames(d, 3)._1)
         .count() == n2, "cycle audit: g3 must hold corpus + day-2")
       publish(3)
@@ -1708,7 +1712,7 @@ ORDER BY query_id, rank"""
     * that arrived in the delta batch. */
   private val upsertedRecall: Q = (s, d) => {
     import s.implicits._
-    val served = CachePool.cached(
+    val served = CachePool.cached(s, d, "upsertedServed")(
       topkIvfUpserted(s, d).select(col("query_id"), col("neighbor_id")))
     val exact = bruteTruth(s, d)
     exact.join(served.withColumn("hit", lit(1L)),
@@ -1848,11 +1852,8 @@ ORDER BY query_id, rank"""
     * the per-subspace formulation. */
   private[graft] def pqCodebooks(s: SparkSession, d: String)
       : Seq[Seq[(Int, Seq[Double])]] =
-    CachePool.memoized(("pqCodebooks", d)) {
-      val e = embDouble(s, d).select(col("vec_id"), col("v")).cache()
-      val books = pqTrain(s, e)
-      e.unpersist()
-      books
+    CachePool.memoized(s, d, "pqCodebooks") {
+      pqTrain(s, embDouble(s, d).select(col("vec_id"), col("v")))
     }
   private def pqTrain(s: SparkSession, e: DataFrame): Seq[Book] =
     lloyd(s, e, lit(0), split(Seq((0, seeds(s, e, PqK))))).map(_.head._2)
@@ -2035,7 +2036,7 @@ ORDER BY query_id, rank"""
     * unchanged when it needs maintenance (same BucketedStore +
     * pointer machinery). */
   private[graft] def ivfPqTable(s: SparkSession, d: String): String =
-    CachePool.memoized(("ivfPqTable", d)) {
+    CachePool.memoized(s, d, "ivfPqTable") {
       val table = "graft_ivfpq_codes_" + (d.hashCode & 0x7fffffff)
       // ensure-encoded, not re-encode-on-read (ADVICE r14: the same
       // discipline as [[pqModelTables]]): a serving-only session — the
@@ -2062,7 +2063,7 @@ ORDER BY query_id, rank"""
     * [[storedPqModels]] is the serving job's read side. */
   private[graft] def pqModelTables(s: SparkSession, d: String)
       : (String, String) =
-    CachePool.memoized(("pqModelTables", d)) {
+    CachePool.memoized(s, d, "pqModelTables") {
       import s.implicits._
       val h = d.hashCode & 0x7fffffff
       val (coarseT, booksT) =
@@ -2392,16 +2393,21 @@ ORDER BY query_id, rank"""
         call_function("graft_sub", col("v"), col("cv")).as("v"))
   }
 
+  /** The corpus residuals against the corpus quantizer: the input of
+    * both residual trainers, and the plan the in-plan residual serving
+    * faces encode (so they read this cache). */
+  private def pqResiduals(s: SparkSession, d: String): DataFrame =
+    CachePool.cached(s, d, "pqResiduals") {
+      residualOf(embDouble(s, d).select(col("vec_id"), col("v")), corpusCentroids(s, d))
+    }
+
   /** The corpus-wide residual codebooks (shared family — the per-cell
-    * variant is [[pqrCellBooks]]), trained once per (session, dataset)
-    * on the residual relation against the corpus quantizer. */
+    * variant is [[pqrCellBooks]]), trained once per dataset on
+    * [[pqResiduals]]. */
   private[graft] def pqrBooks(s: SparkSession, d: String)
       : Seq[Seq[(Int, Seq[Double])]] =
-    CachePool.memoized(("pqResidualBooks", d)) {
-      val resid = CachePool.cached(
-        residualOf(embDouble(s, d).select(col("vec_id"), col("v")),
-          corpusCentroids(s, d)))
-      pqTrain(s, resid.select(col("vec_id"), col("v")))
+    CachePool.memoized(s, d, "pqResidualBooks") {
+      pqTrain(s, pqResiduals(s, d).select(col("vec_id"), col("v")))
     }
 
   /** (vec_id, cid, code0..m−1) — the stored residual-PQ row: coarse
@@ -2429,7 +2435,7 @@ ORDER BY query_id, rank"""
     * without touching the raw corpus. */
   private[graft] def pqrTables(s: SparkSession, d: String)
       : (String, String) =
-    CachePool.memoized(("pqrTables", d)) {
+    CachePool.memoized(s, d, "pqrTables") {
       val h = d.hashCode & 0x7fffffff
       val (booksT, codesT) =
         (s"graft_ivfpqr_books_$h", s"graft_ivfpqr_codes_$h")
@@ -2519,12 +2525,7 @@ ORDER BY query_id, rank"""
     * — the per-cell sibling of [[pqrBooks]]. */
   private[graft] def pqrCellBooks(s: SparkSession, d: String)
       : Seq[Family] =
-    CachePool.memoized(("pqrCellBooks", d)) {
-      val rsd = CachePool.cached(
-        residualOf(embDouble(s, d).select(col("vec_id"), col("v")),
-          corpusCentroids(s, d)))
-      pqrCellTrain(s, rsd)
-    }
+    CachePool.memoized(s, d, "pqrCellBooks") { pqrCellTrain(s, pqResiduals(s, d)) }
 
   /** (vec_id, cid, code0..m−1) against the PER-CELL families — each
     * code an argmin over the row's own cell's book. Contract (ADVICE
@@ -2583,7 +2584,7 @@ ORDER BY query_id, rank"""
     * without touching the raw corpus. */
   private[graft] def pqrcTables(s: SparkSession, d: String)
       : (String, String) =
-    CachePool.memoized(("pqrcTables", d)) {
+    CachePool.memoized(s, d, "pqrcTables") {
       val h = d.hashCode & 0x7fffffff
       val (booksT, codesT) =
         (s"graft_ivfpqrc_books_$h", s"graft_ivfpqrc_codes_$h")
@@ -3047,7 +3048,7 @@ FROM qv ORDER BY vec_id"""
       .otherwise(transform(v, x =>
         floor(x * lit(127.0) / mx + lit(0.5)).cast("tinyint")))
   private def sq8Table(s: SparkSession, d: String): String =
-    CachePool.memoized(("sq8Table", d)) {
+    CachePool.memoized(s, d, "sq8Table") {
       val t = s"graft_sq8_${d.hashCode & 0x7fffffff}"
       val e = embDouble(s, d)
       val withMx = e.withColumn("mx", sq8MaxAbs(col("v")))
@@ -3153,10 +3154,11 @@ FROM ne, nh"""
     * build is [[ivfIndex]]'s one write-time shuffle with a projection
     * swapped in, and day-2 ingest ([[ivfSq8Upsert]]) is a pure
     * projection merge — assign to the FROZEN cells, quantize, append.
-    * Memoized per (session, dataset); cleared by CachePool.release. */
+    * A model per dataset: it survives a dataset switch and is dropped
+    * by [[CachePool.release]]. */
   private[graft] def ivfSq8Index(s: SparkSession, d: String)
       : (Seq[(Int, Seq[Double])], String) =
-    CachePool.memoized(("ivfSq8Index", d)) {
+    CachePool.memoized(s, d, "ivfSq8Index") {
       val table = "graft_ivfsq8_" + (d.hashCode & 0x7fffffff)
       val e = embDouble(s, d).select(col("vec_id"), col("v"))
       val cents = corpusCentroids(s, d)
@@ -3412,7 +3414,7 @@ ORDER BY cid"""
     val cm = cellMin(s, cents)
     // scored feeds BOTH sides of the within-cell self-join — cache it
     // so the assignment projection runs once, not twice
-    val scored = CachePool.cached(e.select(col("vec_id"), col("v"),
+    val scored = CachePool.cached(s, d, "semDedupScored")(e.select(col("vec_id"), col("v"),
       cm.getField("cid").as("cid"),
       (cm.getField("d") + dot(col("v"), col("v"))).as("d2")))
     val a = scored.select(col("cid"), col("vec_id").as("a_id"),
@@ -3485,44 +3487,47 @@ ORDER BY cid, vec_id"""
     * `localCheckpoint` pins the centered elements (reused 2× per
     * round) and cuts the iterate's lineage. */
   private val PcIters = 3
-  /** Shared power-iteration state: (centered elements, final unit w).
-    * Both the loading report and the ABTT removal face reuse it —
-    * trained ONCE per (session, dataset) via [[CachePool.memoized]]
-    * (the stored-model serving shape: at 100 TB the component is
-    * computed by one training job and every consumer reads it), so a
-    * suite running both faces pays the iteration once. */
-  private def pcState(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    CachePool.memoized(("pcState", s, d)) { pcTrain(s, d) }
-  private def pcTrain(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val ex0 = embDouble(s, d)
-      .select(col("vec_id"), posexplode(col("v")).as(Seq("pos", "x")))
-    val m = ex0.groupBy("pos")
-      .agg((sum(col("x").cast("decimal(25,15)")).cast("double")
-        / count(lit(1))).as("mu"))
-    val ex = ex0.join(broadcast(m), "pos")
-      .select(col("vec_id"), col("pos"), (col("x") - col("mu")).as("x"))
-      .localCheckpoint()
-    var w = m.select(col("pos"), lit(0.125).as("w")).localCheckpoint()
-    for (_ <- 1 to PcIters) {
-      val sv = ex.join(broadcast(w), "pos")
-        .groupBy("vec_id")
-        .agg(sum((col("x") * col("w")).cast("decimal(25,15)"))
-          .cast("double").as("s"))
-      val u = ex.join(sv, "vec_id")
-        .groupBy("pos")
-        .agg(sum((col("s") * col("x")).cast("decimal(25,15)"))
-          .cast("double").as("u"))
-      val n2 = broadcast(u.agg(
-        sqrt(sum((col("u") * col("u")).cast("decimal(25,15)"))
-          .cast("double")).as("nrm")))
-      w = u.crossJoin(n2).select(col("pos"), (col("u") / col("nrm")).as("w"))
+  /** The centered elements (vec_id, pos, x) and the final unit w are
+    * relation entries, stored once per dataset: the loading report and
+    * the ABTT removal face both read them (the stored-model serving
+    * shape: at 100 TB the component is computed by one training job and
+    * every consumer reads it), so a suite running both faces pays the
+    * iteration once, and a dataset switch frees their blocks. */
+  private def pcCentered(s: SparkSession, d: String): DataFrame =
+    CachePool.checkpointed(s, d, "pcCentered") {
+      val ex0 = embDouble(s, d)
+        .select(col("vec_id"), posexplode(col("v")).as(Seq("pos", "x")))
+      val m = ex0.groupBy("pos")
+        .agg((sum(col("x").cast("decimal(25,15)")).cast("double")
+          / count(lit(1))).as("mu"))
+      ex0.join(broadcast(m), "pos")
+        .select(col("vec_id"), col("pos"), (col("x") - col("mu")).as("x"))
         .localCheckpoint()
     }
-    (ex, w)
-  }
+  private def pcComponent(s: SparkSession, d: String): DataFrame =
+    CachePool.checkpointed(s, d, "pcComponent") {
+      val ex = pcCentered(s, d)
+      var w = ex.select("pos").distinct().select(col("pos"), lit(0.125).as("w"))
+        .localCheckpoint()
+      for (_ <- 1 to PcIters) {
+        val sv = ex.join(broadcast(w), "pos")
+          .groupBy("vec_id")
+          .agg(sum((col("x") * col("w")).cast("decimal(25,15)"))
+            .cast("double").as("s"))
+        val u = ex.join(sv, "vec_id")
+          .groupBy("pos")
+          .agg(sum((col("s") * col("x")).cast("decimal(25,15)"))
+            .cast("double").as("u"))
+        val n2 = broadcast(u.agg(
+          sqrt(sum((col("u") * col("u")).cast("decimal(25,15)"))
+            .cast("double")).as("nrm")))
+        w = u.crossJoin(n2).select(col("pos"), (col("u") / col("nrm")).as("w"))
+          .localCheckpoint()
+      }
+      w
+    }
   private val topPc: Q = (s, d) => {
-    val (_, w) = pcState(s, d)
-    w.select(col("pos").cast("int").as("pos"), round(col("w"), 6).as("loading"))
+    pcComponent(s, d).select(col("pos").cast("int").as("pos"), round(col("w"), 6).as("loading"))
       .orderBy("pos")
   }
   private val pcCtes = {
@@ -3577,7 +3582,7 @@ FROM w$PcIters ORDER BY pos"""
     val e = embDouble(s, d)
     val cents = corpusCentroids(s, d)
     // cells feeds both sides of the within-cell self-join
-    val cells = CachePool.cached(
+    val cells = CachePool.cached(s, d, "knnCells")(
       e.select(col("vec_id"), col("label"), col("v"),
         cellCol(s, cents).as("cid")))
     val a = cells.select(col("cid"), col("vec_id").as("a_id"),
@@ -3645,7 +3650,7 @@ FROM pred GROUP BY a_label ORDER BY label"""
   /** "All-but-the-top" common-direction removal (Mu & Viswanath 2018)
     * — the embedding post-process that strips the dominant shared
     * direction so cosine stops being swamped by corpus-wide bias:
-    * score each centered vector against the [[pcState]] top component
+    * score each centered vector against the [[pcComponent]] top component
     * and report the per-vector energy split (projection score, norm
     * before, residual norm after removal). One extra broadcast-w score
     * aggregate on top of the power iteration; the residual norm uses
@@ -3654,7 +3659,7 @@ FROM pred GROUP BY a_label ORDER BY label"""
     * 0-floor so rounding can't drive √ negative. Downstream dedup/ANN
     * consume x − s·w without re-materializing anything. */
   private val removeTopPc: Q = (s, d) => {
-    val (ex, w) = pcState(s, d)
+    val (ex, w) = (pcCentered(s, d), pcComponent(s, d))
     val sc = ex.join(broadcast(w), "pos")
       .groupBy("vec_id")
       .agg(sum((col("x") * col("w")).cast("decimal(25,15)"))

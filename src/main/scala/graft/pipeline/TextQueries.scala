@@ -551,7 +551,7 @@ FROM fj GROUP BY lang ORDER BY lang"""
       size(split(col("text"), " ")).cast("long").as("n_tokens"))
     val ranked = graft.operators.GlobalRank.withRank(docs,
       Seq(col("n_tokens").desc, col("doc_id").asc), "rk")
-    val per = CachePool.cached(ranked
+    val per = CachePool.cached(s, d, "shardPlan")(ranked
       .withColumn("shard", expr(s"(rk - 1) % $NShards").cast("int"))
       .groupBy("shard")
       .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("shard_tokens")))
@@ -605,7 +605,7 @@ FROM per, stot ORDER BY shard"""
     ranked.withColumn("shard", expr(s"(rk - 1) % $NShards").cast("int"))
       .select(col("shard"), col("doc_id"), col("n_tokens"), col("text"))
       .write.mode("overwrite").partitionBy("shard").parquet(path)
-    val per = CachePool.cached(s.read.parquet(path)
+    val per = CachePool.cached(s, d, "shardWritten")(s.read.parquet(path)
       .groupBy("shard").agg(
         count(lit(1)).as("n_docs"),
         sum("n_tokens").as("shard_tokens"),
@@ -838,7 +838,7 @@ ORDER BY lang, rank"""
     // below (local ranks + per-pid counts) must see ONE materialization
     // of the partitioning (RangePartitioner's sample seed is rdd-id-
     // derived, so re-materialization can shift boundaries)
-    val parted = graft.pipeline.CachePool.cached(
+    val parted = graft.pipeline.CachePool.cached(s, d, "coverageRanged")(
       counts
         .repartitionByRange(
           s.sessionState.conf.numShufflePartitions, col("tf").desc, col("token"))
@@ -1814,7 +1814,7 @@ ORDER BY chunk_md5"""
     // below (local ranks + per-pid counts) must see ONE materialization
     // of the partitioning (RangePartitioner's sample seed is rdd-id-
     // derived, so re-materialization can shift boundaries)
-    val parted = graft.pipeline.CachePool.cached(
+    val parted = graft.pipeline.CachePool.cached(s, d, "surprisalRanged")(
       vocab
         .repartitionByRange(
           s.sessionState.conf.numShufflePartitions, col("cnt").desc, col("tok"))
@@ -2041,7 +2041,7 @@ GROUP BY doc_id ORDER BY doc_id"""
     // below (local ranks + per-pid counts) must see ONE materialization
     // of the partitioning (RangePartitioner's sample seed is rdd-id-
     // derived, so re-materialization can shift boundaries)
-    val parted = graft.pipeline.CachePool.cached(
+    val parted = graft.pipeline.CachePool.cached(s, d, "aucRanged")(
       cells.repartitionByRange(
           s.sessionState.conf.numShufflePartitions, col("score"))
         .withColumn("pid", spark_partition_id()))
@@ -2197,7 +2197,7 @@ FROM c"""
   }
   private[graft] def clfTrained(s: SparkSession, d: String)
       : (Seq[(Int, Long, Long, Seq[Long])], Seq[Long]) =
-    CachePool.memoized(("clf", d, ClfRounds)) {
+    CachePool.memoized(s, d, "clf", ClfRounds) {
       clfTrainLoop(clfFeatures(s, d))
     }
   private val classifierTrain: Q = (s, d) => {
@@ -2248,7 +2248,7 @@ FROM c"""
     * training corpus → different weights). */
   private[graft] def clfEvalTrained(s: SparkSession, d: String)
       : (Seq[(Int, Long, Long, Seq[Long])], Seq[Long]) =
-    CachePool.memoized(("clfEval", d, ClfRounds)) {
+    CachePool.memoized(s, d, "clfEval", ClfRounds) {
       clfTrainLoop(clfFeatures(s, d)
         .withColumn("bucket", clfSplitBucket)
         .filter(col("bucket") < 80).drop("bucket"))
@@ -2293,7 +2293,7 @@ FROM c"""
     * [[graft.sources.ModelStore]]; built once per (session, dataset)
     * and overwritten per retrain. */
   private[graft] def clfModelTable(s: SparkSession, d: String): String =
-    CachePool.memoized(("clfModelTable", d, ClfRounds)) {
+    CachePool.memoized(s, d, "clfModelTable", ClfRounds) {
       import s.implicits._
       val table = "graft_clf_model_" + (d.hashCode & 0x7fffffff)
       val rows = clfTrained(s, d)._2.zipWithIndex
@@ -2343,7 +2343,7 @@ FROM c"""
     * arithmetic on the 18-value row — no per-candidate jobs. */
   private def clfSelected(s: SparkSession, d: String)
       : (Int, Int, Long, Long, Long, Long, Long) =
-    CachePool.memoized(("clfSelect", d, ClfRounds)) {
+    CachePool.memoized(s, d, "clfSelect", ClfRounds) {
       val (hist, _) = clfEvalTrained(s, d)
       val starts: Seq[(Int, Seq[Long])] = (1 to ClfRounds).map { r =>
         r -> (if (r == 1) Seq.fill(HashEmbD)(0L) else hist(r - 2)._4)
@@ -2677,7 +2677,7 @@ ORDER BY doc_id"""
     * interactions), and the cached relation is vocabulary-sized, not
     * corpus-sized. */
   private[graft] def drwCounts(s: SparkSession, d: String): DataFrame = {
-    val sc0 = CachePool.cached(Tables.documents(s, d)
+    val sc0 = CachePool.cached(s, d, "drwLangTokens")(Tables.documents(s, d)
       .select(col("lang"), explode(toks).as("tok"))
       .groupBy("lang", "tok").agg(count(lit(1)).as("n")))
     val topv = sc0.groupBy("tok").agg(sum("n").as("t"))
@@ -2727,7 +2727,7 @@ ORDER BY doc_id"""
     * resampling face. */
   private[graft] def drwTrained(s: SparkSession, d: String)
       : Seq[(Int, String, BigInt, BigInt)] =
-    CachePool.memoized(("drw", d, DrwRounds, DrwVocab)) {
+    CachePool.memoized(s, d, "drw", DrwRounds, DrwVocab) {
       val folded = drwCounts(s, d).collect().toSeq
         .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
       drwLoop(folded, DrwRounds)
@@ -2842,7 +2842,7 @@ ORDER BY round, lang"""
     * ≤|domains| (lang, mult_ppm) rows, the whole model a resampling
     * job needs. */
   private[graft] def drwModelTable(s: SparkSession, d: String): String =
-    CachePool.memoized(("drwModelTable", d, DrwRounds, DrwVocab)) {
+    CachePool.memoized(s, d, "drwModelTable", DrwRounds, DrwVocab) {
       import s.implicits._
       val table = "graft_drw_model_" + (d.hashCode & 0x7fffffff)
       graft.sources.ModelStore.write(
@@ -2982,8 +2982,8 @@ FROM a GROUP BY shard ORDER BY shard"""
     * subqueries are COALESCE-guarded to a never-matching sentinel, so
     * an exhausted corpus no longer NULLs the chain).
     *
-    * Training is memoized per dataset ([[CachePool.memoized]]), shared
-    * by [[bpeTrain]] (the merge table) and [[bpeApply]] (per-doc
+    * Training runs once per dataset ([[bpeTrainedOver]]), shared by
+    * [[bpeTrain]] (the merge table) and [[bpeApply]] (per-doc
     * token-count compression readout over the final vocabulary). */
   private val BpeRounds = 16
   /** Candidates collected per round (driver model state, bounded). */
@@ -3023,16 +3023,32 @@ FROM a GROUP BY shard ORDER BY shard"""
         l2 == l || l2 == r || r2 == l || r2 == r ||
           (l2 + r2) == l || (l2 + r2) == r }
     }.map(_._1).take(m)
+  /** The corpus trainer's merges, final words and round-trips. The
+    * words are the relation the training run stored; after a dataset
+    * switch freed them, they are rebuilt by replaying the merges over
+    * the same vocabulary (deterministic string ops: the same
+    * sequences). */
   private def bpeTrained(s: SparkSession, d: String)
-      : (Seq[(Int, Int, String, String, Long)], DataFrame, Int) =
-    bpeTrainedOver(s, ("bpe", d), bpeWords(s, d))
+      : (Seq[(Int, Int, String, String, Long)], DataFrame, Int) = {
+    val (merges, roundTrips) = bpeTrainedOver(s, d, "bpe", bpeWords(s, d))
+    val words = CachePool.checkpointed(s, d, "bpeWords", BpeRounds, BpeCand, BpeBatch) {
+      bpeWords(s, d).withColumn("symseq", bpeReplay(merges.map(t => (t._3, t._4))))
+        .localCheckpoint()
+    }
+    (merges, words, roundTrips)
+  }
+  /** `symseq` with `merges` applied in order. */
+  private def bpeReplay(merges: Seq[(String, String)]): Column =
+    merges.foldLeft(col("symseq")) { case (e, (l, r)) =>
+      replace(e, lit(s" $l $r "), lit(s" $l$r ")) }
   /** The K driver-round trainer over an arbitrary word relation —
     * shared by the full-corpus trainer and the held-out-half trainer
-    * of the OOV face. */
-  private def bpeTrainedOver(s: SparkSession, memoKey: (String, String),
-      input: DataFrame)
-      : (Seq[(Int, Int, String, String, Long)], DataFrame, Int) =
-    CachePool.memoized((memoKey, BpeRounds, BpeCand, BpeBatch)) {
+    * of the OOV face. The merges are a model; the final words are
+    * stored as the relation `<name>Words`, whose blocks a dataset
+    * switch frees. */
+  private def bpeTrainedOver(s: SparkSession, d: String, name: String,
+      input: DataFrame): (Seq[(Int, Int, String, String, Long)], Int) =
+    CachePool.memoized(s, d, name, BpeRounds, BpeCand, BpeBatch) {
       var words = input.localCheckpoint()
       var roundTrips = 0 // driver model round-trips (collects)
       val merges = Seq.newBuilder[(Int, Int, String, String, Long)]
@@ -3052,9 +3068,7 @@ FROM a GROUP BY shard ORDER BY shard"""
         if (picked.nonEmpty) {
           picked.zipWithIndex.foreach { case ((l, r, c), j) =>
             merges += ((round, j + 1, l, r, c)) }
-          words = words.withColumn("symseq",
-            picked.foldLeft(col("symseq")) { case (e, (l, r, _)) =>
-              replace(e, lit(s" $l $r "), lit(s" $l$r ")) })
+          words = words.withColumn("symseq", bpeReplay(picked.map(p => (p._1, p._2))))
           // checkpoint every BpeCkptEvery rounds (and at the end) —
           // the tail between checkpoints is ≤ 2 rounds of vocabulary-
           // sized nested replaces, re-run once by the next collect
@@ -3062,13 +3076,15 @@ FROM a GROUP BY shard ORDER BY shard"""
             words = words.localCheckpoint()
         }
       }
-      (merges.result(), words, roundTrips)
+      CachePool.checkpointed(s, d, name + "Words", BpeRounds, BpeCand, BpeBatch)(words)
+      (merges.result(), roundTrips)
     }
   /** Total effective merges + driver round-trips of the memoized
     * training run — the scale variables Round13Spec pins
     * (≥64 merges from ≤16 collects on the sf0.01 corpus). */
   private[graft] def bpeStats(s: SparkSession, d: String): (Int, Int) = {
-    val t = bpeTrained(s, d); (t._1.size, t._3)
+    val (merges, roundTrips) = bpeTrainedOver(s, d, "bpe", bpeWords(s, d))
+    (merges.size, roundTrips)
   }
   private val bpeTrain: Q = (s, d) => {
     import s.implicits._
@@ -3102,7 +3118,7 @@ FROM a GROUP BY shard ORDER BY shard"""
     * reconstructs its subword sequence exactly. ~[[BpeRounds]]×
     * [[BpeBatch]] rows; atomic retrains via [[graft.sources.ModelStore]]. */
   private[graft] def bpeModelTable(s: SparkSession, d: String): String =
-    CachePool.memoized(("bpeModelTable", d, BpeRounds, BpeCand, BpeBatch)) {
+    CachePool.memoized(s, d, "bpeModelTable", BpeRounds, BpeCand, BpeBatch) {
       import s.implicits._
       val table = "graft_bpe_merges_" + (d.hashCode & 0x7fffffff)
       graft.sources.ModelStore.write(
@@ -3150,8 +3166,7 @@ FROM a GROUP BY shard ORDER BY shard"""
     * string ops, so the replayed sequences equal the training-end ones
     * exactly. Shared by every served-from-catalog tokenizer face. */
   private def bpeReplayed(s: SparkSession, d: String): Column =
-    bpeStoredMerges(s, d).foldLeft(col("symseq")) { case (e, (l, r)) =>
-      replace(e, lit(s" $l $r "), lit(s" $l$r ")) }
+    bpeReplay(bpeStoredMerges(s, d))
 
   /** Tokenization served FROM the catalog — the path a process that
     * did NOT train runs: load the stored merges (driver model state),
@@ -3196,11 +3211,9 @@ FROM a GROUP BY shard ORDER BY shard"""
   /** The `symseq` column replayed under the RESTRICTED-vocabulary
     * merges (trained on words < [[BpeOovSplit]] only). */
   private def bpeOovReplayed(s: SparkSession, d: String): Column =
-    bpeTrainedOver(s, ("bpeOov", d),
+    bpeReplay(bpeTrainedOver(s, d, "bpeOov",
       bpeWords(s, d).filter(col("word") < BpeOovSplit))._1
-      .sortBy(t => (t._1, t._2))
-      .foldLeft(col("symseq")) { case (e, (_, _, l, r, _)) =>
-        replace(e, lit(s" $l $r "), lit(s" $l$r ")) }
+      .sortBy(t => (t._1, t._2)).map(t => (t._3, t._4)))
   private val bpeApplyOov: Q = (s, d) =>
     bpeApplyOver(s, d, bpeWords(s, d).select(col("word"),
       size(split(trim(bpeOovReplayed(s, d)), " ")).cast("long")

@@ -761,8 +761,8 @@ object StreamingEvents {
     // once per (session, namespace) — from the surviving table only
     // when a restarted process inherits one — then maintained by the
     // accepted-doc counts the sink computes anyway; any fold path
-    // resets it via compactIngestHistory's memoDrop.
-    val deltaDocs = graft.pipeline.CachePool.memoized(("mhDeltaDocs", d, ns)) {
+    // resets it via compactIngestHistory's CachePool.drop.
+    val deltaDocs = graft.pipeline.CachePool.memoized(s, d, "mhDeltaDocs", ns) {
       new java.util.concurrent.atomic.AtomicLong(
         if (s.catalog.tableExists(dSkT)) s.table(dSkT).count() else 0L)
     }
@@ -788,7 +788,7 @@ object StreamingEvents {
       // positives) are confirmed against the bucketed store, reading
       // just their ids' buckets. The growing delta's ids are exact
       // either way (∝ accepted stream volume between folds).
-      val bloomBc = graft.pipeline.CachePool.memoized(("mhBaseBloom", d, ns)) {
+      val bloomBc = graft.pipeline.CachePool.memoized(s, d, "mhBaseBloom", ns) {
         val base = graft.sources.BucketedStore.read(s, skT)
         s.sparkContext.broadcast(
           base.stat.bloomFilter("doc_id", math.max(base.count(), 64L), 0.01))

@@ -4,22 +4,26 @@ import graft.etl.Corpus
 import graft.pipeline.{CachePool, DedupQueries, DupCorpus, SimilarityQueries}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.SpanSugar._
 
-/** The keyed pooled handles of `CachePool.cached(key)(build)`: a steady
-  * call returns the pooled handle without growing the pool, and a
-  * release drops the handle so the next call caches again. Through
-  * `SparkEntry.queries`, a dataset switch releases the previous
-  * dataset's cached relations and keeps its memoized models. */
+/** The keyed relation entries of `CachePool.cached`: a steady call
+  * returns the pooled handle without growing the pool, and a release
+  * drops the handle so the next call caches again. Through
+  * `SparkEntry.queries`, a dataset switch frees the blocks of every
+  * relation entry of the previous dataset, `localCheckpoint`ed ones
+  * included, and keeps its models. */
 class CachePoolSpec extends SparkSpec {
 
   private val keyedRelations: Seq[(String, () => DataFrame)] = Seq(
     "minhashPairs" -> (() => DedupQueries.minhashPairs(spark, Sf)),
     "embDouble" -> (() => SimilarityQueries.embDouble(spark, Sf)),
     "dupCorpus" -> (() => DupCorpus.corpus(spark, Sf)),
-    "requests" -> (() => Corpus.requests(spark, Sf)))
+    "requests" -> (() => Corpus.requests(spark, Sf)),
+    "shingleRows" -> (() => DedupQueries.shingleRows(spark, Sf)),
+    "minhashCandidates" -> (() => DedupQueries.minhashCandidates(spark, Sf)))
 
   private def inMemory(df: DataFrame): Boolean =
     df.queryExecution.withCachedData.collectFirst {
@@ -98,7 +102,7 @@ class CachePoolSpec extends SparkSpec {
     requireFixture(SfMid)
     pooling.foreach(serve(_, Sf).count())
     val sfPooled = keyedOn(Sf) ++ Seq(
-      DedupQueries.shingleRows(DupCorpus.corpus(spark, Sf)),
+      DedupQueries.shingleRows(spark, Sf),
       DedupQueries.minhashCandidates(spark, Sf))
     val rdds = sfPooled.map(cachedRdd).toSet
     assert(rdds.subsetOf(storedRdds))
@@ -121,19 +125,45 @@ class CachePoolSpec extends SparkSpec {
     assert(rdds.subsetOf(storedRdds))
   }
 
-  test("the memoized models survive a dataset switch") {
+  /** The ids of the `localCheckpoint`ed RDDs under `df`'s plan. */
+  private def checkpointRdds(df: DataFrame): Set[Int] =
+    df.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.id }.toSet
+
+  test("a switch frees the memoized relations and keeps the models") {
     requireFixture(SfMid)
-    serve("dedup_cluster", Sf).count()
+    val rows = serve("dedup_cluster", Sf).count()
+    serve("embed_remove_top_pc", Sf).count()
     serve("ann_topk_ivf_kmeans", Sf).count()
     val cents = SimilarityQueries.corpusCentroids(spark, Sf)
-    def labels = DedupQueries.ccLabelsMemo("minhash", Sf)(
-      fail("the switch dropped the memoized CC labels"))
-    val (labelsBefore, rows) = (labels, labels.count())
+    // the CC labels and both power-iteration relations
+    val rdds = checkpointRdds(DedupQueries.ccLabels(spark, Sf, "minhash")(
+      fail("the labels must be stored"))) ++
+      checkpointRdds(serve("embed_remove_top_pc", Sf))
+    assert(rdds.size == 3 && rdds.subsetOf(storedRdds))
     serve("etl_route", SfMid)
+    eventually(timeout(30.seconds), interval(100.millis)) {
+      assert((rdds & storedRdds).isEmpty, "the switch must free every Sf checkpoint")
+    }
     serve("etl_route", Sf)
     assert(SimilarityQueries.corpusCentroids(spark, Sf) eq cents,
       "the switch dropped the memoized centroids")
-    assert(labels eq labelsBefore)
-    assert(labels.count() == rows, "the memoized labels must stay readable")
+    assert(serve("dedup_cluster", Sf).count() == rows,
+      "re-touching the dataset must rebuild the same labels")
+  }
+
+  test("CachePool.release drops every pinned corpus relation") {
+    // run queries that pin corpus + shingle + fingerprint caches, then
+    // release: a long-lived session must end the corpus lifecycle
+    // without accreted relations. (Asserted per-relation, not via a
+    // global cacheManager.isEmpty — suites run one after another in
+    // one forked JVM and share its session, so relations other suites
+    // cached may still be live.)
+    val sf = SfMid
+    requireFixture(sf)
+    DedupQueries.queries("dedup_minhash")(spark, sf).count()
+    val corpus = graft.pipeline.DupCorpus.corpus(spark, sf)
+    assert(corpus.storageLevel.useMemory) // pinned while in use
+    graft.pipeline.CachePool.release()
+    assert(corpus.storageLevel === org.apache.spark.storage.StorageLevel.NONE)
   }
 }

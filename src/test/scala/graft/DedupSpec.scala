@@ -100,23 +100,6 @@ class DedupSpec extends SparkSpec {
     cl.foreach { case (d, c) => assert(c <= d && cl(c) === c) }
   }
 
-  test("CachePool.release drops every pinned corpus relation") {
-    // run queries that pin corpus + shingle + fingerprint caches, then
-    // release: a long-lived session must end the corpus lifecycle
-    // without accreted relations. (Asserted per-relation, not via a
-    // global cacheManager.isEmpty — suites share the session and run
-    // concurrently, so other suites' caches may be live. sf0.01 keeps
-    // this test's canonical plans disjoint from every other suite's, so
-    // no concurrent query re-pins them mid-assertion.)
-    val sf = SfMid
-    requireFixture(sf)
-    DedupQueries.queries("dedup_minhash")(spark, sf).count()
-    val corpus = graft.pipeline.DupCorpus.corpus(spark, sf)
-    assert(corpus.storageLevel.useMemory) // pinned while in use
-    graft.pipeline.CachePool.release()
-    assert(corpus.storageLevel === org.apache.spark.storage.StorageLevel.NONE)
-  }
-
   test("incremental probe: exactly the full-dedup pairs that touch a new doc") {
     // the ingest shape must find every pair a full re-dedup would find
     // involving the new batch — and nothing else (history-history pairs
@@ -167,7 +150,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("the pooled shingle relation holds only (doc_id, h)") {
-    val sh = DedupQueries.shingleRows(DupCorpus.corpus(spark, Sf))
+    val sh = DedupQueries.shingleRows(spark, Sf)
     assert(sh.schema.fieldNames.toSeq == Seq("doc_id", "h"))
     val cached = sh.queryExecution.withCachedData.collectFirst {
       case r: InMemoryRelation => r.output.map(_.name)

@@ -49,7 +49,7 @@ class PlanChecksSpec extends SparkSpec {
     // the real rankCore caches the keyed relation, so the pid-deriving
     // projection sits BELOW an InMemoryTableScan — the classifier must
     // link the scan's output attributes to the cached plan's
-    val keyed = graft.pipeline.CachePool.cached(
+    val keyed = graft.pipeline.CachePool.cached(spark, "", "planChecksKeyed")(
       spark.range(50)
         .withColumn("mid", monotonically_increasing_id())
         .withColumn("pid", shiftrightunsigned(col("mid"), 33)))

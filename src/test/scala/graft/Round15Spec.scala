@@ -22,7 +22,7 @@ class Round15Spec extends SparkSpec {
       Seq("r15a", "r15b", "r15c", "r15d"))
     // any later pool touch reaps the now-redundant scaffold; the
     // derived keyed cache keeps the single-materialization invariant
-    val touch = graft.pipeline.CachePool.cached(
+    val touch = graft.pipeline.CachePool.cached(spark, "", "touch_r15")(
       Seq(150739).toDF("touch_r15"))
     try assert(df.storageLevel == StorageLevel.NONE,
       "scaffold must be unpersisted once the derived cache is loaded")

@@ -205,7 +205,7 @@ class Round18Spec extends SparkSpec {
     // restore a clean slate for other suites sharing the Sf namespace
     Seq(dB, dSk, pT, DedupQueries.pairsBaseTable(Sf))
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
-    graft.pipeline.CachePool.memoDrop(("mhHistory", Sf, ""))
+    graft.pipeline.CachePool.drop(spark, Sf, "mhHistory", "")
     DedupQueries.historyStoresExecute(spark, Sf)
   }
 

@@ -91,7 +91,7 @@ class Round19Spec extends SparkSpec {
   test("mid-stream compaction with NO manual cache invalidation: post-fold batches still yield exactly the incremental relation") {
     // VERDICT r14 #1/#2: compaction must invalidate its own dependents
     // (the sink's cached base-id reads via replace()'s refreshTable,
-    // the Bloom memo via memoDrop). Round18Spec had to memoDrop by
+    // the Bloom model via CachePool.drop). Round18Spec had to drop by
     // hand; here the fold runs between two micro-batches with no
     // manual step and the second batch — including a redelivery of an
     // already-FOLDED doc — still produces exact pairs and no re-lands.
@@ -112,7 +112,7 @@ class Round19Spec extends SparkSpec {
     val b1 = newSlice.filter(col("doc_id") % 10 === 0)
     val b2 = newSlice.filter(col("doc_id") % 10 === 5)
     StreamingEvents.dedupIngestBatch(spark, SfMid, ns)(b1, 0L)
-    // the mid-stream fold — NO manual memoDrop, NO cache clearing
+    // the mid-stream fold — NO manual CachePool.drop, NO cache clearing
     DedupQueries.compactIngestHistory(spark, SfMid, ns)
     assert(!spark.catalog.tableExists(dSk), "fold must truncate the delta")
     // batch 2 redelivers an already-folded doc alongside the new half
@@ -186,7 +186,7 @@ class Round19Spec extends SparkSpec {
     val (dB, dSk, pT) = DedupQueries.ingestTables(SfMid)
     Seq(dB, dSk, pT, DedupQueries.pairsBaseTable(SfMid))
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
-    graft.pipeline.CachePool.memoDrop(("mhBaseBloom", SfMid, ""))
+    graft.pipeline.CachePool.drop(spark, SfMid, "mhBaseBloom", "")
     def row(r: org.apache.spark.sql.Row) =
       (r.getLong(0), r.getLong(1), r.getDouble(2))
     val want = SparkEntry.queries("dedup_minhash_incremental")(spark, SfMid)
@@ -227,7 +227,7 @@ class Round19Spec extends SparkSpec {
     // restore the boot layout for suites sharing the default namespace
     Seq(dB, dSk, pT, DedupQueries.pairsBaseTable(SfMid))
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
-    graft.pipeline.CachePool.memoDrop(("mhHistory", SfMid, ""))
+    graft.pipeline.CachePool.drop(spark, SfMid, "mhHistory", "")
     DedupQueries.historyStoresExecute(spark, SfMid)
   }
 

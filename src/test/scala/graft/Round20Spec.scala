@@ -89,7 +89,7 @@ class Round20Spec extends SparkSpec {
     val skBefore = spark.table(skT).count()
     parkMidSwap(bandsT)
     parkMidSwap(skT)
-    graft.pipeline.CachePool.memoDrop(("mhBaseBloom", SfMid, ns))
+    graft.pipeline.CachePool.drop(spark, SfMid, "mhBaseBloom", ns)
     val newSlice = DupCorpus.corpus(spark, SfMid)
       .filter(col("doc_id") % 5 === 0).select("doc_id", "text")
     StreamingEvents.dedupIngestBatch(spark, SfMid, ns)(newSlice, 0L)
