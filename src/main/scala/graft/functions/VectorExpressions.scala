@@ -394,6 +394,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => new graft.plans.SummaryRewriteRule)
     ext.injectPlannerStrategy(_ => new graft.plans.AsofJoinStrategy)
     ext.injectQueryStagePrepRule(_ => graft.plans.PruneScanGuard)
+    ext.injectQueryStagePrepRule(_ => graft.plans.ProbeBucketPruning)
     ext.injectFunction((FunctionIdentifier("graft_dot"),
       new ExpressionInfo(classOf[DotProduct].getCanonicalName, "graft_dot"),
       (children: Seq[Expression]) => DotProduct(children(0), children(1))))

@@ -636,13 +636,15 @@ ORDER BY query_id, rank"""
   /** The SERVING shape of the IVF index: cell assignments persisted
     * through [[graft.sources.BucketedStore]], bucketed + sorted by cid.
     * At 100 TB the index is exactly this table — built once (one
-    * write-time shuffle), probed forever: a query's nprobe cells become
-    * a literal IN filter on the bucket column, so the scan opens only
-    * the matching buckets (`SelectedBucketsCount` pinned in AnnSpec)
-    * and never re-shuffles the corpus. Same math as
-    * [[topkKmeans]] — the oracle SQL is shared verbatim — but the
-    * candidate fetch rides the storage layout instead of a runtime
-    * join. The probe-cid collect is ≤ k×queries ints of model state. */
+    * write-time shuffle), probed forever: a probe is a broadcast-hash
+    * join of the table on cid against the query fan-out, and
+    * [[graft.plans.ProbeBucketPruning]] turns the materialized
+    * broadcast's cids into the scan's bucket set at run time, so the
+    * scan opens only the probed cells' bucket files, in cores-sized
+    * splits, and never re-shuffles the corpus (AnnSpec pins the set and
+    * the files read). No build-layer job collects the probed cids.
+    * Same math as [[topkKmeans]] — the oracle SQL is shared verbatim —
+    * but the candidate fetch rides the storage layout. */
   def buildIvfIndex(s: SparkSession, d: String): Seq[(Int, Seq[Double])] = {
     val e = embDouble(s, d).select(col("vec_id"), col("v"))
     val cents = corpusCentroids(s, d)
@@ -805,11 +807,11 @@ ORDER BY query_id"""
     * `vec_id < 10` evaluation set: nprobe coarse cells per query
     * (broadcast k-row centroid table, never a corpus shuffle),
     * bucket-pruned candidate fetch from the persisted cell table, and
-    * exact cosine rerank to per-query rank ≤ k. The probe-cid collect
-    * is ≤ |cells| ints of model state; per-query marginal cost is the
-    * probed buckets only — the shape a 100 TB serving tier runs per
-    * request batch. Self-matches (doc_id = query_id) are excluded,
-    * matching every ANN face's convention. */
+    * exact cosine rerank to per-query rank ≤ k. Building the plan runs
+    * no job; per-query marginal cost is the probed buckets only — the
+    * shape a 100 TB serving tier runs per request batch. Self-matches
+    * (doc_id = query_id) are excluded, matching every ANN face's
+    * convention. */
   private[graft] def ivfProbeRanks(s: SparkSession, d: String,
       queries: DataFrame, k: Int): DataFrame = {
     val (cents, table) = ivfIndex(s, d)
@@ -853,34 +855,34 @@ ORDER BY query_id"""
   /** The probe BODY every request-batch serving face shares
     * (ivf-memo, pointer-resolved, upserted base∪delta): explode each
     * query's nprobe nearest cells (broadcast-centroid argmin — O(1)
-    * plan size in nlist), prune the cell relation to the probed cids
-    * (bucket pruning at rest), broadcast the query fan-out into one
-    * equi-join, exact-cosine per candidate. Callers differ only in
-    * the cell relation and the top-k readout shape. */
+    * plan size in nlist), broadcast the query fan-out into one
+    * equi-join on cid, exact-cosine per candidate. The join prunes the
+    * cell relation's buckets to the probed cids at run time
+    * ([[graft.plans.ProbeBucketPruning]]), so no build-layer job
+    * collects them. Callers differ only in the cell relation and the
+    * top-k readout shape. */
   private def probeCandSims(s: SparkSession,
       cents: Seq[(Int, Seq[Double])], cells: DataFrame,
       queries: DataFrame): DataFrame = {
     val probes = queries.select(col("query_id"), col("qv"),
       explode(graft.functions.CentroidModels.probes(
         s, cents, col("qv"), KmProbe)).as("probe_cid"))
-    val probeCids = probes.select("probe_cid").distinct()
-      .collect().map(_.getInt(0)).sorted
     cells
-      .filter(col("cid").isin(probeCids.map(Integer.valueOf): _*))
       .join(broadcast(probes),
         col("cid") === col("probe_cid") && col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("doc_id"),
         cosine(col("qv"), col("v")).as("sim"))
   }
 
+  /** [[topkKmeans]] served from the persisted index ([[ivfIndex]]):
+    * the broadcast probe list joins the bucketed cell table on cid, and
+    * the scan reads only the probed cells' buckets, pruned at run time
+    * from that broadcast ([[graft.plans.ProbeBucketPruning]]). */
   private val topkKmeansBucketed: Q = (s, d) => {
     val (cents, table) = ivfIndex(s, d)
     val e = embDouble(s, d).select(col("vec_id"), col("v"))
     val probes = probeList(s, e, cents)
-    val probeCids = probes.select("probe_cid").distinct()
-      .collect().map(_.getInt(0)).sorted
     val cand = graft.sources.BucketedStore.read(s, table)
-      .filter(col("cid").isin(probeCids.map(Integer.valueOf): _*))
       .join(broadcast(probes),
         col("cid") === col("probe_cid") && col("vec_id") =!= col("query_id"))
     rerankTop5(cand)
@@ -1058,12 +1060,9 @@ GROUP BY query_id ORDER BY query_id"""
           s, cents, col("qv"), maxNp)).as(Seq("crank0", "probe_cid")))
       .select(col("query_id"), col("qv"), col("probe_cid"),
         (col("crank0") + 1).as("crank"))
-    val probeCids = probes.select("probe_cid").distinct()
-      .collect().map(_.getInt(0)).sorted
     val wServe = Window.partitionBy("nprobe", "query_id")
       .orderBy(col("sim").desc, col("neighbor_id"))
     val served = store
-      .filter(col("cid").isin(probeCids.map(Integer.valueOf): _*))
       .join(broadcast(probes),
         col("cid") === col("probe_cid") && col("vec_id") =!= col("query_id"))
       .withColumn("nprobe", armsOf)
@@ -1369,18 +1368,16 @@ FROM (
 
   /** Pointer-resolved serving for any generation namespace: resolve
     * the pointer, load the named quantizer, probe the named
-    * base ∪ delta bucketed tables, exact-cosine top-5. */
+    * base ∪ delta bucketed tables, exact-cosine top-5. The probe
+    * broadcast prunes both tables' buckets at run time through the
+    * union ([[graft.plans.ProbeBucketPruning]]). */
   private[graft] def serveVia(s: SparkSession, d: String,
       ptrTable: String): DataFrame = {
     val (cents, tb, td) = ptrModelAt(s, ptrTable)
     val e = embDouble(s, d).select(col("vec_id"), col("v"))
     val probes = probeList(s, e, cents)
-    val probeCids = probes.select("probe_cid").distinct()
-      .collect().map(_.getInt(0)).sorted
-    val cand = Seq(tb, td)
-      .map(t => graft.sources.BucketedStore.read(s, t)
-        .filter(col("cid").isin(probeCids.map(Integer.valueOf): _*)))
-      .reduce(_.unionByName(_))
+    val cand = graft.sources.BucketedStore.read(s, tb)
+      .unionByName(graft.sources.BucketedStore.read(s, td))
       .join(broadcast(probes),
         col("cid") === col("probe_cid") && col("vec_id") =!= col("query_id"))
     rerankTop5(cand)
@@ -1990,19 +1987,15 @@ ORDER BY query_id, rank"""
       .orderBy("query_id", "rank")
   }
 
-  /** The rows of the stored code tables in the probed cells only. The
-    * distinct probed cids are bounded by nlist = O(√N) whatever |Q| is
-    * (a model-sized collect), and the `isin` reaches the bucketed scan;
-    * at large |Q| the set approaches all cells and the filter degrades
-    * to the full scan every bucket then needs. */
-  private def probedCodes(s: SparkSession, probes: DataFrame,
-      tables: String*): DataFrame = {
-    val probeCids = probes.select("probe_cid").distinct()
-      .collect().map(_.getInt(0)).sorted
-    tables.map(t => graft.sources.BucketedStore.read(s, t)
-        .filter(col("cid").isin(probeCids.map(Integer.valueOf): _*)))
-      .reduce(_.unionByName(_))
-  }
+  /** The stored code tables, bucketed by cid, as one relation. Read
+    * under [[pqServe]]'s broadcast probe join, each scan opens only the
+    * probed cells' buckets: [[graft.plans.ProbeBucketPruning]] takes the
+    * bucket set from the materialized probe broadcast at run time, so
+    * no build-layer job collects the probed cids. At large |Q| the set
+    * approaches all cells and the read becomes the full scan every
+    * bucket then needs. */
+  private def storedCodes(s: SparkSession, tables: String*): DataFrame =
+    tables.map(t => graft.sources.BucketedStore.read(s, t)).reduce(_.unionByName(_))
 
   /** The composed billion-scale index: IVF coarse cells bound WHICH
     * rows are scanned (nprobe/nlist of the corpus, the same derived
@@ -2164,7 +2157,7 @@ ORDER BY which, cid, dim"""
     val (cents, books) = storedPqModels(s, d)
     val probes = probeList(s, e, cents)
     pqServe(s, probes, AdcTier.shared(books),
-      probedCodes(s, probes, ivfPqTable(s, d)))
+      storedCodes(s, ivfPqTable(s, d)))
   }
 
   /** IVF-PQ serving composed with the MAINTENANCE POINTER — the PQ
@@ -2189,7 +2182,7 @@ ORDER BY which, cid, dim"""
     val (_, books) = storedPqModels(s, d)
     val probes = probeList(s, e, cents)
     pqServe(s, probes, AdcTier.shared(books),
-      probedCodes(s, probes, ivfPqTable(s, d)))
+      storedCodes(s, ivfPqTable(s, d)))
   }
 
   /** The full IVF-PQ serving oracle over an arbitrary corpus relation
@@ -2293,7 +2286,7 @@ ORDER BY query_id, rank"""
     val (cents, books, pqbT, pqdT) = ptrPqModelAt(s, cyclePtr(d))
     val probes = probeList(s, e, cents)
     pqServe(s, probes, AdcTier.shared(books),
-      probedCodes(s, probes, pqbT, pqdT))
+      storedCodes(s, pqbT, pqdT))
   }
 
   /** Resolve the RESIDUAL tier of the generation pointer: the
@@ -2340,7 +2333,7 @@ ORDER BY query_id, rank"""
     val (cents, books, pqrbT, pqrdT) = ptrPqrModelAt(s, cyclePtr(d))
     val probes = probeList(s, e, cents)
     pqServe(s, probes, AdcTier.residual(s, cents, books),
-      probedCodes(s, probes, pqrbT, pqrdT))
+      storedCodes(s, pqrbT, pqrdT))
   }
 
   /** PER-CELL residual serving AFTER TWO MAINTENANCE CYCLES (VERDICT
@@ -2359,7 +2352,7 @@ ORDER BY query_id, rank"""
     val (cents, groups, pqrcbT, pqrcdT) = ptrPqrcModelAt(s, cyclePtr(d))
     val probes = probeList(s, e, cents)
     pqServe(s, probes, AdcTier.perCell(s, cents, groups),
-      probedCodes(s, probes, pqrcbT, pqrcdT))
+      storedCodes(s, pqrcbT, pqrcdT))
   }
   /** RESIDUAL product quantization — closing [[topkIvfPq]]'s declared
     * simplification ("codes quantize the raw vectors with one shared
@@ -2467,7 +2460,7 @@ ORDER BY query_id, rank"""
     val (booksT, codesT) = pqrTables(s, d)
     val probes = probeList(s, e, cents)
     pqServe(s, probes, AdcTier.residual(s, cents, booksFrom(s, booksT)),
-      probedCodes(s, probes, codesT))
+      storedCodes(s, codesT))
   }
 
   // ------------------------------------------- per-cell residual PQ
@@ -2614,7 +2607,7 @@ ORDER BY query_id, rank"""
     val (booksT, codesT) = pqrcTables(s, d)
     val probes = probeList(s, e, cents)
     pqServe(s, probes, AdcTier.perCell(s, cents, cellBooksFrom(s, booksT)),
-      probedCodes(s, probes, codesT))
+      storedCodes(s, codesT))
   }
 
   /** Round-trip readout of the persisted residual codebooks
@@ -3217,10 +3210,7 @@ FROM ne, nh"""
     val probes = queries.select(col("query_id"), col("qv"),
       explode(graft.functions.CentroidModels.probes(
         s, cents, col("qv"), KmProbe)).as("probe_cid"))
-    val probeCids = probes.select("probe_cid").distinct()
-      .collect().map(_.getInt(0)).sorted
     val sims = cells
-      .filter(col("cid").isin(probeCids.map(Integer.valueOf): _*))
       .join(broadcast(probes),
         col("cid") === col("probe_cid") && col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),

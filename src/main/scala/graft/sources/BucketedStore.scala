@@ -11,8 +11,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * every downstream consumer — the right trade for relations joined
   * repeatedly (the embeddings↔IVF-cell assignment, the metadata store,
   * a dedup sketch table), vs `repartition` which must re-shuffle per
-  * query. Uses native (non-Hive) data-source tables, which support
-  * bucketing in the in-memory catalog.
+  * query. A store bucketed by a probe key (the IVF cell and code tables,
+  * by cid) is also pruned at read time: a broadcast probe join on that
+  * key opens only the probed keys' bucket files, chosen at run time
+  * from the broadcast ([[graft.plans.ProbeBucketPruning]]), with no
+  * driver-side collect of the keys. Uses native (non-Hive) data-source
+  * tables, which support bucketing in the in-memory catalog.
   */
 object BucketedStore {
 

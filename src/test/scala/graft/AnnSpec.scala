@@ -2,7 +2,11 @@ package graft
 
 import graft.pipeline.SimilarityQueries
 import graft.queries.AnalyticsQueries
+import org.apache.spark.sql.GraftDatasetBridge
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.datasources.{BucketingUtils, FilePartition}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.hash.Murmur3_x86_32
 
 /** Properties of the round-4 additions that the oracle compare can't
   * see: ANN recall against the exact brute-force answer (both engines
@@ -75,10 +79,10 @@ class AnnSpec extends SparkSpec {
     // matching bucket files — probing cost scales with nprobe/nlist of
     // the index, not its total size
     val nBuckets = SimilarityQueries.buildIvfIndex(spark, Sf).length
-    // DisableUnnecessaryBucketedScan turns bucketed reading off for a
-    // filter-only scan (no downstream distribution requirement) and
-    // loses the pruning with it — pin the bucketed path to assert the
-    // property the layout exists for
+    // DisableUnnecessaryBucketedScan reads a filter-only scan (no
+    // downstream distribution requirement) unbucketed. That read still
+    // drops the files outside the bucket set, but only a bucketed scan
+    // prints SelectedBucketsCount — pin the bucketed path to read it
     val auto = spark.conf.get("spark.sql.sources.bucketing.autoBucketedScan.enabled")
     try {
       spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
@@ -104,6 +108,65 @@ class AnnSpec extends SparkSpec {
     val a = SimilarityQueries.queries("ann_topk_ivf_kmeans")(spark, Sf).collect().toSeq
     val b = SimilarityQueries.queries("ann_topk_ivf_bucketed")(spark, Sf).collect().toSeq
     assert(a === b)
+  }
+
+  test("ann_topk_ivf_bucketed: the probe broadcast prunes the cell scan at run time, read in cores-sized splits") {
+    val face = SimilarityQueries.queries("ann_topk_ivf_bucketed")
+    face(spark, Sf).collect() // first touch: the index and its centroids
+    val sc = spark.sparkContext
+    val c = new QueryCounters
+    val stageTasks = scala.collection.mutable.Map.empty[Seq[Int], Int]
+    val stages = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(
+          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        stageTasks.synchronized {
+          stageTasks(e.stageInfo.rddInfos.map(_.id)) = e.stageInfo.numTasks
+        }
+    }
+    sc.addSparkListener(c)
+    val df = try {
+      sc.setJobGroup("ivf|build", "ivf|build")
+      try face(spark, Sf) finally sc.clearJobGroup()
+    } finally {
+      GraftDatasetBridge.drain(sc)
+      sc.removeSparkListener(c)
+    }
+    assert(c("ivf|build")(0) == 0L, s"construction ran jobs: ${c("ivf|build")}")
+    sc.addSparkListener(stages)
+    try df.collect() finally {
+      GraftDatasetBridge.drain(sc)
+      sc.removeSparkListener(stages)
+    }
+    val (cents, table) = SimilarityQueries.ivfIndex(spark, Sf)
+    val scans = PlanChecks.finalNodes(df.queryExecution.executedPlan).collect {
+      case f: FileSourceScanExec if f.tableIdentifier.exists(_.table == table) => f
+    }
+    assert(scans.size == 1, scans)
+    val scan = scans.head
+    assert(!scan.bucketedScan, "the pruned cell scan is read unbucketed")
+    // the probed cids' buckets, hashed here the way the bucketed write
+    // does (Murmur3 of the int key, seed 42, pmod the bucket count)
+    val cids = SimilarityQueries.embDouble(spark, Sf).filter(col("vec_id") < 10)
+      .select(explode(graft.functions.CentroidModels.probes(
+        spark, cents, col("v"), SimilarityQueries.KmProbe)))
+      .distinct().collect().map(_.getInt(0))
+    val n = cents.length
+    val want = cids.map(cid =>
+      Math.floorMod(Murmur3_x86_32.hashInt(cid, 42), n)).toSet
+    val got = scan.optionalBucketSet.map(_.iterator.toSet)
+    assert(got.contains(want), s"bucket set $got, probed buckets $want")
+    val files = scan.inputRDD.partitions.toSeq.flatMap {
+      case fp: FilePartition => fp.files.toSeq
+      case _ => Nil
+    }
+    assert(files.nonEmpty && files.forall(f =>
+      BucketingUtils.getBucketId(f.toPath.getName).exists(want.contains)),
+      s"read files outside buckets $want: ${files.map(_.toPath.getName)}")
+    val scanStage = stageTasks.collect {
+      case (rdds, tasks) if rdds.contains(scan.inputRDD.id) => tasks
+    }
+    assert(scanStage.size == 1 && scanStage.head <= 4,
+      s"cell-scan stage tasks $scanStage")
   }
 
   test("analytics plans: pushdown + broadcast dims + partial aggregates") {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference,
   ExprId, Expression, MonotonicallyIncreasingID, SparkPartitionID}
 import org.apache.spark.sql.execution.{CoalesceExec, FilterExec, ProjectExec,
   SortExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.Exchange
@@ -156,4 +156,12 @@ object PlanChecks {
         a.groupingExpressions.exists(derived(_, Set.empty))
       case _ => false
     }
+
+  /** Every node of an executed plan's final adaptive form, query
+    * stages and subqueries opened (not cached relations). */
+  def finalNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => finalNodes(a.executedPlan)
+    case q: QueryStageExec => finalNodes(q.plan)
+    case _ => p +: (p.children ++ p.subqueries).flatMap(finalNodes)
+  }
 }

@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 
@@ -16,19 +14,11 @@ import org.apache.spark.sql.functions._
 class ScanGuardSpec extends SparkSpec {
 
   /** Round-robin guards in the final adaptive plan of `df`, after it ran. */
-  private def guards(df: DataFrame): Int = {
-    def walk(p: SparkPlan): Int = p match {
-      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-      case q: QueryStageExec => walk(q.plan)
-      case _ =>
-        val self = p match {
-          case ShuffleExchangeExec(_: RoundRobinPartitioning, _, REPARTITION_BY_NUM, _) => 1
-          case _ => 0
-        }
-        self + p.children.map(walk).sum + p.subqueries.map(walk).sum
+  private def guards(df: DataFrame): Int =
+    PlanChecks.finalNodes(df.queryExecution.executedPlan).count {
+      case ShuffleExchangeExec(_: RoundRobinPartitioning, _, REPARTITION_BY_NUM, _) => true
+      case _ => false
     }
-    walk(df.queryExecution.executedPlan)
-  }
 
   private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
 
